@@ -544,11 +544,13 @@ object Pipeline4 {
 
     // ------------------------------------------------------------------
     // Storage-partitioned join: two graft tables co-partitioned on
-    // `date` join under the v2-bucketing conf with a forced SMJ — the
-    // scans report KeyGroupedPartitioning and plan one split per
-    // partition value, so EnsureRequirements elides BOTH join shuffles
-    // (plan shape pinned in CatalogV2Spec; here the executed SPJ path
-    // is value-checked against DuckDB's replay of the same join). The
+    // `date` join with a forced SMJ. The session opts in by setting
+    // `spark.sql.sources.v2.bucketing.enabled` explicitly (Spark's
+    // default alone does not), so the scans report
+    // KeyGroupedPartitioning and plan one split per partition value,
+    // and EnsureRequirements elides BOTH join shuffles (plan shape
+    // pinned in CatalogV2Spec; here the executed SPJ path is
+    // value-checked against DuckDB's replay of the same join). The
     // result is materialized inside the conf scope so the key-grouped
     // plan is what actually runs, then confs are restored.
     Q("catalog_v2_spj_join", fn = (s, dir) => {

@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
 import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.execution.datasources.{NoopCache, PartitioningAwareFileIndex, PartitionPath, PartitionSpec}
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScanBuilder
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{DataType, StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -774,9 +775,10 @@ class SnapshotFileIndex(
     * Spark's V2ScanPartitioningAndOrdering reads only `keys()` from it
     * (verified against the 4.1 bytecode — `numPartitions()` is never
     * invoked; the exec-side partitioning is rebuilt from the planned
-    * partitions). Without this guard, v2 bucketing being ON by default
-    * meant ANY pruned query whose output includes the partition
-    * columns resolved the million-entry snapshot at plan time just to
+    * partitions). Without this guard, a session that opts in to v2
+    * bucketing (sets `spark.sql.sources.v2.bucketing.enabled` itself)
+    * would resolve the million-entry snapshot at plan time for ANY
+    * pruned query whose output includes the partition columns, just to
     * report a number nobody reads (found pinning `data_cold_pruned`). */
   def distinctPartitionKeys: Int =
     if (deferred.isDefined && activeLayout == null)
@@ -1334,12 +1336,21 @@ object ScanBridge {
           .filter(names => builtSchema.fieldNames.toSeq != names &&
             builtSchema.fieldNames.sorted.toSeq == names.sorted)
           .map(names => names.map(builtSchema.fieldIndex).toArray)
-        // Storage-partitioned join eligibility (opt-in via Spark's own
-        // v2-bucketing conf): the scan reports KeyGroupedPartitioning
-        // over the partition transforms and plans ONE input split per
-        // partition value, so a join of two graft tables co-partitioned
-        // on the join keys needs NO shuffle on either side — at 100 TB
-        // the single largest cost a co-located layout can delete.
+        // Storage-partitioned join eligibility: the scan reports
+        // KeyGroupedPartitioning over the partition transforms and plans
+        // ONE input split per partition value, so a join of two graft
+        // tables co-partitioned on the join keys needs NO shuffle on
+        // either side — at 100 TB the single largest cost a co-located
+        // layout can delete. Opt-in means the SESSION sets
+        // `spark.sql.sources.v2.bucketing.enabled` to true: Spark's
+        // default for that conf is true, and an unasked key-grouped
+        // layout costs plain reads — one task per partition value (no
+        // parallelism inside a large partition), and aggregates keyed on
+        // the partition column skip their shuffle, so a global ORDER BY
+        // re-runs the scan for range sampling. Without the explicit
+        // setting the scan reports UnknownPartitioning and splits are
+        // packed by size. The conf is read per scan build, so setting or
+        // unsetting it takes effect on the next query.
         // Identity fields need the column itself in the scan output;
         // a derived (hidden) field needs its SOURCE column — the
         // transform resolves as a catalog FUNCTION over it
@@ -1351,8 +1362,10 @@ object ScanBridge {
             case Some(p) => p.map(builtSchema(_).name).toSet
             case None    => builtSchema.fieldNames.toSet
           }
+          val conf = index.session.sessionState.conf
           if (spec.nonEmpty &&
-              index.session.sessionState.conf.v2BucketingEnabled &&
+              conf.contains(SQLConf.V2_BUCKETING_ENABLED.key) &&
+              conf.v2BucketingEnabled &&
               spec.forall(f =>
                 out.contains(if (f.isIdentity) f.name else f.source)))
             Some(spec)

@@ -465,6 +465,103 @@ class CatalogV2Spec extends SparkSpec {
     }
   }
 
+  /** Stages run by `body` that read input records (scan stages),
+    * counted by a SparkListener. A marker job after `body` drains the
+    * listener bus: a listener gets events in order, so once the
+    * marker's JobStart arrives every stage of `body` has arrived too. */
+  private def scanStages(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+    val marker = "graft.test.drainListener"
+    val scans = new java.util.concurrent.atomic.AtomicInteger(0)
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        val m = e.stageInfo.taskMetrics
+        if (m != null && m.inputMetrics.recordsRead > 0) scans.incrementAndGet()
+      }
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty(marker) != null)
+          drained.countDown()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setLocalProperty(marker, "1")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty(marker, null)
+      assert(drained.await(30, java.util.concurrent.TimeUnit.SECONDS),
+        "listener bus did not drain")
+    } finally sc.removeSparkListener(listener)
+    scans.get()
+  }
+
+  test("V2 scan packs splits by size unless the session opts in to storage-partitioned join") {
+    import org.apache.spark.sql.catalyst.plans.physical.KeyGroupedPartitioning
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.functions.{count, lit, sum}
+    object Plans extends AdaptiveSparkPlanHelper
+    val bucketing = "spark.sql.sources.v2.bucketing.enabled"
+    val prev = spark.conf.getOption(bucketing)
+    spark.conf.unset(bucketing)
+    withCatalog("sizesplits") { wh =>
+      try {
+        // more dates than cores, in two commits: one split per date
+        // would plan more tasks than the machine runs at once
+        val dates = spark.sparkContext.defaultParallelism * 3
+        spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.pk")
+        spark.sql("""CREATE TABLE graft.pk.t (
+            id STRING, date DATE, region STRING, amount BIGINT)
+            PARTITIONED BY (date)""")
+        Seq(0 -> 600, 600 -> 1200).foreach { case (lo, hi) =>
+          spark.sql(s"""INSERT INTO graft.pk.t
+              SELECT CAST(id AS STRING),
+                     date_add(DATE'2026-01-01', CAST(id % $dates AS INT)),
+                     element_at(array('EU', 'US', 'AP'), CAST(id % 7 % 3 AS INT) + 1),
+                     id
+              FROM range($lo, $hi)""")
+        }
+        def scans(df: org.apache.spark.sql.DataFrame): Seq[BatchScanExec] =
+          Plans.collect(df.queryExecution.executedPlan) { case b: BatchScanExec => b }
+        def keyGrouped(df: org.apache.spark.sql.DataFrame): Boolean =
+          scans(df).exists(_.outputPartitioning.isInstanceOf[KeyGroupedPartitioning])
+        def all = spark.sql("SELECT * FROM graft.pk.t")
+
+        // Spark's default (`true`) alone does not opt in: size-packed
+        // splits, fewer tasks than dates
+        assert(!keyGrouped(all), s"unasked key-grouped scan:\n${all.queryExecution.executedPlan}")
+        val splits = scans(all).map(_.inputRDD.getNumPartitions).sum
+        assert(splits < dates, s"$splits splits for $dates dates")
+
+        // the aggregate keeps its shuffle, so the range sort behind
+        // ORDER BY samples shuffle output instead of re-running the scan
+        val q = spark.sql("""SELECT region, date, count(*) AS n, sum(amount) AS total
+            FROM graft.pk.t GROUP BY region, date ORDER BY total DESC, region, date""")
+        var got: Seq[org.apache.spark.sql.Row] = Nil
+        assert(scanStages { got = q.collect().toSeq } === 1)
+        assert(!keyGrouped(q))
+        val cat = new TableCatalog(spark, new Path(wh))
+        val want = cat.getTable("pk", "t").read()
+          .groupBy("region", "date")
+          .agg(count(lit(1)).as("n"), sum("amount").as("total"))
+          .orderBy(col("total").desc, col("region"), col("date"))
+          .collect().toSeq
+        assert(got.nonEmpty && got === want)
+
+        // an explicit session setting opts in: one split per date ...
+        spark.conf.set(bucketing, "true")
+        assert(keyGrouped(all), "explicit opt-in must report key-grouped partitioning")
+        assert(scans(all).map(_.inputRDD.getNumPartitions).sum === dates)
+        // ... and unsetting it opts out again on the same table version
+        spark.conf.unset(bucketing)
+        assert(!keyGrouped(all), "no layout cache may keep the opt-in")
+      } finally prev match {
+        case Some(v) => spark.conf.set(bucketing, v)
+        case None    => spark.conf.unset(bucketing)
+      }
+    }
+  }
+
   test("V2 reads apply merge-on-read equality deletes (and DML doesn't resurrect)") {
     withCatalog("mor") { wh =>
       spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.mr")
