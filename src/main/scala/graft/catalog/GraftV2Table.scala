@@ -222,12 +222,9 @@ class GraftV2Table(val tx: TxTable, val asOfVersion: Option[Long] = None)
             // match — a file in a skipped manifest provably matches no
             // statement row, is never listed, and therefore is KEPT,
             // the same contract file-level pruning already provides.
-            val canDefer = hdr.manifests.nonEmpty &&
-              hdr.manifests.forall(_.sizeBytes >= 0L) &&
-              hdr.manifests.exists(_.summaries.isDefined)
             val groupsOf: Seq[org.apache.spark.sql.catalyst.expressions.Expression]
                 => Seq[org.apache.spark.sql.graft.MorGroup] =
-              if (canDefer) { partFilters =>
+              if (canDefer(options)) { partFilters =>
                 val wanted = org.apache.spark.sql.graft.SnapshotFileIndex
                   .selectRefs(hdr.manifests, partFilters)
                 morGroups(graft.table.TxLog.resolveRefs(
@@ -299,13 +296,9 @@ class GraftV2Table(val tx: TxTable, val asOfVersion: Option[Long] = None)
       // (kfs/stack/firehose.py:95-101): between compactions one
       // outstanding DV used to force the FULL resolved snapshot at
       // scan-builder construction, losing the whole cold-planning win.
-      val canDefer = options.get("startingVersion") == null &&
-        hdr.manifests.nonEmpty &&
-        hdr.manifests.forall(_.sizeBytes >= 0L) &&
-        hdr.manifests.exists(_.summaries.isDefined)
       val groupsOf: Seq[org.apache.spark.sql.catalyst.expressions.Expression]
           => Seq[org.apache.spark.sql.graft.MorGroup] =
-        if (canDefer) { partFilters =>
+        if (canDefer(options)) { partFilters =>
           val logDir = new Path(tx.root, "_log")
           val conf = tx.spark.sessionState.newHadoopConf()
           val wanted = org.apache.spark.sql.graft.SnapshotFileIndex
@@ -346,6 +339,17 @@ class GraftV2Table(val tx: TxTable, val asOfVersion: Option[Long] = None)
           options, partSpec),
         exactRowCount = exactRows, tableStats = tx.tableStats)
     }
+
+  /** Whether a scan may defer file materialization to the manifests
+    * its partition filters admit: a full-snapshot read (incremental
+    * `startingVersion` reads list changed files instead) of a
+    * post-upgrade log — every manifest ref sized, at least one
+    * summarized. */
+  private def canDefer(options: CaseInsensitiveStringMap): Boolean =
+    options.get("startingVersion") == null &&
+      hdr.manifests.nonEmpty &&
+      hdr.manifests.forall(_.sizeBytes >= 0L) &&
+      hdr.manifests.exists(_.summaries.isDefined)
 
   /** Incremental batch read (`spark.read.option("startingVersion", N)
     * [.option("endingVersion", M)].table(...)`): scan only the files
@@ -470,10 +474,7 @@ class GraftV2Table(val tx: TxTable, val asOfVersion: Option[Long] = None)
       s"|${tx.spark.sessionState.conf.sessionLocalTimeZone}"
     val fullKey = Some((tableKey,
       s"$tableKey|v${hdr.version}|t${hdr.timestampMs}"))
-    if (options.get("startingVersion") == null &&
-        hdr.manifests.nonEmpty &&
-        hdr.manifests.forall(r => r.sizeBytes >= 0L) &&
-        hdr.manifests.exists(_.summaries.isDefined)) {
+    if (canDefer(options)) {
       val logDir = new Path(tx.root, "_log")
       val conf = tx.spark.sessionState.newHadoopConf()
       val deferred = ScanBridge.DeferredFiles(

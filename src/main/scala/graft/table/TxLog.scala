@@ -55,9 +55,10 @@ final case class EqualityDeleteFile(
 
 /** A deletion vector (the Delta DV / Iceberg positional-delete shape):
   * ONE sidecar per data file holding the sorted ROW POSITIONS deleted
-  * from exactly that file — `dataFile` is the snapshot-relative data
+  * from exactly that file — `dataFile` is the data file's snapshot
   * path, `path` the vector file under `deletes/` (sorted little-endian
-  * longs), `count` its cardinality. Because a position references an
+  * longs; both absolute into the source in a shallow clone), `count`
+  * its cardinality. Because a position references an
   * immutable file, no sequence-number rule is needed: a copy-on-write
   * rewrite replaces the file and the vector drops out of the snapshot
   * with it (commit filters vectors to surviving files). Point/small

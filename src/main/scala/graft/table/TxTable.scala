@@ -166,15 +166,8 @@ class TxTable private (
    * timestamp-ordered ingest workload it reduces a range query to the
    * few files whose ranges overlap.
    */
-  def readWhere(column: String, lo: Option[Any], hi: Option[Any]): DataFrame = {
-    val s = snapshot
-    val files = s.files.filter(f =>
-      f.stats.forall(st => FileStats.mayContainRange(st, column, lo, hi)))
-    var df = dfFor(s.copy(files = files))
-    lo.foreach(l => df = df.filter(col(column) >= lit(l)))
-    hi.foreach(h => df = df.filter(col(column) <= lit(h)))
-    df
-  }
+  def readWhere(column: String, lo: Option[Any], hi: Option[Any]): DataFrame =
+    readWhereAll(Seq((column, lo, hi)))
 
   /** Multi-column data-skipping read: a file survives only if EVERY
     * range can intersect its stats — the natural companion of Z-order
@@ -1912,28 +1905,30 @@ class TxTable private (
    * copied, O(file-metadata) regardless of table size. The clone's
    * history starts at the source's version number (not 0), keeping
    * commit seqs in one ordered space so carried merge-on-read deletes
-   * keep applying correctly. New writes land under the clone's own
-   * `data/`; `compact()` migrates everything local. Caveat shared with
-   * Delta: `vacuum` on the SOURCE does not know about clones — a
-   * cloned file vacuumed at the source breaks the clone's reads (pin
-   * the source version with a tag, or compact the clone first).
+   * keep applying correctly. Merge-on-read deletes come along the same
+   * way: equality-delete files, and each deletion vector's data file
+   * and sidecar, are referenced by absolute path into the source. New
+   * writes land under the clone's own `data/`; `compact()` migrates
+   * everything local. Caveat shared with Delta: `vacuum` on the SOURCE
+   * does not know about clones — a cloned file vacuumed at the source
+   * breaks the clone's reads (pin the source version with a tag, or
+   * compact the clone first).
    */
   def cloneTo(destRoot: Path, destName: String, version: Long = -1L): TxTable = {
     require(!TxTable.exists(spark, destRoot),
       s"table at $destRoot already exists")
     val v = if (version < 0) currentVersion else version
     val s = snapshotAt(v)
-    val abs = s.files.map { f =>
-      if (new Path(f.path).isAbsolute) f
-      else f.copy(path = new Path(dataDir, f.path).toString)
-    }
-    val absDel = s.equalityDeletes.map { d =>
-      if (new Path(d.path).isAbsolute) d
-      else d.copy(path = new Path(deletesDir, d.path).toString)
-    }
+    def under(dir: Path, p: String): String =
+      if (new Path(p).isAbsolute) p else new Path(dir, p).toString
     TxLog.bootstrap(new Path(destRoot, "_log"), s.copy(
       operation = "CLONE", timestampMs = System.currentTimeMillis(),
-      files = abs, equalityDeletes = absDel), conf)
+      files = s.files.map(f => f.copy(path = under(dataDir, f.path))),
+      equalityDeletes = s.equalityDeletes.map(d =>
+        d.copy(path = under(deletesDir, d.path))),
+      deletionVectors = s.deletionVectors.map(d => d.copy(
+        dataFile = under(dataDir, d.dataFile),
+        path = under(deletesDir, d.path)))), conf)
     TxTable.open(spark, destRoot, destName)
   }
 
@@ -2019,22 +2014,47 @@ class TxTable private (
     } else dfFor(s.copy(files = files)).count()
   }
 
-  /** Snapshot scan through a metadata-pinned V1 parquet relation
+  /** THE TxTable scan: every read, delta scan and rewrite input is
+    * this one frame over the snapshot's immutable file list. It goes
+    * through a metadata-pinned V1 parquet relation
     * ([[org.apache.spark.sql.graft.ScanBridge.parquetFrame]]): file
     * statuses, sizes, and partition values come from the snapshot, so
-    * building the frame costs ZERO filesystem calls — where the
-    * `spark.read.parquet(paths*)` fallback pays an `InMemoryFileIndex`
-    * listing (one status round-trip per file on an object store) plus
-    * partition-directory inference EVERY time a merge/delete/update
-    * builds its scan. Catalyst still partition-prunes and min/max-skips
-    * through [[org.apache.spark.sql.graft.SnapshotFileIndex.listFiles]].
-    * None when the snapshot references ABSOLUTE paths (shallow clones
-    * spanning a foreign data root) — the grouped-read fallback handles
-    * those. */
-  private def snapshotScan(s: Snapshot): Option[DataFrame] = {
+    * building the frame costs ZERO filesystem calls — no
+    * `InMemoryFileIndex` listing (one status round-trip per file on an
+    * object store) and no partition-directory inference every time a
+    * merge/delete/update builds its scan. Catalyst still
+    * partition-prunes and min/max-skips through
+    * [[org.apache.spark.sql.graft.SnapshotFileIndex.listFiles]].
+    * Shallow clones go the same way: their absolute paths resolve as
+    * is, and the index roots each foreign data root it finds (the V2
+    * catalog scan serves clones identically).
+    *
+    * Outstanding merge-on-read deletes are applied in the frame:
+    * deletion vectors by the per-file [[dvDeletedCol]] predicate,
+    * equality deletes by [[applyEqualityDeletes]]. `withRefs` keeps
+    * each live row's `(__graft_file, __graft_pos)` scan refs — the
+    * positional-delete write scan; otherwise they are dropped. */
+  private def dfFor(s: Snapshot, withRefs: Boolean = false): DataFrame = {
     val schema = schemaOf(s)
-    if (s.files.isEmpty) return None
-    if (s.files.exists(f => new Path(f.path).isAbsolute)) return None
+    // MOR bookkeeping columns come from the parquet _metadata struct,
+    // NOT input_file_name(): the latter is non-deterministic, and a
+    // Project containing it BLOCKS every filter from pushing below it
+    // (no partition pruning, no parquet pushdown on any MOR read —
+    // found by the r12 sidecar spec). _metadata.file_name is
+    // deterministic and prunes like any other column.
+    val needPos = withRefs || s.deletionVectors.nonEmpty
+    val needFile = needPos || s.equalityDeletes.nonEmpty
+    if (s.files.isEmpty) {
+      val refs =
+        if (!withRefs) Nil
+        else Seq(org.apache.spark.sql.types.StructField("__graft_pos",
+            org.apache.spark.sql.types.LongType),
+          org.apache.spark.sql.types.StructField("__graft_file",
+            org.apache.spark.sql.types.StringType))
+      return spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        StructType(schema.fields ++ refs))
+    }
     val spec = PartitionTransform.resolve(s)
     // hidden-partitioning: derived fields live only in directory names /
     // snapshot metadata — the index needs them in its schema (as
@@ -2060,63 +2080,16 @@ class TxTable private (
       s.files.map(f => (f.path, f.partitionValues, f.sizeBytes)),
       s.files.flatMap(f => f.stats.map(f.path -> _)).toMap, spec,
       priorSpec = s.previousSpecFields.filterNot(spec.contains))
-    Some(org.apache.spark.sql.graft.ScanBridge.parquetFrame(
-      spark, index, partitionSchema, dataSchema))
-  }
-
-  private def dfFor(s: Snapshot): DataFrame = {
-    val schema = schemaOf(s)
-    // MOR bookkeeping columns come from the parquet _metadata struct,
-    // NOT input_file_name(): the latter is non-deterministic, and a
-    // Project containing it BLOCKS every filter from pushing below it
-    // (no partition pruning, no parquet pushdown on any MOR read —
-    // found by the r12 sidecar spec). _metadata.file_name is
-    // deterministic and prunes like any other column.
-    val needPos = s.deletionVectors.nonEmpty
-    val needFile = needPos || s.equalityDeletes.nonEmpty
-    def metaCols: Seq[org.apache.spark.sql.Column] =
+    val metaCols =
       (if (needPos) Seq(col("_metadata.row_index").as("__graft_pos")) else Nil) ++
         (if (needFile) Seq(col("_metadata.file_name").as("__graft_file")) else Nil)
-    def finish(base: DataFrame): DataFrame = {
-      val afterDv =
-        if (needPos && s.files.nonEmpty) base.filter(!dvDeletedCol(s))
-        else base
-      val afterEq = applyEqualityDeletes(afterDv, s, keepFileCol = true)
-      if (needFile) afterEq.drop("__graft_file", "__graft_pos") else afterEq
-    }
-    snapshotScan(s) match {
-      case Some(df) =>
-        return finish(df.select(schema.map(f => col(f.name)) ++ metaCols: _*))
-      case None => ()
-    }
-    val base = if (s.files.isEmpty) {
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    } else {
-      // basePath keeps partition-directory inference rooted at the file
-      // group's data root, so `<part>=<val>` segments come back as typed
-      // partition columns and Catalyst partition-prunes within the
-      // listed files. Relative paths root at this table's data/;
-      // absolute paths (shallow clones referencing their source's
-      // files) root at the SOURCE data dir, recovered by stripping the
-      // partition directories off the file path — one read per root,
-      // unioned (a clone that has also written locally has two roots).
-      val nSegs = s.partitionColumns.size + 1
-      val groups = s.files.groupBy { f =>
-        if (!new Path(f.path).isAbsolute) dataDir
-        else (1 to nSegs).foldLeft(new Path(dataDir, f.path))((p, _) => p.getParent)
-      }
-      // outstanding deletion vectors need each row's position — select
-      // the parquet row-index metadata column at scan time (projected
-      // away again after the membership filter); zero overhead otherwise
-      groups.map { case (root, fls) =>
-        val r = spark.read
-          .option("basePath", root.toString)
-          .schema(schema)
-          .parquet(fls.map(f => new Path(dataDir, f.path).toString): _*)
-        r.select(schema.map(f => col(f.name)) ++ metaCols: _*)
-      }.reduce(_ unionByName _)
-    }
-    finish(base)
+    val base = org.apache.spark.sql.graft.ScanBridge.parquetFrame(
+        spark, index, partitionSchema, dataSchema)
+      .select(schema.map(f => col(f.name)) ++ metaCols: _*)
+    val afterDv =
+      if (s.deletionVectors.isEmpty) base else base.filter(!dvDeletedCol(s))
+    val live = applyEqualityDeletes(afterDv, s)
+    if (needFile && !withRefs) live.drop("__graft_file", "__graft_pos") else live
   }
 
   /** The lazy merge-on-read positional-delete predicate over the
@@ -2150,9 +2123,8 @@ class TxTable private (
     * one): delete sets are small by design — large deletions should go
     * through the copy-on-write path, and `compact()` applies+clears
     * accumulated deletes. */
-  private def applyEqualityDeletes(base: DataFrame, s: Snapshot,
-      keepFileCol: Boolean = false): DataFrame = {
-    if (s.equalityDeletes.isEmpty || s.files.isEmpty) return base
+  private def applyEqualityDeletes(base: DataFrame, s: Snapshot): DataFrame = {
+    if (s.equalityDeletes.isEmpty) return base
     import spark.implicits._
     val seqByName = s.files.map(f => (new Path(f.path).getName, f.seq))
       .toDF("__graft_file", "__graft_fseq")
@@ -2174,11 +2146,8 @@ class TxTable private (
             col("__graft_fseq") < col("__graft_dseq"),
           "left_anti")
     }
-    // keepFileCol: ref scans (dfForWithRefs) still need __graft_file
-    // downstream — dropping it here broke MOR position ops on tables
-    // with outstanding equality deletes
-    if (keepFileCol) filtered.drop("__graft_fseq")
-    else filtered.drop("__graft_file", "__graft_fseq")
+    // __graft_file stays: dfFor drops it, or keeps it as a ref
+    filtered.drop("__graft_fseq")
   }
 
   private def deletesDir: Path = new Path(root, "deletes")
@@ -2202,18 +2171,6 @@ class TxTable private (
   private[graft] def readDvPositions(rel: String): Array[Long] =
     DvStore.positions(new Path(deletesDir, rel).toString, conf)
 
-  /**
-   * Merge-on-read positional DELETE (the Delta deletion-vector /
-   * Iceberg positional-delete write): rows matching `predicate` are
-   * deleted by recording their ROW POSITIONS against the immutable
-   * files that hold them — one small sidecar per affected file, no
-   * data rewritten, no key column required (the advantage over
-   * [[deleteMor]]'s equality deletes). The commit is O(matched rows).
-   * Readers anti-join broadcast (file, position) pairs; a copy-on-write
-   * rewrite retires a file's vector automatically; `compact()` applies
-   * and clears them all. Point/small deletes by contract — large
-   * predicates should go through the copy-on-write [[delete]].
-   */
   /** Test seam (DeletionVectorSpec): runs ONCE between [[deletePos]]'s
     * ref scan and its first commit attempt, so a spec can interleave a
     * concurrent commit into the CAS window deterministically. */
@@ -2233,6 +2190,20 @@ class TxTable private (
     spark.conf.getOption("spark.graft.morMaxInlineDeleteKeys")
       .map(_.toLong).getOrElse(100000L)
 
+  /**
+   * Merge-on-read positional DELETE (the Delta deletion-vector /
+   * Iceberg positional-delete write): rows matching `predicate` are
+   * deleted by recording their ROW POSITIONS against the immutable
+   * files that hold them — one small sidecar per affected file, no
+   * data rewritten, no key column required (the advantage over
+   * [[deleteMor]]'s equality deletes). The commit is O(matched rows).
+   * Readers drop a vector's rows with the lazy per-file [[dvDeletedCol]]
+   * predicate (each executor loads only the sidecars of the files it
+   * reads); a copy-on-write rewrite retires a file's vector
+   * automatically; `compact()` applies and clears them all. Point/small
+   * deletes by contract — large predicates should go through the
+   * copy-on-write [[delete]].
+   */
   def deletePos(predicate: Column): Long = {
     val s = snapshot
     val schema = schemaOf(s)
@@ -2245,7 +2216,7 @@ class TxTable private (
     // COW delete instead of risking driver memory (LIMIT cap+1 keeps
     // the probe itself O(cap))
     val maxPos = morMaxPositions
-    val capped = dfForWithRefs(s).filter(predicate)
+    val capped = dfFor(s, withRefs = true).filter(predicate)
       .select(col("__graft_file"), col("__graft_pos"))
       .limit(math.min(maxPos, Int.MaxValue - 1L).toInt + 1)
       .collect()
@@ -2315,7 +2286,7 @@ class TxTable private (
     // `spark.graft.morMaxPositions` matched refs, degrade to the
     // copy-on-write update instead of materializing them all
     val maxPos = morMaxPositions
-    val matched = dfForWithRefs(s).filter(hit).cache()
+    val matched = dfFor(s, withRefs = true).filter(hit).cache()
     try {
       val capped = matched.select(col("__graft_file"), col("__graft_pos"))
         .limit(math.min(maxPos, Int.MaxValue - 1L).toInt + 1)
@@ -2428,50 +2399,6 @@ class TxTable private (
     val v = commit(Some(s.version), "REWRITE_DV", schema,
       s.partitionColumns, kept ++ newFiles)
     (v, affected.size)
-  }
-
-  /** The live table with each row's `(__graft_file, __graft_pos)` scan
-    * refs attached — the positional-delete write scan (DVs and
-    * equality deletes applied, so only live rows match). */
-  private def dfForWithRefs(s: Snapshot): DataFrame = {
-    val schema = schemaOf(s)
-    if (s.files.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(schema.fields ++ Seq(
-          org.apache.spark.sql.types.StructField("__graft_file",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("__graft_pos",
-            org.apache.spark.sql.types.LongType))))
-    snapshotScan(s) match {
-      case Some(df) =>
-        val base = df.select(schema.map(f => col(f.name)) ++ Seq(
-          col("_metadata.row_index").as("__graft_pos"),
-          col("_metadata.file_name").as("__graft_file")): _*)
-        val dvApplied =
-          if (s.deletionVectors.isEmpty) base
-          else base.filter(!dvDeletedCol(s))
-        return applyEqualityDeletes(dvApplied, s, keepFileCol = true)
-      case None => ()
-    }
-    val nSegs = s.partitionColumns.size + 1
-    val groups = s.files.groupBy { f =>
-      if (!new Path(f.path).isAbsolute) dataDir
-      else (1 to nSegs).foldLeft(new Path(dataDir, f.path))((p, _) => p.getParent)
-    }
-    val base = groups.map { case (root, fls) =>
-      spark.read
-        .option("basePath", root.toString)
-        .schema(schema)
-        .parquet(fls.map(f => new Path(dataDir, f.path).toString): _*)
-        .select(schema.map(f => col(f.name)) ++ Seq(
-          col("_metadata.row_index").as("__graft_pos"),
-          col("_metadata.file_name").as("__graft_file")): _*)
-    }.reduce(_ unionByName _)
-    val dvApplied =
-      if (s.deletionVectors.isEmpty) base
-      else base.filter(!dvDeletedCol(s))
-    applyEqualityDeletes(dvApplied, s, keepFileCol = true)
   }
 
   /**
@@ -3052,7 +2979,7 @@ class TxTable private (
       /** idempotent-writer fence + watermark update (MERGE's txn) */
       txn: Option[(String, Long)] = None): Long = {
     val replacedPaths = replaced.map(_.path).toSet
-    val basePaths = base.files.map(_.path).toSet
+    val baseFilePaths = base.files.map(_.path).toSet
     def dvSig(s: Snapshot) = s.deletionVectors
       .filter(d => replacedPaths.contains(d.dataFile))
       .map(d => (d.dataFile, d.path)).sorted
@@ -3072,7 +2999,7 @@ class TxTable private (
           dvSig(cur) == baseDvSig &&
           cur.equalityDeletes.map(_.path) == baseEqSig &&
           noNewFilesIn.forall { touched =>
-            cur.files.forall(f => basePaths.contains(f.path) ||
+            cur.files.forall(f => baseFilePaths.contains(f.path) ||
               !touched.contains(f.partitionValues))
           }
         if (!untouched) throw new CommitConflictException(
@@ -3850,7 +3777,7 @@ class TxTable private (
       // never collects rows
       val maxPos = morMaxPositions
       val tRefs = System.nanoTime()
-      val capped = matchedRefs(dfForWithRefs(s.copy(files = affectedFiles)))
+      val capped = matchedRefs(dfFor(s.copy(files = affectedFiles), withRefs = true))
         .select(col("__graft_file"), col("__graft_pos"))
         .limit(math.min(maxPos, Int.MaxValue - 1L).toInt + 1)
         .collect()

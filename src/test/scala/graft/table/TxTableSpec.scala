@@ -1811,8 +1811,28 @@ class TxTableSpec extends SparkSpec {
     // no data was copied: the clone's own data dir doesn't exist yet
     assert(!new java.io.File(destDir, "data").exists())
     // clone writes don't touch the source; source writes don't touch the clone
+    val local = SampleData.transactions(spark, 10, seed = 841L)
+    c.append(local)
+    // the clone now spans two data roots (the source's and its own), and
+    // still scans through the snapshot index: no listing, no inference
+    val df = c.toDF
+    val locations = df.queryExecution.analyzed.collect {
+      case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+        l.relation
+    }.collect {
+      case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
+        h.location
+    }
+    assert(locations.nonEmpty && locations.forall(
+      _.isInstanceOf[org.apache.spark.sql.graft.SnapshotFileIndex]), locations)
+    assert(!df.queryExecution.analyzed.toString.contains("InMemoryFileIndex"))
+    assert(locations.flatMap(_.rootPaths).distinct.size === 2)
+    // rows unchanged: the source's rows plus the local append
+    val typed = Schemas.transactions.fields.map(f => col(f.name).cast(f.dataType))
+    def keyed(d: org.apache.spark.sql.DataFrame) =
+      d.select(typed: _*).collect().map(_.toSeq).sortBy(_.head.toString).toSeq
+    assert(keyed(df) === keyed(t.toDF.unionByName(local.select(typed: _*))))
     c.update(col("risk_score") === "HIGH", Map("status" -> lit("CLONED")))
-    c.append(SampleData.transactions(spark, 10, seed = 841L))
     assert(c.toDF.count() === 50)
     assert(t.toDF.count() === 40)
     assert(t.toDF.filter(col("status") === "CLONED").count() === 0)
@@ -1825,26 +1845,64 @@ class TxTableSpec extends SparkSpec {
   }
 
   test("shallow clone: carries MOR deletes and seq semantics") {
-    val t = TxTable.create(spark, new Path(freshDir("tx_clone_mor_src")), "t",
+    val cat = new TableCatalog(spark, new Path(freshDir("tx_clone_mor")))
+    cat.createNamespace("ns")
+    val t = TxTable.create(spark, cat.tableRoot("ns", "src"), "ns.src",
       Schemas.transactions, Nil)
     t.append(SampleData.transactions(spark, 20, seed = 850L)) // v1
-    val victim = t.toDF.select("transaction_id").orderBy("transaction_id")
-      .first().getString(0)
+    val ids = t.toDF.select("transaction_id").orderBy("transaction_id")
+      .collect().map(_.getString(0))
+    val victim = ids(0)
     t.deleteMor(col("transaction_id") === victim, "transaction_id") // v2
     // re-insert after the delete: survives via seq rule
     t.append(SampleData.transactions(spark, 20, seed = 850L)
       .filter(col("transaction_id") === victim)) // v3
     assert(t.toDF.count() === 20)
-    val c = t.cloneTo(new Path(freshDir("tx_clone_mor_dst")), "c")
-    // the clone sees the identical MOR-resolved state
-    assert(c.toDF.count() === 20)
+    // a deletion vector too: its data file AND sidecar live under the
+    // source root, so the clone must carry both by absolute path
+    val dvVictim = ids(1)
+    t.deletePos(col("transaction_id") === dvVictim) // v4
+    assert(t.snapshot.deletionVectors.nonEmpty)
+    assert(t.toDF.count() === 19)
+    val c = t.cloneTo(cat.tableRoot("ns", "dst"), "ns.dst")
+    def sqlCount(q: String): Long = GraftSql.sql(cat, q).first().getLong(0)
+    // the clone sees the identical MOR-resolved state through every door:
+    // metadata count, TxTable scan, and the SQL (V2 merge-on-read) scan
+    assert(c.count() === t.count())
+    assert(c.toDF.count() === t.toDF.count())
+    assert(sqlCount("SELECT count(*) FROM ns.dst") ===
+      sqlCount("SELECT count(*) FROM ns.src"))
+    assert(c.count() === 19)
+    assert(c.toDF.filter(col("transaction_id") === dvVictim).count() === 0)
+    assert(sqlCount(
+      s"SELECT count(*) FROM ns.dst WHERE transaction_id = '$dvVictim'") === 0L)
     assert(c.toDF.filter(col("transaction_id") === victim).count() === 1)
     // a clone-side MOR delete works too (its seq continues the chain)
     val victim2 = c.toDF.select("transaction_id").orderBy(col("transaction_id").desc)
       .first().getString(0)
     c.deleteMor(col("transaction_id") === victim2, "transaction_id")
-    assert(c.toDF.count() === 19)
-    assert(t.toDF.count() === 20)
+    assert(c.toDF.count() === 18)
+    // positional delete and MOR update on the clone: their ref scans
+    // run over the source's absolute-path files and the carried vector
+    val before = c.toDF.collect()
+    val statusAt = before.head.fieldIndex("status")
+    val (posVictim, updKey) = (ids(2), ids(3))
+    c.deletePos(col("transaction_id") === posVictim)
+    c.updateMor(col("transaction_id") === updKey, Map("status" -> lit("CLONED")))
+    val model = before.filterNot(_.getAs[String]("transaction_id") == posVictim)
+      .map { r =>
+        if (r.getAs[String]("transaction_id") != updKey) r.toSeq
+        else r.toSeq.updated(statusAt, "CLONED")
+      }
+    def keyed(rows: Array[org.apache.spark.sql.Row]) =
+      rows.map(_.toSeq).sortBy(_.head.toString).toSeq
+    assert(keyed(c.toDF.collect()) === model.sortBy(_.head.toString).toSeq)
+    assert(keyed(GraftSql.sql(cat, "SELECT * FROM ns.dst").collect()) ===
+      model.sortBy(_.head.toString).toSeq)
+    assert(c.count() === 17)
+    // the source is untouched by every clone-side write
+    assert(t.toDF.count() === 19)
+    assert(t.toDF.filter(col("status") === "CLONED").count() === 0)
   }
 
   test("shallow clone: SQL surface with VERSION AS OF") {
