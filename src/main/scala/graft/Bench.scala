@@ -692,7 +692,7 @@ object Bench {
    * quantization error, not probing. Measured here: heuristic 22
    * probes → 0.998; calibration lands at the same 22.)
    */
-  private[graft] def annClustered(spark: SparkSession): String = try {
+  private def annClustered(spark: SparkSession): String = try {
     import org.apache.spark.sql.functions._
     import graft.operators.Similarity
     val nVec = 200000L
@@ -1005,23 +1005,20 @@ object Bench {
     * appended per commit) the metadata shakeouts time against. Returns
     * true if it built, false if the head version already existed
     * (immutable once built — reused across bench runs). */
-  private[graft] def buildSyntheticLog(spark: SparkSession,
-      logDir: org.apache.hadoop.fs.Path, commits: Int,
-      verbose: Boolean = false): Boolean = {
+  private def buildSyntheticLog(spark: SparkSession,
+      logDir: org.apache.hadoop.fs.Path, commits: Int): Boolean = {
     import graft.table.{DataFile, Snapshot, TxLog}
     val conf = spark.sessionState.newHadoopConf()
     val head = commits - 1L
-    // reuse when the log reaches AT LEAST the wanted head — dev probes
-    // (BuildMetaLogExtend) may have appended commits above it; every
-    // shakeout read below pins explicit versions ≤ head, so an
-    // extended log serves identically
+    // reuse when the log reaches AT LEAST the wanted head — a longer
+    // log left by an earlier build serves identically, because every
+    // shakeout read below pins explicit versions ≤ head
     if (TxLog.currentVersion(logDir, conf).exists(_ >= head)) return false
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("id",
         org.apache.spark.sql.types.LongType)))
     var files = Vector.empty[DataFile]
     var expected: Option[Long] = None
-    var t0 = System.nanoTime()
     (0 until commits).foreach { i =>
       files = files :+ DataFile(f"f$i%06d.parquet",
         Map("date" -> f"2026-01-${i % 28 + 1}%02d"), 1000L, 1000000L)
@@ -1031,12 +1028,6 @@ object Bench {
         operation = if (i == 0) "CREATE" else "APPEND",
         schemaJson = schema.json,
         partitionColumns = Seq("date"), files = files), conf))
-      if (verbose && (i + 1) % 10000 == 0) {
-        val dt = (System.nanoTime() - t0) / 1e9
-        println(f"  commits ${i + 1 - 10000}-${i + 1}: $dt%.1f s " +
-          f"(${10000 / dt}%.0f commits/s)")
-        t0 = System.nanoTime()
-      }
     }
     true
   }
@@ -1156,27 +1147,6 @@ object Bench {
   }
 
   /**
-   * The 10⁶-FILE planning shape (r15 VERDICT task 6): metadata_100k
-   * covers the COMMIT side; this times what a reader and the
-   * maintenance trigger pay against a million-entry head —
-   *  - resolved snapshot materialization (O(files) driver metadata);
-   *  - partition-PRUNED scan planning through the V2 catalog,
-   *    including SnapshotFileIndex construction and
-   *    planInputPartitions. Planning must touch driver metadata ONLY:
-   *    the synthetic files do not exist on disk, so an accidental
-   *    LIST or footer read would fail loudly instead of hiding in the
-   *    number; `pruned_files` records the sub-linear evidence
-   *    (~1/84th of the million entries survive the date predicate);
-   *  - maintain_table signal evaluation with every threshold quiet —
-   *    the per-commit cost ceiling of the declarative post-commit
-   *    trigger at this table size.
-   * The log builds once (10 bursts of 100k entries; build_sec recorded
-   * honestly when this run built it) and is reused across rounds.
-   */
-  private[graft] def planning1mSection(spark: SparkSession): String =
-    planning1m(spark)
-
-  /**
    * 10× SCALE POINT for the relational headline keys (r19 VERDICT
    * next-round #8): at sf0.1 every headline key is 0.2-1 s and the
    * driver's 8→32-core ratios read ≈1 — not because the operators are
@@ -1195,7 +1165,7 @@ object Bench {
    * 10× — the scan/shuffle scale-up this section exists to measure);
    * events replicate with user_id shifted so distinct counts scale.
    */
-  private[graft] def headline10x(spark: SparkSession, sfDir: String,
+  private def headline10x(spark: SparkSession, sfDir: String,
       fns: Map[String, (SparkSession, String) =>
         org.apache.spark.sql.DataFrame]): String = try {
     import org.apache.spark.sql.functions._
@@ -1253,6 +1223,24 @@ object Bench {
       String.valueOf(e.getMessage).replace('"', ' ').take(120)}"}"""
   }
 
+  /**
+   * The 10⁶-FILE planning shape (r15 VERDICT task 6): metadata_100k
+   * covers the COMMIT side; this times what a reader and the
+   * maintenance trigger pay against a million-entry head —
+   *  - resolved snapshot materialization (O(files) driver metadata);
+   *  - partition-PRUNED scan planning through the V2 catalog,
+   *    including SnapshotFileIndex construction and
+   *    planInputPartitions. Planning must touch driver metadata ONLY:
+   *    the synthetic files do not exist on disk, so an accidental
+   *    LIST or footer read would fail loudly instead of hiding in the
+   *    number; `pruned_files` records the sub-linear evidence
+   *    (~1/84th of the million entries survive the date predicate);
+   *  - maintain_table signal evaluation with every threshold quiet —
+   *    the per-commit cost ceiling of the declarative post-commit
+   *    trigger at this table size.
+   * The log builds once (10 bursts of 100k entries; build_sec recorded
+   * honestly when this run built it) and is reused across rounds.
+   */
   private def planning1m(spark: SparkSession): String = try {
     import graft.table.{ColStats, DataFile, Snapshot, TxLog, TxTable}
     import org.apache.hadoop.fs.Path
@@ -1637,7 +1625,7 @@ object Bench {
    *    latency under 1,000 total sidecars ≈ under 10 proves read cost
    *    scales with TOUCHED files, not total delete state.
    */
-  private[graft] def morSidecars(spark: SparkSession): String = try {
+  private def morSidecars(spark: SparkSession): String = try {
     import org.apache.hadoop.fs.Path
     import org.apache.spark.sql.functions._
     import graft.table.TxTable
@@ -1707,7 +1695,7 @@ object Bench {
    * two round-trips per metadata commit
    * (`update_metadata.py:64-70,135-141`).
    */
-  private[graft] def commitLag(spark: SparkSession): String = try {
+  private def commitLag(spark: SparkSession): String = try {
     import graft.table.{DataFile, LagFs, Snapshot, TxLog}
     import org.apache.hadoop.fs.Path
     val conf = spark.sessionState.newHadoopConf()
@@ -1783,7 +1771,7 @@ object Bench {
    *  - `exec_roundtrips_per_stmt`: plan + collect — adds the data-file
    *    opens, which scale with files READ (real I/O), not metadata.
    */
-  private[graft] def queryLag(spark: SparkSession): String = try {
+  private def queryLag(spark: SparkSession): String = try {
     import graft.table.{GraftSql, LagFs, TableCatalog}
     import org.apache.hadoop.fs.Path
     spark.sparkContext.hadoopConfiguration
@@ -1824,7 +1812,7 @@ object Bench {
     case e: Throwable => s"""{"error":"${e.getClass.getSimpleName}"}"""
   }
 
-  private[graft] def sustainShakeout(spark: SparkSession): String = try {
+  private def sustainShakeout(spark: SparkSession): String = try {
     import org.apache.hadoop.fs.Path
     val rows = 50000L
     val morProps = Map(
@@ -2001,22 +1989,5 @@ object Bench {
       case e: Throwable =>
         s"""{"error":"${e.getClass.getSimpleName}"}"""
     }
-  }
-}
-
-/** Dev runner: just the planning_1m section (the full bench is ~20
-  * min; iterating on the 10⁶-file planning shape needs a 1-2 min
-  * loop). Same session shape as [[Bench.main]]. */
-object ProfilePlanning1m {
-  def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    println("PLANNING1M " + Bench.planning1mSection(spark))
-    spark.stop()
   }
 }

@@ -95,7 +95,7 @@ object Similarity {
   /** The `n` rows with the smallest portable md5 hash of their id — the
     * deterministic, engine-portable "random" sample both quantizers
     * seed from (a SQL oracle re-derives it with the same expression). */
-  private[graft] def hashMinSample(corpus: DataFrame, n: Int,
+  private def hashMinSample(corpus: DataFrame, n: Int,
       idCol: String, vecCol: String): Array[Array[Double]] = {
     val seedHash = conv(substring(md5(col(idCol).cast(
         org.apache.spark.sql.types.StringType)), 1, 15), 16, 10)
@@ -210,13 +210,11 @@ object Similarity {
     // Safe at any scale: each hash-map entry is a k-bounded heap, so
     // memory per task is |query batch| × k × ~16 B. Raised only while
     // the session still runs Spark's default (128); an explicit
-    // deployment setting — any non-default value, or the env override —
-    // is respected.
+    // deployment setting — any non-default value — is respected.
     val ss = scored.sparkSession
     val fallbackKey = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
     if (ss.conf.get(fallbackKey, "128") == "128")
-      ss.conf.set(fallbackKey,
-        sys.env.getOrElse("SPARK_GRAFT_OBJ_AGG_FALLBACK", "65536"))
+      ss.conf.set(fallbackKey, "65536")
     val agg = ColumnBridge.column(
       graft.functions.expressions.ScoreTopK(
         ColumnBridge.expression(col("score")),
@@ -238,7 +236,7 @@ object Similarity {
     * 64KB generated-method limit at large m·kCodes — Spark then falls
     * back to interpreted evaluation for that stage, which is correct
     * and only matters for training throughput, not search.) */
-  private[graft] def refineCodebooks(corpus: DataFrame, vecCol: String,
+  private def refineCodebooks(corpus: DataFrame, vecCol: String,
       seeded: Seq[Seq[Seq[Double]]], dSub: Int,
       iters: Int): Seq[Seq[Seq[Double]]] = {
     var codebooks = seeded
@@ -382,7 +380,7 @@ object Similarity {
   /** Lloyd-refine coarse centroids: assign, average member vectors per
     * (cell, dim) — only partial sums shuffle, never vectors — keep
     * empty cells in place. */
-  private[graft] def refineCentroids(corpus: DataFrame, corpusId: String,
+  private def refineCentroids(corpus: DataFrame, corpusId: String,
       corpusVec: String, seeded: Array[Array[Double]], dim: Int,
       iters: Int): Array[Array[Double]] = {
     var cents = seeded
@@ -423,14 +421,6 @@ object Similarity {
     * unchanged on any given layout. Quantizers past the inline-kernel
     * cap fall back to the separate refiners (the broadcast-join
     * assignment path needs its own join shape). */
-  /** Dev-profiler door into [[refineJointly]]. */
-  private[graft] def refineJointlyForProfile(corpus: DataFrame,
-      corpusId: String, vecCol: String, seedCents: Array[Array[Double]],
-      seedCodebooks: Seq[Seq[Seq[Double]]], dim: Int, dSub: Int,
-      iters: Int): (Array[Array[Double]], Seq[Seq[Seq[Double]]]) =
-    refineJointly(corpus, corpusId, vecCol, seedCents, seedCodebooks,
-      dim, dSub, iters)
-
   private def refineJointly(corpus: DataFrame, corpusId: String,
       vecCol: String, seedCents: Array[Array[Double]],
       seedCodebooks: Seq[Seq[Seq[Double]]], dim: Int, dSub: Int,

@@ -108,8 +108,6 @@ object LagFs {
     counts.computeIfAbsent(cat,
       _ => new java.util.concurrent.atomic.AtomicLong).incrementAndGet()
     target.foreach(p => listedBuf.add(p.toString))
-    if (sys.props.contains("graft.lagfs.trace"))
-      new Exception(s"lagfs-$cat").printStackTrace()
     val lag = lagMs
     if (lag > 0) Thread.sleep(lag)
   }

@@ -3638,12 +3638,6 @@ class TxTable private (
       .select(col(keyName) +: dataCols.map(c => col(s"__w.`$c`").as(c)): _*)
       .cache()
 
-    // phase timing for both merge modes, visible only under
-    // GRAFT_MOR_DEBUG (the bisect tool that located the r8 bench noise)
-    def dbgPhase(label: String, t0: Long): Unit =
-      if (sys.env.contains("GRAFT_MOR_DEBUG"))
-        println(f"    [merge] $label%-20s ${(System.nanoTime() - t0) / 1e9}%.3f s")
-    val tTouched = System.nanoTime()
     // affected partition values (small: one per touched date) and the
     // batch size from ONE job — per-partition counts materialize the
     // cache and give both, saving a count() job per micro-batch on the
@@ -3676,14 +3670,9 @@ class TxTable private (
           perPart.toSeq.flatMap(_.getSeq[Any](parts.size + 1)))
       }
     // full, null-free key set within the cap — safe to inline
-    // (spark.graft.mergeInlineKeys=false forces the join paths, the
-    // A/B lever the fusion was measured with)
     val inlineKeys: Option[Seq[Any]] =
       Some(collectedKeys).filter(ks =>
-        batchRows <= keyCap && ks.size == batchRows &&
-          spark.conf.getOption("spark.graft.mergeInlineKeys")
-            .forall(_.toBoolean))
-    dbgPhase("dedup+touched", tTouched)
+        batchRows <= keyCap && ks.size == batchRows)
     // empty batch: nothing to upsert, nothing to delete — no commit
     // (lets the streaming path skip its own isEmpty pre-job)
     if (batchRows == 0L) { deduped.unpersist(); return _ => s.version }
@@ -3776,22 +3765,18 @@ class TxTable private (
       // the merge degrades to the copy-on-write rewrite below, which
       // never collects rows
       val maxPos = morMaxPositions
-      val tRefs = System.nanoTime()
       val capped = matchedRefs(dfFor(s.copy(files = affectedFiles), withRefs = true))
         .select(col("__graft_file"), col("__graft_pos"))
         .limit(math.min(maxPos, Int.MaxValue - 1L).toInt + 1)
         .collect()
-      dbgPhase("refs scan+collect", tRefs)
       if (capped.length <= maxPos) {
         val refs = capped.map(r => (r.getString(0), r.getLong(1)))
-        val tWrite = System.nanoTime()
         val newFiles = writeFiles(
           sizedForWrite(withDerivedParts(
               upserts.select(schema.map(f => col(f.name)): _*), s),
             rewriteBytes = 0L, batchRows, bytesPerRow(s), parts,
             splitCol = Some(key)),
           parts)
-        dbgPhase("writeFiles", tWrite)
         deduped.unpersist()
         val refsByName = refs.groupBy(_._1)
         val sPaths = s.files.map(_.path).toSet
@@ -3806,7 +3791,6 @@ class TxTable private (
         def morOutput(base: Snapshot): (Seq[DataFile], Seq[DeletionVector]) = {
           val relByName = base.files.map(f => new Path(f.path).getName -> f.path).toMap
           val existing = base.deletionVectors.map(d => d.dataFile -> d).toMap
-          val tDv = System.nanoTime()
           val updated: Map[String, DeletionVector] = refsByName.toSeq
             .par.map { case (name, rs) =>
               val rel = relByName.getOrElse(name,
@@ -3819,7 +3803,6 @@ class TxTable private (
                 rs.map(_._2)).distinct.sorted
               rel -> DeletionVector(rel, writeDvFile(mergedPos), mergedPos.length)
             }.seq.toMap
-          dbgPhase("dv writes", tDv)
           val files = base.files ++ newFiles
           val live = files.map(_.path).toSet
           (files, (base.deletionVectors.filterNot(d => updated.contains(d.dataFile))
@@ -3884,13 +3867,11 @@ class TxTable private (
     }
     val merged = survivors.select(schema.map(f => col(f.name)): _*)
       .unionByName(upserts.select(schema.map(f => col(f.name)): _*))
-    val tWrite = System.nanoTime()
     val newFiles = writeFiles(
       sizedForWrite(withDerivedParts(merged, s),
         affectedFiles.map(_.sizeBytes).sum, batchRows,
         bytesPerRow(s), parts, splitCol = Some(key)),
       parts)
-    dbgPhase("survivors+write", tWrite)
     deduped.unpersist()
     // No blind retry: the rewritten files were derived from THIS
     // snapshot; a concurrent commit invalidates them (retrying would
@@ -3902,7 +3883,6 @@ class TxTable private (
     // touched partitions (they could carry the batch's keys). Disjoint
     // concurrent merges — the multi-stream ingest shape — then compose.
     pendingTxn => {
-      val tCommit = System.nanoTime()
       val v =
         if (keyStablePartitions)
           commitRewrite(s, "MERGE", affectedFiles, newFiles,
@@ -3911,7 +3891,6 @@ class TxTable private (
         else commit(Some(s.version), "MERGE", schema, parts,
           keptFiles ++ newFiles, appTxns = txns, changeFiles = cdfFiles,
           pendingTxn = pendingTxn)
-      dbgPhase("commit", tCommit)
       if (pendingTxn.isEmpty) { maybeAutoCompact(touched); maybeAutoMaintain() }
       v
     }

@@ -167,46 +167,19 @@ object ParallelFilePlan {
         }
       } else {
         // fan out (dir, chunk) tasks; reassemble per dir in order
-        val perDir = new Array[Array[Array[PartitionedFile]]](dirs.length)
-        val futures = new java.util.ArrayList[java.util.concurrent.Future[_]]()
-        var d = 0
-        while (d < dirs.length) {
-          val dir = dirs(d)
-          val values = dirValues(d)
-          val n = dir.files.length
-          val nChunks = math.max(1, (n + ChunkSize - 1) / ChunkSize)
-          perDir(d) = new Array[Array[PartitionedFile]](nChunks)
-          val slot = perDir(d)
-          var c = 0
-          while (c < nChunks) {
-            val from = c * ChunkSize
-            val until = math.min(n, from + ChunkSize)
-            val ci = c
-            futures.add(pool.submit(new Callable[Unit] {
-              override def call(): Unit =
-                slot(ci) = splitChunk(dir, values, from, until)
-            }))
-            c += 1
-          }
-          d += 1
-        }
-        val it = futures.iterator()
-        while (it.hasNext) {
-          try it.next().get(600, TimeUnit.SECONDS)
-          catch {
-            case e: java.util.concurrent.ExecutionException =>
-              throw e.getCause
-          }
+        val perDir = dirs.map(dir => new Array[Array[PartitionedFile]](
+          math.max(1, (dir.files.length + ChunkSize - 1) / ChunkSize)))
+        val tasks = for (d <- dirs.indices; c <- perDir(d).indices) yield (d, c)
+        fanOut(tasks.length) { t =>
+          val (d, c) = tasks(t)
+          val from = c * ChunkSize
+          perDir(d)(c) = splitChunk(dirs(d), dirValues(d), from,
+            math.min(dirs(d).files.length, from + ChunkSize))
         }
         dirs.indices.flatMap(d => finishDir(perDir(d)))
       }
     FilePartition.getFilePartitions(spark, splitFiles, maxSplitBytes)
   }
-
-  /** Escape hatch (and A/B seam): `SPARK_GRAFT_PAR_PLAN=off` routes
-    * every plan through Spark's own sequential path. */
-  private val enabled: Boolean =
-    !sys.env.get("SPARK_GRAFT_PAR_PLAN").exists(_.equalsIgnoreCase("off"))
 
   /** `planInputPartitions` through the parallel path when the batch is
     * a [[FileScan]] (a FileScan IS its own Batch — `toBatch` returns
@@ -214,7 +187,7 @@ object ParallelFilePlan {
   def planInputPartitions(
       batch: org.apache.spark.sql.connector.read.Batch): Array[InputPartition] =
     batch match {
-      case fs: FileScan if enabled => partitions(fs).toArray
+      case fs: FileScan => partitions(fs).toArray
       case _ => batch.planInputPartitions()
     }
 }

@@ -252,11 +252,8 @@ object SnapshotFileIndex {
     * .listFilesInner]]): the same per-directory filter+wrap walk
     * Spark's PartitioningAwareFileIndex.listFiles runs sequentially,
     * fanned over the planning pool when no partition filter prunes.
-    * `SPARK_GRAFT_PAR_PLAN=off` disables it together with the parallel
-    * split packing (one kill switch for the parallel planning work);
-    * tests flip the var directly to A/B the two paths. */
-  @volatile private[sql] var parallelUnfilteredListing: Boolean =
-    !sys.env.get("SPARK_GRAFT_PAR_PLAN").exists(_.equalsIgnoreCase("off"))
+    * Tests flip the var to compare against the sequential listing. */
+  @volatile private[sql] var parallelUnfilteredListing: Boolean = true
 
   /** Parallel listings only pay off past this many files. */
   private[sql] val ParallelListingThreshold = 4096L

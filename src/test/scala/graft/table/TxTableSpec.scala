@@ -481,6 +481,31 @@ class TxTableSpec extends SparkSpec {
       assert(big.orderBy("k").collect().toSeq ===
         small.orderBy("k").collect().toSeq)
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+
+    // end to end through TxTable.merge: a null batch key drops out of
+    // the collected key list (collect_list skips nulls), so the list is
+    // shorter than the batch and the survivors come from the anti-join
+    import spark.implicits._
+    val target = Seq((Option.empty[String], 1L, 0L), (Some("a"), 1L, 0L),
+      (Some("b"), 2L, 0L), (Some("c"), 3L, 0L))
+    val batch = Seq((Option.empty[String], 10L, 5L),
+      (Option.empty[String], 11L, 6L), (Some("a"), 100L, 5L),
+      (Some("b"), 200L, 5L), (Some("b"), 201L, 7L), (Some("d"), 400L, 5L))
+    val t = TxTable.create(spark, new Path(freshDir("tx_merge_nullkey")), "t",
+      target.toDF("k", "v", "ts").schema, Nil)
+    t.append(target.toDF("k", "v", "ts"))
+    t.merge(batch.toDF("k", "v", "ts"), "k", "ts")
+    // keyed model: one winner per batch key (null included) by ts;
+    // null-keyed target rows never match, so they all survive
+    val winners = batch.groupBy(_._1).values.map(_.maxBy(_._3)).toSeq
+    val model = target.filter(r => r._1.isEmpty ||
+      !winners.exists(_._1 == r._1)) ++ winners
+    val got = t.toDF.select("k", "v", "ts")
+      .as[(Option[String], Long, Long)].collect().toSeq
+    assert(got.size === model.size)
+    assert(got.toSet === model.toSet)
+    assert(got.filter(_._1.isEmpty).toSet ===
+      Set((None, 1L, 0L), (None, 11L, 6L)))
   }
 
   test("catalog: SQL-text CREATE/DROP TABLE route through GraftSql") {
