@@ -75,9 +75,8 @@ class GraftReplaceDataWrite(
         partSpec, zoneId)
 
     override def commit(messages: Array[WriterCommitMessage]): Unit = {
-      val newFiles = messages.toSeq
-        .collect { case m: GraftFileMessage => m.files }.flatten
-        .map { case (rel, parts) => tx.describeDataFile(rel, parts) }
+      val newFiles = tx.describeDataFiles(messages.toSeq
+        .collect { case m: GraftFileMessage => m.files }.flatten)
       val replaced = capturedFiles()
       val snap = tx.snapshotAt(snapVersion)
       val kept = snap.files.filterNot(f => replaced.contains(f.path))

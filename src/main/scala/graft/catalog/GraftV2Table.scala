@@ -605,9 +605,8 @@ class GraftV2Table(val tx: TxTable, val asOfVersion: Option[Long] = None)
                 partSpec, zoneId)
             override def commit(epochId: Long,
                 messages: Array[org.apache.spark.sql.connector.write.WriterCommitMessage]): Unit = {
-              val newFiles = messages.toSeq
-                .collect { case m: GraftFileMessage => m.files }.flatten
-                .map { case (rel, parts) => tx.describeDataFile(rel, parts) }
+              val newFiles = tx.describeDataFiles(messages.toSeq
+                .collect { case m: GraftFileMessage => m.files }.flatten)
               tx.commitAppendFiles(newFiles, Some((queryId, epochId)))
             }
             override def abort(epochId: Long,

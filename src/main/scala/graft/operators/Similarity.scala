@@ -532,6 +532,17 @@ object Similarity {
       pqCodesKernel(model.codebooks, corpusVec).as("codes"))
   }
 
+  /** The schema [[encodeIvfPq]] writes for an id column of `idType`
+    * (`pq`: the model has codebooks). Reading a codes sidecar with it
+    * skips parquet schema inference, which costs a Spark job per read. */
+  def codesSchema(corpusId: String, idType: org.apache.spark.sql.types.DataType,
+      pq: Boolean): org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(StructField(corpusId, idType), StructField("cell", IntegerType)) ++
+      (if (pq) Seq(StructField("codes", ArrayType(IntegerType, containsNull = false)))
+       else Nil))
+  }
+
   /** Per-query probe list: the `nprobe` nearest cells via a broadcast
     * join against the tiny centroid table. */
   private def probeCells(queries: DataFrame, model: VectorIndexModel,

@@ -573,8 +573,8 @@ class TxTable private (
     val covered = writeCoveredFile(vecCol, s.files.map(_.path))
     // footer-only count of what was just written — seeds the
     // dead-code-rows signal (codeRows − live covered rows)
-    val builtRows = spark.read
-      .parquet(new Path(vectorIndexPath(vecCol), gen).toString).count()
+    val builtRows = readCodes(new Path(vectorIndexPath(vecCol), gen), idCol,
+      model.codebooks.nonEmpty, s).count()
     // the CAS expectation is the meta this build planned its GC and
     // generation against — a refresh/rewrite racing in from another
     // process fails here instead of having its codes silently orphaned.
@@ -598,6 +598,13 @@ class TxTable private (
         p.coveredFilesFile.toSeq ++ p.coveredDeltaFiles))
     model.nprobe
   }
+
+  /** A codes sidecar directory, read with the schema it was written in
+    * (the id column's type from `s`). */
+  private def readCodes(dir: Path, idCol: String, pq: Boolean,
+      s: Snapshot): DataFrame =
+    spark.read.schema(graft.operators.Similarity.codesSchema(idCol,
+      schemaOf(s)(idCol).dataType, pq)).parquet(dir.toString)
 
   /**
    * Incrementally extend the persisted index: encode ONLY the files
@@ -766,7 +773,7 @@ class TxTable private (
     val win = org.apache.spark.sql.expressions.Window
       .partitionBy(col(meta.idColumn))
       .orderBy(col("__ep").desc, col("__mt").desc, col("cell").asc)
-    spark.read.parquet(cur.toString)
+    readCodes(cur, meta.idColumn, meta.codebooks.nonEmpty, s)
       .withColumn("__name", element_at(split(input_file_name(), "/"), -1))
       .withColumn("__ep", element_at(epMap, col("__name")))
       .withColumn("__mt", element_at(mtMap, col("__name")))
@@ -781,8 +788,8 @@ class TxTable private (
     // stamp the surviving row count — with the covered live files' row
     // counts this is the dead-code-rows signal `.indexes` serves and
     // maintainVectorIndex triggers the next reap on, all metadata-side
-    val newCodeRows = spark.read
-      .parquet(new Path(vectorIndexPath(vecCol), gen).toString).count()
+    val newCodeRows = readCodes(new Path(vectorIndexPath(vecCol), gen),
+      meta.idColumn, meta.codebooks.nonEmpty, s).count()
     // compaction also folds the coverage chain (base + per-refresh
     // deltas) back into a single base sidecar — same covered set,
     // one file to load cold. Dead covered PATHS must drop WITH their
@@ -1469,8 +1476,8 @@ class TxTable private (
     val s = snapshot
     val current0 = dfFor(s)
     val current = where.map(current0.filter).getOrElse(current0)
-    val codesAll = spark.read.parquet(
-      new Path(vectorIndexPath(vecCol), meta.codesDir).toString)
+    val codesAll = readCodes(new Path(vectorIndexPath(vecCol), meta.codesDir),
+      idCol, meta.codebooks.nonEmpty, s)
     // push the probed cells as a LITERAL IN filter: the per-query probe
     // assignment is a broadcast join, whose dynamic keys never reach
     // parquet row-group pruning — collecting the distinct probed cells
@@ -2695,15 +2702,26 @@ class TxTable private (
     // clustered-write trade.
     val sortCols = TxTable.sortOrderColumns(snapshot)
       .filter(df.columns.contains)
+    val partCols = partitionColumns.filter(df.columns.contains)
     val clustered =
-      if (sortCols.isEmpty) df
-      else {
+      if (sortCols.isEmpty) {
+        // Without a sort order, cluster rows on the partition columns
+        // (the V1 twin of GraftReplaceDataWrite.requiredDistribution):
+        // otherwise every task writes a file per partition value it
+        // holds — tasks × values small files per commit. A rebalance,
+        // not a fixed-count repartition: AQE coalesces small outputs
+        // and splits a skewed partition value at the advisory size. A
+        // frame that already ends in an explicit repartition (compaction
+        // sizing, a caller's own df.repartition(n)) keeps its layout.
+        if (partCols.isEmpty || TxTable.explicitlyPartitioned(
+            df.queryExecution.analyzed)) df
+        else df.hint("rebalance", partCols.map(col): _*)
+      } else {
         // plan-level partition count: df.rdd would append a
         // Row-deserializer stage to the lineage just to read a number;
         // toRdd asks the physical plan directly (no job, no extra stage)
         val n = math.max(1, df.queryExecution.toRdd.getNumPartitions)
-        val keys = (partitionColumns.filter(df.columns.contains) ++ sortCols)
-          .distinct.map(col)
+        val keys = (partCols ++ sortCols).distinct.map(col)
         df.repartitionByRange(n, keys: _*).sortWithinPartitions(keys: _*)
       }
     val staging = new Path(root, s"_staging/${UUID.randomUUID().toString}")
@@ -2736,41 +2754,46 @@ class TxTable private (
     }
     val moved = collect(staging, Map.empty)
     f.delete(staging, true)
-    // One footer read per file yields both row count and min/max stats
-    // (free metadata — the writer already computed it — that drives file
-    // skipping and size-aware planning). The reads are independent, so
-    // run them concurrently instead of serially on the driver.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val futures = moved.map { case (rel, parts, target, len) =>
-      Future {
-        val (rowCount, stats) =
-          try {
-            val (rc, st2) = FileStats.collect(target, conf)
-            (rc, Some(st2))
-          } catch { case _: Throwable => (-1L, None) }
-        DataFile(rel, parts, rowCount = rowCount, sizeBytes = len, stats = stats)
-      }
-    }
-    Await.result(Future.sequence(futures), scala.concurrent.duration.Duration.Inf)
+    describeFiles(moved.map { case (rel, parts, target, len) =>
+      (rel, parts, target, Some(len)) })
   }
 
-  /** Describe a data file already written under data/ (footer row count
-    * + min/max stats, size) — used by the V2 ReplaceData write, whose
-    * executors write files directly and hand back (path, partition)
-    * pairs. */
-  private[graft] def describeDataFile(rel: String,
-      partitionValues: Map[String, String]): DataFile = {
-    TxLog.registerInFlight(new Path(rel).getName)
-    val target = new Path(dataDir, rel)
-    val len = fs.getFileStatus(target).getLen
-    val (rowCount, stats) =
-      try {
-        val (rc, st) = FileStats.collect(target, conf)
-        (rc, Some(st))
-      } catch { case _: Throwable => (-1L, None) }
-    DataFile(rel, partitionValues, rowCount = rowCount, sizeBytes = len,
-      stats = stats)
+  /** Describe data files already written under data/ — used by the V2
+    * ReplaceData and streaming writes, whose executors write files
+    * directly and hand back (path, partition) pairs. */
+  private[graft] def describeDataFiles(
+      files: Seq[(String, Map[String, String])]): Seq[DataFile] = {
+    files.foreach { case (rel, _) => TxLog.registerInFlight(new Path(rel).getName) }
+    describeFiles(files.map { case (rel, parts) =>
+      (rel, parts, new Path(dataDir, rel), None) })
+  }
+
+  /** DataFile descriptors for written files: (log path, partition
+    * values, file, size when already known). One footer read per file
+    * yields both row count and min/max stats (free metadata — the
+    * writer already computed it — that drives file skipping and
+    * size-aware planning). The reads are independent, so they run
+    * concurrently instead of serially on the driver. An unreadable
+    * footer leaves the file without stats (row count -1); a fatal
+    * error (OOM, interrupt) propagates. */
+  private def describeFiles(
+      files: Seq[(String, Map[String, String], Path, Option[Long])]): Seq[DataFile] = {
+    import java.util.concurrent.{CompletableFuture, CompletionException}
+    val pending = files.map { case (rel, parts, file, size) =>
+      CompletableFuture.supplyAsync(() => {
+        val len = size.getOrElse(fs.getFileStatus(file).getLen)
+        val (rowCount, stats) =
+          try {
+            val (rc, st) = FileStats.collect(file, conf)
+            (rc, Some(st))
+          } catch { case scala.util.control.NonFatal(_) => (-1L, None) }
+        DataFile(rel, parts, rowCount = rowCount, sizeBytes = len, stats = stats)
+      }, scala.concurrent.ExecutionContext.global)
+    }
+    pending.map { p =>
+      try p.join()
+      catch { case e: CompletionException => throw e.getCause }
+    }
   }
 
   /**
@@ -3485,22 +3508,8 @@ class TxTable private (
             s"as table type ${t.sql}")
       }
     }
-    // one footer read per file — concurrent, same shape as writeFiles
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val futures = fresh.map { case (st, vals) =>
-      Future {
-        val (rowCount, stats) =
-          try {
-            val (rc, cs) = FileStats.collect(st.getPath, conf)
-            (rc, Some(cs))
-          } catch { case _: Throwable => (-1L, None) }
-        DataFile(st.getPath.toString, vals, rowCount = rowCount,
-          sizeBytes = st.getLen, stats = stats)
-      }
-    }
-    val newFiles = Await.result(Future.sequence(futures),
-      scala.concurrent.duration.Duration.Inf)
+    val newFiles = describeFiles(fresh.map { case (st, vals) =>
+      (st.getPath.toString, vals, st.getPath, Some(st.getLen)) })
     val v = retryingCommit("ADD_FILES") { expected =>
       val cur = snapshotAt(expected)
       val curPaths = cur.files.map(_.path).toSet
@@ -5912,6 +5921,23 @@ object TxTable {
   private[table] def sortOrderColumns(s: Snapshot): Seq[String] =
     s.properties.get(SortOrderProperty).toSeq
       .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
+
+  /** Does `plan` end in an explicit repartition (repartition, coalesce,
+    * repartitionByRange, DISTRIBUTE BY, a rebalance hint)? Looks
+    * through projections (the write path's align/withDerivedParts
+    * selects) and within-partition sorts (compaction's
+    * sortWithinPartitions), which keep the child's partitioning. */
+  @scala.annotation.tailrec
+  private[table] def explicitlyPartitioned(
+      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Boolean = {
+    import org.apache.spark.sql.catalyst.plans.logical._
+    plan match {
+      case _: RepartitionOperation | _: RebalancePartitions => true
+      case p: Project => explicitlyPartitioned(p.child)
+      case s: Sort if !s.global => explicitlyPartitioned(s.child)
+      case _ => false
+    }
+  }
 
   /** ONE property key per ingest source (qualified source URI hashed —
     * `dir`, `dir/`, and relative spellings of the same directory must

@@ -2963,4 +2963,84 @@ class TxTableSpec extends SparkSpec {
     t2.vacuum(2, graceMillis = 0L)
     assert(t2.toDF.count() === t.toDF.count())
   }
+
+  /** 1200 rows over 12 dates, produced by 4 tasks with no repartition
+    * of their own: a writer that does not cluster lands 4 × 12 files. */
+  private def twelveDates(tasks: Int = 4) =
+    spark.range(0, 1200, 1, tasks).select(
+      concat(lit("id"), col("id")).as("id"), col("id").cast("int").as("v"),
+      date_add(lit(java.sql.Date.valueOf("2026-03-01")),
+        (col("id") % 12).cast("int")).as("date"))
+
+  test("partitioned append clusters on the partition column: one file per date") {
+    import org.apache.spark.sql.types._
+    val dir = freshDir("tx_cluster")
+    val schema = StructType.fromDDL("id STRING, v INT, date DATE")
+    val t = TxTable.create(spark, new Path(dir, "t"), "t", schema, Seq("date"))
+    val in = twelveDates()
+    assert(in.rdd.getNumPartitions === 4)
+    t.append(in)
+    val files = t.snapshot.files
+    assert(files.size === 12, s"expected one file per date, got ${files.size}")
+    assert(files.map(_.partitionValues("date")).distinct.size === 12)
+    assert(files.map(_.rowCount).sum === 1200)
+    assert(t.toDF.select("id", "v", "date").collect().map(_.toString).sorted ===
+      in.collect().map(_.toString).sorted)
+    // an explicit repartition is the caller's layout: kept as written
+    val u = TxTable.create(spark, new Path(dir, "u"), "u", schema, Seq("date"))
+    u.append(twelveDates().repartition(8))
+    assert(u.snapshot.files.size > 12,
+      s"explicit repartition(8) was re-clustered: ${u.snapshot.files.size} files")
+    assert(u.toDF.count() === 1200)
+  }
+
+  test("SQL INSERT through GraftCatalog lays out one file per date, like a V2 UPDATE") {
+    val wh = freshDir("tx_cluster_sql")
+    spark.conf.set("spark.sql.catalog.graftcl", "graft.catalog.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.graftcl.warehouse", wh)
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS graftcl.ns")
+    spark.sql("CREATE TABLE graftcl.ns.t (id BIGINT, v INT, date DATE) PARTITIONED BY (date)")
+    spark.sql("""INSERT INTO graftcl.ns.t
+                 SELECT id, CAST(id AS INT), date_add(DATE'2026-03-01', CAST(id % 12 AS INT))
+                 FROM range(0, 1200, 1, 4)""")
+    def filesPerDate: Map[String, Int] =
+      new TableCatalog(spark, new Path(wh)).getTable("ns", "t").snapshot.files
+        .groupBy(_.partitionValues("date")).map { case (d, fs) => d -> fs.size }
+    val inserted = filesPerDate
+    assert(inserted.size === 12 && inserted.values.forall(_ == 1),
+      s"INSERT layout: $inserted")
+    // the V2 row-level path (GraftReplaceDataWrite) clusters the same way
+    spark.sql("UPDATE graftcl.ns.t SET v = v + 1")
+    assert(filesPerDate === inserted)
+    assert(spark.sql("SELECT sum(v) FROM graftcl.ns.t").head.getLong(0) ===
+      (0 until 1200).sum + 1200L)
+  }
+
+  test("a declared write order still range-distributes a partitioned write") {
+    import org.apache.spark.sql.types._
+    val cat = new TableCatalog(spark, new Path(freshDir("tx_cluster_order")))
+    val t = cat.createTable("ns", "wo",
+      StructType.fromDDL("id STRING, v INT, date DATE"), Seq("date"))
+    GraftSql.sql(cat, "ALTER TABLE ns.wo WRITE ORDERED BY (v)")
+    t.append(spark.range(0, 1000, 1, 4).select(
+      concat(lit("id"), col("id")).as("id"), col("id").cast("int").as("v"),
+      date_add(lit(java.sql.Date.valueOf("2026-03-01")),
+        (col("id") % 2).cast("int")).as("date")))
+    val byDate = t.snapshot.files.groupBy(_.partitionValues("date"))
+    assert(byDate.size === 2)
+    // a range split on (date, v) over 4 tasks: a date spans several
+    // files (a rebalance on date alone would write one per date) ...
+    assert(byDate.values.exists(_.size > 1), s"not range-split: $byDate")
+    // ... whose v ranges are disjoint
+    byDate.values.foreach { fs =>
+      val ranges = fs.flatMap(_.stats.flatMap(_.get("v")))
+        .map(cs => (cs.min.toLong, cs.max.toLong)).sortBy(_._1)
+      assert(ranges.size === fs.size)
+      ranges.sliding(2).foreach {
+        case Seq(a, b) => assert(a._2 < b._1, s"overlapping file ranges: $ranges")
+        case _ =>
+      }
+    }
+    assert(t.toDF.count() === 1000)
+  }
 }

@@ -1,0 +1,87 @@
+#!/usr/bin/env python3
+"""Per-operation summary of a traced perfbench spans file.
+
+A traced perfbench run (`python3 perfbench/run.py --workload <w> --seed <n>
+--seconds <s> --trace 1`) writes every span it recorded to
+`.bench_build/work/spans-<workload>-<seed>.jsonl`, one JSON object per line:
+`op`, `op_name`, `id`, `parent` (-1 for an operation's root span), `name`,
+`start_ns`, `end_ns`. The run's `per_layer` medians mix every operation
+template; this prints each operation on its own line, so a template that
+runs more jobs than the others (or one slow job) is visible.
+
+Usage:
+    python3 tools/spans_summary.py .bench_build/work/spans-lake_queries-1.jsonl
+
+For each op: total wall time, the `plan.front_door` and `exec.collect`
+times, the number of Spark jobs and each job's time (ms). A closing table
+gives the median of each column per op name.
+"""
+import json
+import statistics
+import sys
+from collections import defaultdict
+
+
+def ms(span):
+    return (span["end_ns"] - span["start_ns"]) / 1e6
+
+
+def load(path):
+    ops = defaultdict(list)
+    with open(path, encoding="utf-8") as f:
+        for line in f:
+            line = line.strip()
+            if line:
+                s = json.loads(line)
+                ops[s["op"]].append(s)
+    return ops
+
+
+def summarize(spans):
+    root = next(s for s in spans if s["parent"] == -1)
+    jobs = sorted((s for s in spans if s["name"] == "exec.job"),
+                  key=lambda s: s["start_ns"])
+
+    def total(name):
+        return sum(ms(s) for s in spans if s["name"] == name)
+
+    return {
+        "name": root["op_name"],
+        "total_ms": ms(root),
+        "front_door_ms": total("plan.front_door"),
+        "collect_ms": total("exec.collect"),
+        "jobs": len(jobs),
+        "job_ms": [ms(j) for j in jobs],
+    }
+
+
+def main(argv):
+    if len(argv) != 2:
+        print(__doc__.strip(), file=sys.stderr)
+        return 2
+    ops = load(argv[1])
+    rows = [(op, summarize(spans)) for op, spans in sorted(ops.items())]
+    print(f"{'op':>10}  {'name':<22} {'total_ms':>9} {'front_ms':>9} "
+          f"{'collect_ms':>10} {'jobs':>4}  job_ms")
+    for op, r in rows:
+        jobs = " ".join(f"{x:.0f}" for x in r["job_ms"])
+        print(f"{op:>10}  {r['name']:<22} {r['total_ms']:>9.1f} "
+              f"{r['front_door_ms']:>9.1f} {r['collect_ms']:>10.1f} "
+              f"{r['jobs']:>4}  {jobs}")
+    by_name = defaultdict(list)
+    for _, r in rows:
+        by_name[r["name"]].append(r)
+    print()
+    print(f"{'median by name':<22} {'ops':>4} {'total_ms':>9} {'front_ms':>9} "
+          f"{'collect_ms':>10} {'jobs':>5}")
+    for name, rs in sorted(by_name.items()):
+        def med(key):
+            return statistics.median(r[key] for r in rs)
+        print(f"{name:<22} {len(rs):>4} {med('total_ms'):>9.1f} "
+              f"{med('front_door_ms'):>9.1f} {med('collect_ms'):>10.1f} "
+              f"{med('jobs'):>5g}")
+    return 0
+
+
+if __name__ == "__main__":
+    sys.exit(main(sys.argv))
