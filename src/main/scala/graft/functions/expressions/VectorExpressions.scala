@@ -2,7 +2,7 @@ package graft.functions.expressions
 
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.types._
 
 /**
@@ -294,6 +294,60 @@ case class SignLshBuckets(child: Expression, hyperplanes: Array[Double],
 }
 
 /**
+ * The cosine arithmetic of the cell kernels ([[ArgMaxCosineCell]],
+ * [[TopCosineCells]]), term for term that of [[CosineSimilarity]] with
+ * the vector on the left and a centroid on the right: dot and squared
+ * norms accumulated in index order, `dot / (sqrt(na) * sqrt(nb))`, and
+ * 0.0 on a zero norm. Centroids are flattened `[cell][dim]`.
+ */
+private[expressions] object CellCosine {
+
+  /** Copies the first `n` elements of `a` into `buf`; false when one of
+    * them is null (only checked when the type admits null elements). */
+  def load(a: ArrayData, n: Int, isFloat: Boolean, elemNullable: Boolean,
+      buf: Array[Double]): Boolean = {
+    var j = 0
+    while (j < n) {
+      if (elemNullable && a.isNullAt(j)) return false
+      buf(j) = if (isFloat) a.getFloat(j).toDouble else a.getDouble(j)
+      j += 1
+    }
+    true
+  }
+
+  /** Σ x² over `buf[0, n)`, in index order. */
+  def sqNorm(buf: Array[Double], n: Int): Double = {
+    var s = 0.0
+    var j = 0
+    while (j < n) { s += buf(j) * buf(j); j += 1 }
+    s
+  }
+
+  /** Per-cell sqrt(Σ c²) over each centroid's first `n` components. */
+  def norms(centroids: Array[Double], nCells: Int, dim: Int,
+      n: Int): Array[Double] = Array.tabulate(nCells) { c =>
+    var nb = 0.0
+    var j = 0
+    while (j < n) {
+      val x = centroids(c * dim + j); nb += x * x; j += 1
+    }
+    math.sqrt(nb)
+  }
+
+  /** cosine(buf[0, n), cell `c`) given both norms, already square-rooted. */
+  def cosine(centroids: Array[Double], dim: Int, c: Int, buf: Array[Double],
+      n: Int, sqna: Double, sqnb: Double): Double = {
+    var dot = 0.0
+    var i = 0
+    while (i < n) {
+      dot += centroids(c * dim + i) * buf(i)
+      i += 1
+    }
+    if (sqna == 0.0 || sqnb == 0.0) 0.0 else dot / (sqna * sqnb)
+  }
+}
+
+/**
  * Argmax-cosine cell assignment against a FIXED centroid matrix
  * (flattened `[cell][dim]`, driver-derived): returns the cell index
  * with the greatest cosine(v, centroid), ties to the LOWEST cell — the
@@ -316,14 +370,8 @@ case class ArgMaxCosineCell(child: Expression, centroids: Array[Double],
   private val dim = centroids.length / nCells
 
   /** per-cell sqrt(Σ c²), accumulated in index order like the kernel */
-  private lazy val centroidNorms: Array[Double] = Array.tabulate(nCells) { c =>
-    var nb = 0.0
-    var j = 0
-    while (j < dim) {
-      val x = centroids(c * dim + j); nb += x * x; j += 1
-    }
-    math.sqrt(nb)
-  }
+  private lazy val centroidNorms: Array[Double] =
+    CellCosine.norms(centroids, nCells, dim, dim)
 
   override def prettyName: String = "argmax_cosine_cell"
   override def dataType: DataType = IntegerType
@@ -345,30 +393,16 @@ case class ArgMaxCosineCell(child: Expression, centroids: Array[Double],
     val n = math.min(dim, a.numElements())
     // buffer the vector once (each element is otherwise re-read
     // through the accessor nCells times; same values, same order —
-    // bit-identical results); the norm accumulates during the copy
+    // bit-identical results)
     val buf = new Array[Double](n)
-    var na = 0.0
-    var j = 0
-    while (j < n) {
-      if (elemNullable && a.isNullAt(j)) return null
-      val x = if (elemIsFloat) a.getFloat(j).toDouble else a.getDouble(j)
-      buf(j) = x
-      na += x * x; j += 1
-    }
-    val sqna = math.sqrt(na)
+    if (!CellCosine.load(a, n, elemIsFloat, elemNullable, buf)) return null
+    val sqna = math.sqrt(CellCosine.sqNorm(buf, n))
     var best = java.lang.Double.NEGATIVE_INFINITY
     var bestCell = 0
     var c = 0
     while (c < nCells) {
-      var dot = 0.0
-      var i = 0
-      while (i < n) {
-        dot += centroids(c * dim + i) * buf(i)
-        i += 1
-      }
-      val cos =
-        if (sqna == 0.0 || centroidNorms(c) == 0.0) 0.0
-        else dot / (sqna * centroidNorms(c))
+      val cos = CellCosine.cosine(centroids, dim, c, buf, n, sqna,
+        centroidNorms(c))
       if (cos > best) { best = cos; bestCell = c }
       c += 1
     }
@@ -431,6 +465,94 @@ case class ArgMaxCosineCell(child: Expression, centroids: Array[Double],
          |${if (elemNullable) s"if (!${ev.isNull}) { $sweep }" else sweep}
        """.stripMargin
     })
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+/**
+ * The IVF probe list of one vector: its `nprobe` best cells against a
+ * FIXED centroid matrix (flattened `[cell][dim]`), as `array<int>` in
+ * exactly the order of the window form
+ * `row_number() OVER (PARTITION BY q ORDER BY cosine DESC, cell ASC)`.
+ * Cosine compares the way Spark sorts doubles (NaN is largest,
+ * -0.0 == 0.0) and ties go to the lowest cell. A null vector or a null
+ * element scores null against every cell, and the window sorts nulls
+ * last, so it probes cells 0 until nprobe. The arithmetic is
+ * [[CellCosine]]'s, over the common prefix of vector and centroid like
+ * [[CosineSimilarity]], so a probe list replays bit for bit in SQL.
+ *
+ * Interpreted only: it runs once per QUERY row, never per corpus row.
+ * [[cellsOf]] is the same kernel for a vector already on the driver.
+ */
+case class TopCosineCells(child: Expression, centroids: Array[Double],
+    nCells: Int, nprobe: Int)
+    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
+    with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
+
+  require(nCells > 0 && centroids.length % nCells == 0,
+    s"bad TopCosineCells shape: ${centroids.length} components for $nCells cells")
+
+  private val dim = centroids.length / nCells
+  private val probes = math.max(0, math.min(nprobe, nCells))
+  private lazy val centroidNorms: Array[Double] =
+    CellCosine.norms(centroids, nCells, dim, dim)
+
+  override def prettyName: String = "top_cosine_cells"
+  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
+  override def nullable: Boolean = false
+
+  private lazy val elemIsFloat: Boolean = child.dataType match {
+    case ArrayType(FloatType, _) => true
+    case ArrayType(DoubleType, _) => false
+    case t => throw new IllegalArgumentException(
+      s"$prettyName expects array<float|double>, got $t")
+  }
+  private lazy val elemNullable: Boolean = child.dataType match {
+    case ArrayType(_, containsNull) => containsNull
+    case _ => false
+  }
+
+  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(
+      cellsOf(child.eval(input).asInstanceOf[ArrayData]))
+
+  /** The probe list of `a` (null: no vector). */
+  def cellsOf(a: ArrayData): Array[Int] = {
+    val out = new Array[Int](probes)
+    if (probes == 0) return out
+    val n = if (a == null) 0 else math.min(dim, a.numElements())
+    val buf = new Array[Double](n)
+    if (a == null || !CellCosine.load(a, n, elemIsFloat, elemNullable, buf)) {
+      var c = 0
+      while (c < probes) { out(c) = c; c += 1 }
+      return out
+    }
+    val sqna = math.sqrt(CellCosine.sqNorm(buf, n))
+    // a vector shorter than the centroids meets each on its prefix
+    val norms =
+      if (n == dim) centroidNorms else CellCosine.norms(centroids, nCells, dim, n)
+    // insertion into the running top list, cells in ascending order: a
+    // cell passes another only when STRICTLY greater, so ties keep the
+    // lower cell first
+    val best = new Array[Double](probes)
+    var filled = 0
+    var c = 0
+    while (c < nCells) {
+      val cos = CellCosine.cosine(centroids, dim, c, buf, n, sqna, norms(c))
+      if (filled < probes ||
+          SQLOrderingUtil.compareDoubles(cos, best(probes - 1)) > 0) {
+        var i = math.min(filled, probes - 1)
+        while (i > 0 && SQLOrderingUtil.compareDoubles(cos, best(i - 1)) > 0) {
+          best(i) = best(i - 1); out(i) = out(i - 1); i -= 1
+        }
+        best(i) = cos; out(i) = c
+        if (filled < probes) filled += 1
+      }
+      c += 1
+    }
+    out
+  }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

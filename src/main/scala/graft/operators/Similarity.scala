@@ -2,7 +2,6 @@ package graft.operators
 
 import graft.functions.VectorFunctions._
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /**
@@ -543,49 +542,63 @@ object Similarity {
        else Nil))
   }
 
-  /** Per-query probe list: the `nprobe` nearest cells via a broadcast
-    * join against the tiny centroid table. */
+  /** Per-query probe list: the `nprobe` nearest cells, as
+    * (query id, query vector, cell) rows. */
   private def probeCells(queries: DataFrame, model: VectorIndexModel,
       nprobe: Int, queryId: String, queryVec: String): DataFrame =
     probeCellsRanked(queries, model, nprobe, queryId, queryVec)
       .drop("__pr")
 
+  /** The probe kernel of `model`: each vector's `nprobe` best cells in
+    * probe order (see [[graft.functions.expressions.TopCosineCells]]). */
+  private def topCells(model: VectorIndexModel, nprobe: Int,
+      vec: org.apache.spark.sql.catalyst.expressions.Expression) =
+    graft.functions.expressions.TopCosineCells(vec,
+      model.centroids.flatten.toArray, model.nCells, nprobe)
+
   /** [[probeCells]] with the probe RANK kept (`__pr` = 1-based position
     * of the cell in the query's sim-desc/cell-asc order) — the fused
     * calibration sweep derives every candidate nprobe's probe set from
-    * one ranked list (`__pr <= candidate`). */
+    * one ranked list (`__pr <= candidate`). One narrow map: each query
+    * row explodes its own probe list, so no join, window or shuffle. */
   private def probeCellsRanked(queries: DataFrame, model: VectorIndexModel,
       nprobe: Int, queryId: String, queryVec: String): DataFrame = {
-    val centSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("cell",
-        org.apache.spark.sql.types.IntegerType),
-      org.apache.spark.sql.types.StructField("__cvec",
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.DoubleType))))
-    val centDf = queries.sparkSession.createDataFrame(
-      java.util.Arrays.asList(model.centroids.zipWithIndex.map {
-        case (cv, c) => org.apache.spark.sql.Row(c, cv) }: _*), centSchema)
-    val pw = Window.partitionBy(col(queryId))
-      .orderBy(col("sim").desc, col("cell").asc)
-    queries.join(broadcast(centDf))
+    val cells = org.apache.spark.sql.graft.ColumnBridge.column(topCells(model,
+      nprobe, org.apache.spark.sql.graft.ColumnBridge.expression(col(queryVec))))
+    queries.select(col(queryId), col(queryVec),
+        posexplode(cells).as(Seq("__pos", "cell")))
       .select(col(queryId), col(queryVec), col("cell"),
-        cosine(col(queryVec), col("__cvec")).as("sim"))
-      .withColumn("__pr", row_number().over(pw))
-      .filter(col("__pr") <= nprobe)
-      .select(col(queryId), col(queryVec), col("cell"), col("__pr"))
+        (col("__pos") + 1).as("__pr"))
   }
 
-  /** The DISTINCT cells a query batch will probe — driver-side, for
-    * pushing a LITERAL `cell IN (…)` filter into a persisted codes
-    * scan: the probe assignment itself is a broadcast join, and a
-    * join's dynamic keys never reach parquet row-group pruning; the
-    * collected set is bounded by min(|queries| × nprobe, nCells). */
-  def probedCellIds(queries: DataFrame, model: VectorIndexModel,
-      nprobe: Int = -1, queryId: String = "query_id",
-      queryVec: String = "query_vec"): Array[Int] = {
+  /** Probe assignment for a query batch already on the driver: the same
+    * kernel as [[probeCells]], evaluated here per row, so it runs no
+    * Spark job. `rows` are (query id, query vector) of `schema`. Returns
+    * the (query id, cell) pairs as a local relation (the `probed`
+    * argument of [[searchIndexed]]) and the distinct probed cells,
+    * sorted — the set a caller pushes into a persisted codes scan as a
+    * LITERAL `cell IN (…)`, which a join's dynamic keys never reach. */
+  def probeOnDriver(spark: org.apache.spark.sql.SparkSession,
+      rows: Seq[org.apache.spark.sql.Row],
+      schema: org.apache.spark.sql.types.StructType, model: VectorIndexModel,
+      nprobe: Int = -1): (DataFrame, Array[Int]) = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
     val np = if (nprobe > 0) nprobe else model.nprobe
-    probeCells(queries, model, np, queryId, queryVec)
-      .select(col("cell")).distinct().collect().map(_.getInt(0)).sorted
+    val kernel = topCells(model, np,
+      org.apache.spark.sql.catalyst.expressions.BoundReference(0,
+        schema(1).dataType, nullable = true))
+    val pairs = rows.flatMap { r =>
+      val vec = if (r.isNullAt(1)) null
+        else new org.apache.spark.sql.catalyst.util.GenericArrayData(
+          r.getSeq[Any](1))
+      kernel.cellsOf(vec).map(c => Row(r.get(0), c))
+    }
+    val pairSchema = StructType(Seq(schema(0), StructField("cell", IntegerType,
+      nullable = false)))
+    (spark.createDataFrame(
+        java.util.Arrays.asList(pairs: _*), pairSchema),
+      pairs.map(_.getInt(1)).distinct.sorted.toArray)
   }
 
   /**
@@ -600,10 +613,16 @@ object Similarity {
       queries: DataFrame, model: VectorIndexModel, k: Int,
       nprobe: Int = -1, rerankTo: Int = -1,
       corpusId: String = "vec_id", corpusVec: String = "embedding",
-      queryId: String = "query_id", queryVec: String = "query_vec"): DataFrame = {
+      queryId: String = "query_id", queryVec: String = "query_vec",
+      /** (query id, cell) probe pairs computed ahead, e.g. by
+        * [[probeOnDriver]]; by default each query's `nprobe` cells are
+        * assigned in the plan */
+      probed: Option[DataFrame] = None): DataFrame = {
     val probeCount = if (nprobe > 0) nprobe else model.nprobe
     val rerank = if (rerankTo >= 0) rerankTo else model.rerankTo
-    val probed = probeCells(queries, model, probeCount, queryId, queryVec)
+    val pairs = probed.getOrElse(
+        probeCells(queries, model, probeCount, queryId, queryVec))
+      .select(col("cell"), col(queryId))
     if (model.codebooks.isEmpty) {
       // plain IVF: exact cosine within probed cells — the corpus joins
       // by id to supply vectors (zero-copy when `indexed` still carries
@@ -615,7 +634,7 @@ object Similarity {
       // probe pairs and query vectors broadcast separately (the fused
       // pair carried each query's vector nprobe× in one relation)
       val scored = cells
-        .join(broadcast(probed.select(col("cell"), col(queryId))), Seq("cell"))
+        .join(broadcast(pairs), Seq("cell"))
         .join(broadcast(queries.select(col(queryId), col(queryVec))),
           Seq(queryId))
         .select(col(queryId), col(corpusId),
@@ -635,7 +654,7 @@ object Similarity {
       val luts = queries.select(col(queryId),
         adcLut(model.codebooks, queryVec, model.dSub).as("__lut"))
       val scored = indexed
-        .join(broadcast(probed.select(col("cell"), col(queryId))), Seq("cell"))
+        .join(broadcast(pairs), Seq("cell"))
         .join(broadcast(luts), Seq(queryId))
         .select(col(queryId), col(corpusId),
           adcScore(col("__lut"), model.m).as("score"))
@@ -1078,14 +1097,9 @@ object Similarity {
         org.apache.spark.sql.graft.ColumnBridge.unpersistAfterFirstUse(cached)
         np
       }
-    val cs = centroidDf(centroids)
-    val probeW = Window.partitionBy(col(queryId))
-      .orderBy(col("__sim").desc, col("cell").asc)
-    val probes = queries.join(broadcast(cs))
-      .withColumn("__sim", cosine(col(queryVec), col("cvec")))
-      .withColumn("__rn", row_number().over(probeW))
-      .filter(col("__rn") <= probeCount)
-      .select(col(queryId), col(queryVec), col("cell"))
+    val probes = probeCells(queries, VectorIndexModel(dim,
+        centroids.map(_._2.toSeq).toSeq, Nil, probeCount, 0),
+      probeCount, queryId, queryVec)
     // probe set is |queries|×nprobe — broadcast it so the bucketed
     // corpus never shuffles (cells is a narrow projection of the scan)
     val scored = cells.join(broadcast(probes), "cell")

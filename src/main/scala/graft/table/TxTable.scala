@@ -1450,6 +1450,15 @@ class TxTable private (
    *    re-rank depth;
    *  - periodic rebuilds keep the exact-scored delta small, like any
    *    secondary index.
+   *
+   * The query batch is collected to the driver once, when this is
+   * called: probes are assigned there by the same kernel the plan form
+   * uses ([[graft.functions.expressions.TopCosineCells]]), and every
+   * query side of the returned plan is a local relation. So building
+   * the plan runs no Spark job for a local batch and one for a
+   * table-backed batch, and the result answers for the batch as it was
+   * at the call. The batch must fit the driver, like the broadcasts of
+   * its vectors and LUTs always had to.
    */
   def vectorSearch(queries: DataFrame, k: Int,
       vecCol: String = "embedding", nprobe: Int = -1, rerankTo: Int = -1,
@@ -1478,16 +1487,24 @@ class TxTable private (
     val current = where.map(current0.filter).getOrElse(current0)
     val codesAll = readCodes(new Path(vectorIndexPath(vecCol), meta.codesDir),
       idCol, meta.codebooks.nonEmpty, s)
-    // push the probed cells as a LITERAL IN filter: the per-query probe
-    // assignment is a broadcast join, whose dynamic keys never reach
-    // parquet row-group pruning — collecting the distinct probed cells
-    // (bounded by min(|queries| × nprobe, nCells); one tiny
-    // queries × centroids job) is what makes "scan only probed cells'
-    // codes" literally true on the cell-sorted sidecar. Skipped when
-    // the batch probes most cells anyway (the filter would prune
-    // nothing and a huge IN list costs planning time).
-    val probedCells = graft.operators.Similarity.probedCellIds(
-      queries, model, nprobe, queryId, queryVec)
+    // the whole batch is broadcast anyway (query vectors for the
+    // re-rank, one m×kCodes LUT per query), so collecting it once adds
+    // no driver-memory bound; it costs no job for a local batch and one
+    // for a table-backed one. Every query side below then reads this
+    // local relation instead of re-reading the source.
+    val batchDf = queries.select(col(queryId), col(queryVec))
+    val batchRows = batchDf.collect().toSeq
+    val batch = spark.createDataFrame(java.util.Arrays.asList(batchRows: _*),
+      batchDf.schema)
+    // probes are assigned right here, with no job, and the distinct
+    // probed cells push into the codes scan as a LITERAL IN filter: the
+    // probe pairs join the codes by a broadcast join, whose dynamic keys
+    // never reach parquet row-group pruning, so the literal is what
+    // makes "scan only probed cells' codes" true on the cell-sorted
+    // sidecar. Skipped when the batch probes most cells anyway (the
+    // filter would prune nothing and a huge IN list costs planning time).
+    val (probed, probedCells) = Similarity.probeOnDriver(spark, batchRows,
+      batchDf.schema, model, nprobe)
     val codes0 =
       if (probedCells.length * 2 >= meta.centroids.size) codesAll
       else codesAll.filter(col("cell").isin(probedCells.map(Int.box): _*))
@@ -1498,8 +1515,9 @@ class TxTable private (
       case Some(_) =>
         codes0.join(current.select(col(idCol)), Seq(idCol), "left_semi")
     }
-    val indexedTop = Similarity.searchIndexed(codes, current, queries,
-        model, k, nprobe, rerank, idCol, vecCol, queryId, queryVec)
+    val indexedTop = Similarity.searchIndexed(codes, current, batch,
+        model, k, nprobe, rerank, idCol, vecCol, queryId, queryVec,
+        probed = Some(probed))
       .select(col(queryId), col(idCol), col("score"))
     // files the index does NOT cover (appends since the build, and any
     // RESTORE-re-added files from before it — path-set membership, see
@@ -1512,7 +1530,7 @@ class TxTable private (
       else {
         val delta0 = dfFor(s.copy(files = deltaFiles))
         val delta = where.map(delta0.filter).getOrElse(delta0)
-        val deltaTop = Similarity.bruteForceTopK(delta, queries, k,
+        val deltaTop = Similarity.bruteForceTopK(delta, batch, k,
             idCol, vecCol, queryId, queryVec)
           .select(col(queryId), col(idCol), col("score"))
         indexedTop.unionByName(deltaTop)

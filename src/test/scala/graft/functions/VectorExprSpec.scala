@@ -94,4 +94,80 @@ class VectorExprSpec extends SparkSpec {
     assert(th.getInt(1) === 8)
     assert(!th.isNullAt(2))
   }
+
+  test("TopCosineCells equals the probe window: ties, zero/NaN/null vectors, nprobe >= nCells") {
+    import graft.functions.expressions.TopCosineCells
+    import graft.operators.Similarity
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.graft.ColumnBridge
+    import org.apache.spark.sql.types._
+    val dim = 6
+    val rnd = new scala.util.Random(7)
+    val base = Seq.fill(8)(Seq.fill(dim)(rnd.nextGaussian()))
+    // cells 8, 9 and 11 duplicate cells 2 and 5 (exact cosine ties);
+    // cell 10 is a zero centroid, which scores 0.0 against everything
+    val cents = base ++ Seq(base(2), base(5), Seq.fill(dim)(0.0), base(2))
+    val nCells = cents.size
+    val centDf = cents.zipWithIndex.map { case (c, i) => (i, c.toArray) }
+      .toDF("cell", "cvec")
+    val vecs = (0 until 24).map {
+      case 0 => Seq.fill(dim)(0.0)
+      case 1 => Seq.fill(dim)(rnd.nextGaussian()).updated(3, Double.NaN)
+      case 2 => base(2)
+      case 3 => base(2).map(_ * -1.0)
+      case _ => Seq.fill(dim)(rnd.nextGaussian())
+    }
+    val dbl = (vecs.map(v => Option(v.toArray)) :+ None).zipWithIndex
+      .map { case (v, i) => (i.toLong, v) }.toDF("q", "v")
+    val flt = dbl.select(col("q"),
+      col("v").cast(ArrayType(FloatType, containsNull = false)).as("v"))
+    val nullElem = Seq((100L, Array(Option(1.0), None, Option(2.0),
+      Option(0.5), Option(-1.0), Option(3.0)))).toDF("q", "v")
+
+    def window(qs: DataFrame, n: Int): Map[Long, Seq[Int]] = {
+      val w = Window.partitionBy(col("q"))
+        .orderBy(col("sim").desc, col("cell").asc)
+      qs.crossJoin(centDf)
+        .select(col("q"), col("cell"),
+          VectorFunctions.cosine(col("v"), col("cvec")).as("sim"))
+        .withColumn("pr", row_number().over(w)).filter(col("pr") <= n)
+        .collect().groupBy(_.getLong(0)).map { case (q, rs) =>
+          q -> rs.sortBy(_.getInt(3)).map(_.getInt(1)).toSeq }
+    }
+    def kernel(qs: DataFrame, n: Int): Map[Long, Seq[Int]] =
+      qs.select(col("q"), ColumnBridge.column(TopCosineCells(
+          ColumnBridge.expression(col("v")), cents.flatten.toArray, nCells, n)))
+        .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
+    def driver(qs: DataFrame, n: Int): Map[Long, Seq[Int]] = {
+      val model = Similarity.VectorIndexModel(dim, cents, Nil, n, 0)
+      val (pairs, cells) = Similarity.probeOnDriver(spark,
+        qs.collect().toSeq, qs.schema, model)
+      val got = pairs.collect().groupBy(_.getLong(0)).map { case (q, rs) =>
+        q -> rs.map(_.getInt(1)).toSeq }
+      assert(cells.toSeq === got.values.flatten.toSeq.distinct.sorted)
+      got
+    }
+    def checkAll(): Unit =
+      for (qs <- Seq(dbl, flt, nullElem); n <- Seq(1, 3, nCells, nCells + 5)) {
+        val expected = window(qs, n)
+        assert(kernel(qs, n) === expected, s"kernel, nprobe $n")
+        assert(driver(qs, n) === expected, s"driver, nprobe $n")
+      }
+    // the inputs reach every ordering rule the window applies
+    val w = window(dbl, nCells)
+    assert(w(2L).take(3) === Seq(2, 8, 11), "duplicated centroids tie, lowest first")
+    assert(w(1L).take(nCells - 1).toSet === (0 until nCells).toSet - 10,
+      "NaN sorts above every number")
+    assert(w(0L) === (0 until nCells) && w(24L) === (0 until nCells),
+      "zero vector (all 0.0) and null vector (all null) keep cell order")
+    checkAll() // codegen
+    spark.conf.set("spark.sql.codegen.wholeStage", "false")
+    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    try checkAll() // interpreted
+    finally {
+      spark.conf.set("spark.sql.codegen.wholeStage", "true")
+      spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
+    }
+  }
 }

@@ -36,6 +36,34 @@ class VectorIndexSpec extends SparkSpec {
     (exact & got).size.toDouble / exact.size
   }
 
+  /** `body`'s result and the Spark jobs it started, counted by a
+    * SparkListener. A marker job after `body` drains the listener bus:
+    * a listener gets events in order, so once the marker's JobStart
+    * arrives every job of `body` has arrived too. */
+  private def withJobCount[A](body: => A): (A, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val marker = "graft.test.drainListener"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty(marker) != null)
+          drained.countDown()
+        else jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      sc.setLocalProperty(marker, "1")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty(marker, null)
+      assert(drained.await(30, java.util.concurrent.TimeUnit.SECONDS),
+        "listener bus did not drain")
+      (out, jobs.get())
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("build + search: calibrated persisted index meets the recall target") {
     val t = embTable("vecidx_recall")
     val np = t.buildVectorIndex("vec_id", "embedding", dim = 64)
@@ -175,6 +203,60 @@ class VectorIndexSpec extends SparkSpec {
     assert(plan.contains("In(cell"),
       s"no pushed IN(cell) filter on the codes scan:\n${plan.take(2000)}")
     assert(df.count() === 10L)
+  }
+
+  test("vectorSearch plans with no Spark job and runs at most 7") {
+    // probes are assigned on the driver over the collected batch, so
+    // no job runs before the DataFrame exists; the plan then probes,
+    // scores and re-ranks in few jobs
+    val t = embTable("vecidx_jobs")
+    t.buildVectorIndex("vec_id", "embedding", dim = 64)
+    val q0 = queriesFrom(t, 16)
+    val queries = spark.createDataFrame(
+      java.util.Arrays.asList(q0.collect(): _*), q0.schema)
+    assert(queries.count() === 16L)
+    val (df, planJobs) = withJobCount(t.vectorSearch(queries, k = 10))
+    val (rows, runJobs) = withJobCount(df.collect())
+    info(s"jobs: $planJobs planning, $runJobs collect")
+    assert(planJobs === 0, "vectorSearch ran a Spark job before returning")
+    assert(runJobs <= 7, s"vectorSearch ran $runJobs jobs")
+    // the same rows as the plan-side probe over the reloaded codes
+    val meta = t.vectorIndexMeta("embedding").get
+    val model = Similarity.VectorIndexModel(meta.dim, meta.centroids,
+      meta.codebooks, meta.nprobe, meta.rerankTo)
+    val codes = spark.read.parquet(new Path(t.root,
+      s"_index/vector_embedding/${meta.codesDir}").toString)
+    val expected = Similarity.searchIndexed(codes, t.toDF, queries, model, 10)
+      .select("query_id", "vec_id", "score", "rank")
+      .as[(Long, Long, Double, Int)].collect().toSet
+    val got = rows.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
+      r.getInt(3))).toSet
+    assert(got.size === 160 && got === expected)
+  }
+
+  test("vector_search TVF reads a table-backed query relation once: its query sides are local") {
+    import org.apache.spark.sql.execution.LocalTableScanExec
+    val cat = new TableCatalog(spark, new Path(freshDir("vecidx_tvf_local_wh")))
+    val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
+    val t = cat.createTable("vec", "t", emb.schema, Nil)
+    t.append(emb)
+    t.buildVectorIndex("vec_id", "embedding", dim = 64)
+    val queries = queriesFrom(t, 5)
+    val q = cat.createTable("vec", "q", queries.schema, Nil)
+    q.append(queries)
+    val qRoot = q.root.toUri.getPath
+    // a file scan, V1 or V2, names its root paths in its Location
+    def scansOfQ(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.sparkPlan.collectLeaves().filter(_.toString.contains(qRoot))
+    // the check sees a scan of the query table where there is one
+    assert(scansOfQ(GraftSql.sql(cat, "SELECT * FROM vec.q")).nonEmpty)
+    val got = GraftSql.sql(cat,
+      "SELECT * FROM vector_search('vec.t', 'vec.q', 10)")
+    val leaves = got.queryExecution.sparkPlan.collectLeaves()
+    assert(scansOfQ(got).isEmpty,
+      s"the search plan re-reads the query table:\n${got.queryExecution.sparkPlan}")
+    assert(leaves.exists(_.isInstanceOf[LocalTableScanExec]))
+    assert(got.count() === 50L)
   }
 
   test("build/refresh_vector_index are callable as V2 procedures") {

@@ -13,7 +13,10 @@ Usage:
     python3 tools/spans_summary.py .bench_build/work/spans-lake_queries-1.jsonl
 
 For each op: total wall time, the `plan.front_door` and `exec.collect`
-times, the number of Spark jobs and each job's time (ms). A closing table
+times, the number of Spark jobs, split into those that ran under
+`plan.front_door` (`front_jobs`: work done before the DataFrame exists)
+and under `exec.collect` (`collect_jobs`), and each job's time (ms). A
+job belongs to the innermost span containing its start. A closing table
 gives the median of each column per op name.
 """
 import json
@@ -42,8 +45,19 @@ def summarize(spans):
     jobs = sorted((s for s in spans if s["name"] == "exec.job"),
                   key=lambda s: s["start_ns"])
 
+    by_id = {s["id"]: s for s in spans}
+
     def total(name):
         return sum(ms(s) for s in spans if s["name"] == name)
+
+    def jobs_under(name):
+        def under(span):
+            while span["parent"] != -1:
+                span = by_id[span["parent"]]
+                if span["name"] == name:
+                    return True
+            return False
+        return sum(1 for j in jobs if under(j))
 
     return {
         "name": root["op_name"],
@@ -51,6 +65,8 @@ def summarize(spans):
         "front_door_ms": total("plan.front_door"),
         "collect_ms": total("exec.collect"),
         "jobs": len(jobs),
+        "front_jobs": jobs_under("plan.front_door"),
+        "collect_jobs": jobs_under("exec.collect"),
         "job_ms": [ms(j) for j in jobs],
     }
 
@@ -62,24 +78,28 @@ def main(argv):
     ops = load(argv[1])
     rows = [(op, summarize(spans)) for op, spans in sorted(ops.items())]
     print(f"{'op':>10}  {'name':<22} {'total_ms':>9} {'front_ms':>9} "
-          f"{'collect_ms':>10} {'jobs':>4}  job_ms")
+          f"{'collect_ms':>10} {'jobs':>4} {'front_jobs':>10} "
+          f"{'collect_jobs':>12}  job_ms")
     for op, r in rows:
         jobs = " ".join(f"{x:.0f}" for x in r["job_ms"])
         print(f"{op:>10}  {r['name']:<22} {r['total_ms']:>9.1f} "
               f"{r['front_door_ms']:>9.1f} {r['collect_ms']:>10.1f} "
-              f"{r['jobs']:>4}  {jobs}")
+              f"{r['jobs']:>4} {r['front_jobs']:>10} "
+              f"{r['collect_jobs']:>12}  {jobs}")
     by_name = defaultdict(list)
     for _, r in rows:
         by_name[r["name"]].append(r)
     print()
     print(f"{'median by name':<22} {'ops':>4} {'total_ms':>9} {'front_ms':>9} "
-          f"{'collect_ms':>10} {'jobs':>5}")
+          f"{'collect_ms':>10} {'jobs':>5} {'front_jobs':>10} "
+          f"{'collect_jobs':>12}")
     for name, rs in sorted(by_name.items()):
         def med(key):
             return statistics.median(r[key] for r in rs)
         print(f"{name:<22} {len(rs):>4} {med('total_ms'):>9.1f} "
               f"{med('front_door_ms'):>9.1f} {med('collect_ms'):>10.1f} "
-              f"{med('jobs'):>5g}")
+              f"{med('jobs'):>5g} {med('front_jobs'):>10g} "
+              f"{med('collect_jobs'):>12g}")
     return 0
 
 
