@@ -1,19 +1,13 @@
 package graft.catalog
 
-import graft.table.TxTable
+import graft.table.{DataFile, TableWriter, TxTable}
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
 import org.apache.spark.sql.connector.expressions.{Expressions, SortOrder}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, PhysicalWriteInfo, RequiresDistributionAndOrdering, Write, WriterCommitMessage}
-import org.apache.spark.sql.graft.{ParquetWriteBundle, RowSink}
 import org.apache.spark.sql.types._
-
-import java.util.UUID
-import scala.collection.mutable
 
 /**
  * The group-based `ReplaceData` write behind native `UPDATE` / `MERGE
@@ -23,14 +17,13 @@ import scala.collection.mutable
  *  - the operation's SCAN records exactly which snapshot files it
  *    listed (SnapshotFileIndex capture, post partition-pruning) — those
  *    are the replaced groups;
- *  - executors write replacement rows as partitioned parquet THROUGH
- *    Spark's own `ParquetFileFormat` writer ([[ParquetWriteBundle]]),
- *    routing rows to `<col>=<value>` directories exactly as the table's
- *    batch writer does (updated partition values move rows for free);
- *  - the driver commit describes the new files from their footers
- *    (row counts + min/max stats, same as every other commit) and CAS
- *    commits `kept ∪ new` against the snapshot the statement planned
- *    on — a concurrent writer fails the statement, never corrupts it.
+ *  - executors write replacement rows through the table's own writer
+ *    ([[TableWriter]]), routing rows to `<col>=<value>` directories
+ *    exactly as every table write does (updated partition values move
+ *    rows for free), and describe each file from its footer;
+ *  - the driver commit CAS commits `kept ∪ new` against the snapshot
+ *    the statement planned on — a concurrent writer fails the
+ *    statement, never corrupts it.
  *
  * The write declares a CLUSTERED distribution on the partition columns,
  * so Spark shuffles replacement rows partition-wise first — without it
@@ -47,13 +40,6 @@ class GraftReplaceDataWrite(
     capturedFiles: () => Set[String])
   extends Write with RequiresDistributionAndOrdering {
 
-  private val dataDir = new Path(tx.root, "data")
-  // identity partition values live in the directory name only; a
-  // DERIVED field's source column is ordinary data and stays in the file
-  private val identityCols = partSpec.filter(_.isIdentity).map(_.name).toSet
-  private val dataSchema =
-    StructType(writeSchema.filterNot(f => identityCols.contains(f.name)))
-
   override def description(): String = s"graft-replace-data($operation)"
 
   override def requiredDistribution(): Distribution =
@@ -67,78 +53,57 @@ class GraftReplaceDataWrite(
   override def requiredOrdering(): Array[SortOrder] = Array.empty
 
   override def toBatch: BatchWrite = new BatchWrite {
-    private val bundle = new ParquetWriteBundle(tx.spark, dataSchema)
+    private val writer = new TableWriter(tx.spark, new Path(tx.root, "data"),
+      writeSchema, partSpec, zoneId)
 
     override def createBatchWriterFactory(
         info: PhysicalWriteInfo): DataWriterFactory =
-      new GraftDataWriterFactory(bundle, dataDir.toString, writeSchema,
-        partSpec, zoneId)
+      new GraftDataWriterFactory(writer)
 
     override def commit(messages: Array[WriterCommitMessage]): Unit = {
-      val newFiles = tx.describeDataFiles(messages.toSeq
-        .collect { case m: GraftFileMessage => m.files }.flatten)
       val replaced = capturedFiles()
       val snap = tx.snapshotAt(snapVersion)
       val kept = snap.files.filterNot(f => replaced.contains(f.path))
-      tx.commitReplace(snapVersion, operation, kept ++ newFiles)
+      tx.commitReplace(snapVersion, operation,
+        kept ++ GraftFileMessage.files(messages))
     }
 
     override def abort(messages: Array[WriterCommitMessage]): Unit =
-      tx.deleteDataFiles(messages.toSeq
-        .collect { case m: GraftFileMessage => m.files }.flatten.map(_._1))
+      tx.deleteDataFiles(GraftFileMessage.files(messages).map(_.path))
   }
 }
 
-/** (snapshot-relative path, partition values) per file written. */
-case class GraftFileMessage(files: Seq[(String, Map[String, String])])
-  extends WriterCommitMessage
+/** The finished files (stats included) one writing task produced. */
+case class GraftFileMessage(files: Seq[DataFile]) extends WriterCommitMessage
 
-class GraftDataWriterFactory(
-    bundle: ParquetWriteBundle,
-    dataDir: String,
-    writeSchema: StructType,
-    partSpec: Seq[graft.table.PartField],
-    zoneId: String) extends DataWriterFactory {
+object GraftFileMessage {
+  def files(messages: Array[WriterCommitMessage]): Seq[DataFile] =
+    messages.toSeq.collect { case m: GraftFileMessage => m.files }.flatten
+}
+
+/** Batch and streaming writer factory: one writer per task, or per
+  * (task, epoch). */
+class GraftDataWriterFactory(writer: TableWriter) extends DataWriterFactory
+    with org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
 
   override def createWriter(partitionId: Int,
       taskId: Long): DataWriter[InternalRow] =
-    new GraftDataWriter(bundle, dataDir, writeSchema, partSpec, zoneId,
-      partitionId, taskId)
-}
-
-/** Streaming flavor of the same writers — one per (task, epoch). */
-class GraftStreamingWriterFactory(
-    bundle: ParquetWriteBundle,
-    dataDir: String,
-    writeSchema: StructType,
-    partSpec: Seq[graft.table.PartField],
-    zoneId: String)
-  extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
+    new GraftDataWriter(writer, partitionId, taskId)
 
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): DataWriter[InternalRow] =
-    new GraftDataWriter(bundle, dataDir, writeSchema, partSpec, zoneId,
-      partitionId, taskId)
+    createWriter(partitionId, taskId)
 }
 
 /**
- * Executor-side dynamic-partition writer: routes each row to the sink
- * for its partition directory (opened lazily, one file per directory
- * per task — the upstream clustered distribution keeps that near one
- * per task), writing the NON-partition columns only; partition values
- * live in the directory name, exactly like the batch `partitionBy`
- * path, so readers see one uniform layout.
+ * The V2 face of the table layer's [[TableWriter]]: routes each row to
+ * the task's writer, which writes the non-partition columns to one file
+ * per partition directory (the layout every table write produces).
  */
 class GraftDataWriter(
-    bundle: ParquetWriteBundle,
-    dataDir: String,
-    writeSchema: StructType,
-    partSpec: Seq[graft.table.PartField],
-    zoneId: String,
+    writer: TableWriter,
     partitionId: Int,
     taskId: Long) extends DataWriter[InternalRow] {
-
-  private val identityCols = partSpec.filter(_.isIdentity).map(_.name).toSet
 
   // The incoming layout depends on which writing task Spark picked:
   // with a metadata projection it hands rows ALREADY projected to the
@@ -148,107 +113,27 @@ class GraftDataWriter(
   // with the operation column present, rows flagged DELETE (1) are
   // skipped rather than written (group-based COW streams mark every
   // keeper WRITE/WRITE_WITH_METADATA).
+  private var task: TableWriter.Task = _
   private var opOffset: Int = -1
-  private def projFor(offset: Int) = UnsafeProjection.create(
-    writeSchema.fields.zipWithIndex
-      .filterNot { case (f, _) => identityCols.contains(f.name) }
-      .map { case (f, i) => BoundReference(i + offset, f.dataType, f.nullable) })
-  private var dataProj: UnsafeProjection = _
-  // partition field name -> row-to-string renderer (identity: the V1
-  // rendering of the column value; derived: the shared transform
-  // expression over the SOURCE column — one definition everywhere)
-  private var partFields: Seq[(String, InternalRow => String)] = _
-
-  private def bind(row: InternalRow): Unit = {
-    opOffset = row.numFields - writeSchema.length
-    require(opOffset == 0 || opOffset == 1,
-      s"unexpected replace-data row arity ${row.numFields} for " +
-        s"schema ${writeSchema.fieldNames.mkString(",")}")
-    dataProj = projFor(opOffset)
-    partFields = partSpec.map { f =>
-      val i = writeSchema.fieldIndex(f.source)
-      val dt = writeSchema(i).dataType
-      val ord = i + opOffset
-      if (f.isIdentity)
-        (f.name, (row: InternalRow) =>
-          PartitionRender(if (row.isNullAt(ord)) null else row.get(ord, dt), dt))
-      else
-        (f.name, graft.table.PartitionTransform.rowEval(f, ord, dt, zoneId))
-    }
-  }
-
-  // dirRel -> (sink, partitionValues, relPath)
-  private val sinks =
-    mutable.LinkedHashMap.empty[String, (RowSink, Map[String, String], String)]
 
   override def write(row: InternalRow): Unit = {
-    if (opOffset < 0) bind(row)
+    if (task == null) {
+      opOffset = row.numFields - writer.width
+      require(opOffset == 0 || opOffset == 1,
+        s"unexpected replace-data row arity ${row.numFields} for a " +
+          s"${writer.width}-column write schema")
+      task = writer.task(partitionId, taskId, opOffset)
+    }
     // RowDeltaUtils.DELETE_OPERATION = 1 — a row the rewrite drops
     // (group-based COW streams mark keepers 5/6, WRITE[_WITH_METADATA])
     if (opOffset == 1 && !row.isNullAt(0) && row.getInt(0) == 1) return
-    val partVals: Map[String, String] = partFields.map { case (c, eval) =>
-      c -> eval(row)
-    }.toMap
-    val dirRel = partFields.map { case (c, _) =>
-      s"$c=${ExternalCatalogUtils.escapePathName(partVals(c))}"
-    }.mkString("/")
-    val (sink, _, _) = sinks.getOrElseUpdate(dirRel, {
-      val rel = (if (dirRel.isEmpty) "" else s"$dirRel/") +
-        s"${UUID.randomUUID().toString}.parquet"
-      (bundle.open(new Path(dataDir, rel).toString, partitionId, taskId),
-        partVals, rel)
-    })
-    sink.write(dataProj(row))
+    task.write(row)
   }
 
-  private var closed = false
-  private def closeAll(): Unit = if (!closed) {
-    closed = true
-    sinks.values.foreach(s => try s._1.close() catch { case _: Throwable => () })
-  }
+  override def commit(): WriterCommitMessage =
+    GraftFileMessage(if (task == null) Nil else task.commit())
 
-  override def commit(): WriterCommitMessage = {
-    closeAll()
-    GraftFileMessage(sinks.values.map(v => (v._3, v._2)).toSeq)
-  }
+  override def abort(): Unit = if (task != null) task.abort()
 
-  override def abort(): Unit = {
-    closeAll()
-    val fs = new Path(dataDir).getFileSystem(bundle.hadoopConf)
-    sinks.values.foreach(v =>
-      try fs.delete(new Path(new Path(dataDir), v._3), false)
-      catch { case _: Throwable => () })
-  }
-
-  override def close(): Unit = closeAll()
-}
-
-/** CATALYST-INTERNAL-value rendering of a partition value that matches
-  * TxTable's external-value `partitionValueString` byte for byte — the
-  * directory name and snapshot `partitionValues` ARE the partition value
-  * contract. Shared by the row-level V2 writer (per-row dynamic
-  * routing) and the partition-scoped INSERT OVERWRITE predicate
-  * translation. */
-object PartitionRender {
-  def apply(v: Any, dt: DataType): String =
-    if (v == null) "__HIVE_DEFAULT_PARTITION__"
-    else dt match {
-      case DateType =>
-        java.time.LocalDate.ofEpochDay(v.asInstanceOf[Int].toLong).toString
-      case StringType | IntegerType | LongType | ShortType | ByteType |
-           BooleanType | DoubleType | FloatType => v.toString
-      case _: DecimalType =>
-        v.asInstanceOf[org.apache.spark.sql.types.Decimal]
-          .toBigDecimal.bigDecimal.toPlainString
-      case TimestampType =>
-        // internal micros → java.sql.Timestamp.toString, the rendering
-        // the V1 append path's partitionValueString produced for the
-        // same row — keeps row-level DML and partition overwrite
-        // working on tables the append path created with a timestamp
-        // partition column
-        org.apache.spark.sql.catalyst.util.DateTimeUtils
-          .toJavaTimestamp(v.asInstanceOf[Long]).toString
-      case other => throw new UnsupportedOperationException(
-        s"partition column type $other not supported by the V2 write")
-    }
+  override def close(): Unit = ()
 }

@@ -1,6 +1,6 @@
 package graft.catalog
 
-import graft.table.TxTable
+import graft.table.{PartitionRender, TableWriter, TxTable}
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame}
@@ -157,7 +157,7 @@ class GraftV2Table(val tx: TxTable, val asOfVersion: Option[Long] = None)
     // differently-typed literal is a different hash)
     val partFilter = v1.collect {
       case sources.EqualTo(a, v) if partSpec.exists(f => f.isIdentity && f.name == a) =>
-        a -> tx.partitionValueString(v)
+        a -> tx.partitionValueString(v, fullSchema(a).dataType)
     }.toMap
     // hidden partitioning: project source-column comparisons onto the
     // derived partitions (bucket equality, day/hour ranges) so the COW
@@ -533,7 +533,8 @@ class GraftV2Table(val tx: TxTable, val asOfVersion: Option[Long] = None)
             case (r: NamedReference,
                   v: org.apache.spark.sql.connector.expressions.Literal[_])
                 if r.fieldNames.length == 1 && partCols(r.fieldNames()(0)) =>
-              Some(r.fieldNames()(0) -> PartitionRender(v.value, v.dataType))
+              Some(r.fieldNames()(0) ->
+                PartitionRender(v.value, v.dataType, zoneId))
             case _ => None
           }
         p.name() match {
@@ -592,27 +593,20 @@ class GraftV2Table(val tx: TxTable, val asOfVersion: Option[Long] = None)
               s"!= table schema ${fullSchema.fieldNames.mkString(",")}")
           val queryId = info.queryId()
           new streaming.StreamingWrite {
-            private val identityCols =
-              partSpec.filter(_.isIdentity).map(_.name).toSet
-            private val bundle = new org.apache.spark.sql.graft.ParquetWriteBundle(
-              tx.spark, StructType(schema.filterNot(f =>
-                identityCols.contains(f.name))))
+            // one writer (and write token) per micro-batch: Spark asks
+            // for a factory once per epoch
             override def createStreamingWriterFactory(
                 pInfo: org.apache.spark.sql.connector.write.PhysicalWriteInfo)
                 : streaming.StreamingDataWriterFactory =
-              new GraftStreamingWriterFactory(bundle,
-                new Path(tx.root, "data").toString, schema,
-                partSpec, zoneId)
+              new GraftDataWriterFactory(new TableWriter(tx.spark,
+                new Path(tx.root, "data"), schema, partSpec, zoneId))
             override def commit(epochId: Long,
-                messages: Array[org.apache.spark.sql.connector.write.WriterCommitMessage]): Unit = {
-              val newFiles = tx.describeDataFiles(messages.toSeq
-                .collect { case m: GraftFileMessage => m.files }.flatten)
-              tx.commitAppendFiles(newFiles, Some((queryId, epochId)))
-            }
+                messages: Array[org.apache.spark.sql.connector.write.WriterCommitMessage]): Unit =
+              tx.commitAppendFiles(GraftFileMessage.files(messages),
+                Some((queryId, epochId)))
             override def abort(epochId: Long,
                 messages: Array[org.apache.spark.sql.connector.write.WriterCommitMessage]): Unit =
-              tx.deleteDataFiles(messages.toSeq
-                .collect { case m: GraftFileMessage => m.files }.flatten.map(_._1))
+              tx.deleteDataFiles(GraftFileMessage.files(messages).map(_.path))
           }
         }
       }

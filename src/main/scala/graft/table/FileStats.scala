@@ -1,7 +1,7 @@
 package graft.table
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
@@ -36,8 +36,25 @@ object FileStats {
     * filters on (kfs/scripts/update_metadata.py:100-112,
     * kfs/README.md:177-179) — without leaf stats those predicates skip
     * nothing at file or manifest level. One footer read serves both. */
-  def collect(file: Path, conf: Configuration): (Long, Map[String, ColStats]) = {
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+  def collect(file: Path, conf: Configuration): (Long, Map[String, ColStats]) =
+    collect(HadoopInputFile.fromPath(file, conf))
+
+  /** The [[DataFile]] record of the file at `status`, from its footer.
+    * An unreadable footer leaves the file without stats (row count -1);
+    * a fatal error (OOM, interrupt) propagates. */
+  def describe(path: String, partitionValues: Map[String, String],
+      status: FileStatus, conf: Configuration): DataFile = {
+    val (rowCount, stats) =
+      try {
+        val (rc, st) = collect(HadoopInputFile.fromStatus(status, conf))
+        (rc, Some(st))
+      } catch { case scala.util.control.NonFatal(_) => (-1L, None) }
+    DataFile(path, partitionValues, rowCount = rowCount,
+      sizeBytes = status.getLen, stats = stats)
+  }
+
+  private def collect(file: HadoopInputFile): (Long, Map[String, ColStats]) = {
+    val reader = ParquetFileReader.open(file)
     try {
       val footer = reader.getFooter
       val schema = footer.getFileMetaData.getSchema

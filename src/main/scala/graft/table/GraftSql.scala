@@ -2906,50 +2906,18 @@ object GraftSql {
     }.toMap
   }
 
-  /** Cast a SQL literal's text through `dt` and re-render it the way
-    * snapshot `partitionValues` are rendered (dates as yyyy-MM-dd,
-    * numbers without leading zeros). None = unparseable → caller skips
-    * pruning on that conjunct. */
+  /** Cast a SQL literal's text through `dt` (in the session zone, the
+    * zone the row predicate evaluates in) and render it the way snapshot
+    * `partitionValues` are rendered ([[PartitionRender]]). None =
+    * unparseable → caller skips pruning on that conjunct. */
   private def canonicalPartitionLiteral(raw: String,
       dt: org.apache.spark.sql.types.DataType,
       sessionZone: String = "UTC"): Option[String] = {
     import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
-    import org.apache.spark.sql.types._
-    // Only types whose INTERNAL value renders identically to the row
-    // value `partitionValueString` saw at write time may prune. Anything
-    // else (TimestampNTZ, binary, intervals, …) returns None — the
-    // conjunct is dropped and the rewrite scans every file, which is
-    // always correct. A TimestampType internal value is epoch MICROS, so
-    // bare `.toString` would yield '1704067200000000' while the stored
-    // value is java.sql.Timestamp's '2024-01-01 00:00:00.0'. It gets its
-    // own branch: parse the literal in the SESSION zone (the same zone
-    // the row predicate evaluates in, so the pruned instant IS the
-    // matched instant) and render via java.sql.Timestamp.toString (the
-    // rendering the write-side partitionValueString produced).
-    val zone = dt match {
-      case TimestampType => sessionZone
-      case _             => "UTC"
-    }
-    val v = try Cast(Literal(raw), dt, Some(zone)).eval() catch {
+    val v = try Cast(Literal(raw), dt, Some(sessionZone)).eval() catch {
       case _: Exception => null
     }
-    Option(v).flatMap { value =>
-      (dt, value) match {
-        case (DateType, days: Int) =>
-          Some(java.time.LocalDate.ofEpochDay(days.toLong).toString)
-        case (TimestampType, micros: Long) =>
-          Some(org.apache.spark.sql.catalyst.util.DateTimeUtils
-            .toJavaTimestamp(micros).toString)
-        case (StringType | BooleanType | ByteType | ShortType |
-              IntegerType | LongType | FloatType | DoubleType, other) =>
-          Some(other.toString)           // UTF8String/number render as stored
-        case (d: DecimalType, dec: org.apache.spark.sql.types.Decimal) =>
-          // Decimal.toString is the scaled BigDecimal — same rendering
-          // as the java.math.BigDecimal the row-side collect produced
-          Some(dec.toBigDecimal.setScale(d.scale).toString)
-        case _ => None                   // unknown rendering → no pruning
-      }
-    }
+    Option(v).map(PartitionRender(_, dt, sessionZone))
   }
 
   /** Split on a top-level keyword separator (e.g. AND) outside quotes

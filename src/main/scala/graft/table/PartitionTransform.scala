@@ -20,8 +20,8 @@ import org.apache.spark.sql.types._
  * consumer, which is what makes the three sites provably consistent:
  *  - the bulk write path derives partition columns on the DataFrame
  *    ([[derive]] — the same expression, analyzed/codegen'd);
- *  - the V2 row-level writer evaluates it per row over a
- *    [[BoundReference]] ([[rowEval]] — interpreted eval);
+ *  - the file writer ([[TableWriter]]) evaluates it per row over a
+ *    [[BoundReference]] when the rows do not carry the derived column;
  *  - scan pruning evaluates it over a pushed literal
  *    ([[renderLiteral]]) and compares against stored partition values.
  *
@@ -100,8 +100,7 @@ object PartitionTransform {
    */
   def exprFor(f: PartField, child: Expression, childType: DataType,
       zoneId: String): Expression = f.transform match {
-    case Identity =>
-      Cast(child, StringType, Option(zoneId))
+    case Identity => identity(child, zoneId)
     case t if DatePatterns.contains(t) =>
       val ts = childType match {
         case TimestampType => child
@@ -126,6 +125,12 @@ object PartitionTransform {
       }
     case other => throw new IllegalArgumentException(s"unknown transform '$other'")
   }
+
+  /** The identity transform: Spark's own cast to string in the session
+    * zone — the rendering Spark's V1 file writer names its partition
+    * directories with, so tables it wrote keep matching. */
+  def identity(child: Expression, zoneId: String): Expression =
+    Cast(child, StringType, Option(zoneId))
 
   /** Column form of [[exprFor]] over an arbitrary source column
     * (alias-qualified in join contexts). */
@@ -226,17 +231,6 @@ object PartitionTransform {
     }
   }
 
-  /** Per-row evaluator over an InternalRow layout (the V2 row-level
-    * writer): `ordinal`/`dt` locate the SOURCE column. */
-  def rowEval(f: PartField, ordinal: Int, dt: DataType,
-      zoneId: String): InternalRow => String = {
-    val expr = exprFor(f, BoundReference(ordinal, dt, nullable = true), dt, zoneId)
-    row => {
-      val v = expr.eval(row)
-      if (v == null) "__HIVE_DEFAULT_PARTITION__" else v.toString
-    }
-  }
-
   /** Render the partition value a source-column literal (CATALYST-
     * internal representation) falls into — the pruning primitive. None
     * when the transform cannot evaluate the value (pruning is then
@@ -246,7 +240,7 @@ object PartitionTransform {
     try {
       val v = exprFor(f, Literal(internalValue, dt), dt, zoneId)
         .eval(InternalRow.empty)
-      Option(v).map(_.toString)
+      Option(v).map(PartitionRender.stored)
     } catch { case _: Exception => None }
 
   /**
@@ -322,6 +316,29 @@ object PartitionTransform {
       if (allowed.isEmpty && lo.isEmpty && hi.isEmpty) None
       else Some(PartConstraint(f.name, allowed, lo, hi))
     }
+}
+
+/**
+ * The ONE rendering of a partition value, as the writer names its
+ * directories and the snapshot records it in `partitionValues`: the
+ * partition field's transform output ([[PartitionTransform.exprFor]]),
+ * with null and the empty string both stored as Hive's default-partition
+ * name. Every comparison against stored values — MERGE's touched
+ * partitions, static overwrite, delete and runtime pruning — renders its
+ * value here.
+ */
+object PartitionRender {
+  val Default = "__HIVE_DEFAULT_PARTITION__"
+
+  /** A rendered transform output (a string, or null) as stored. */
+  def stored(rendered: Any): String =
+    if (rendered == null || rendered.toString.isEmpty) Default
+    else rendered.toString
+
+  /** The stored value of Catalyst-internal value `v` of type `dt`. */
+  def apply(v: Any, dt: DataType, zoneId: String): String =
+    stored(PartitionTransform.identity(Literal(v, dt), zoneId)
+      .eval(InternalRow.empty))
 }
 
 /**

@@ -406,12 +406,12 @@ object TxLog {
   implicit private val fmts: Formats = DefaultFormats
 
   // ---- in-flight write protection (r17) ------------------------------
-  // File/dir NAMES (UUID-unique) of THIS process's writes between
-  // staging and commit: the async maintenance lane overlaps live
-  // writers BY DESIGN, so a same-process vacuum must never reclaim
-  // them however short the orphan grace — without this, a background
-  // sweep with orphanGraceMs=0 deletes a racing append's staging dir
-  // mid-write. [[commit]] releases a name the moment its path is
+  // Write tokens and file/dir NAMES (UUID-unique) of THIS process's
+  // writes between their first file and their commit: the async
+  // maintenance lane overlaps live writers BY DESIGN, so a same-process
+  // vacuum must never reclaim them however short the orphan grace —
+  // without this, a background sweep with orphanGraceMs=0 deletes a
+  // racing append's files mid-write. [[commit]] releases a name the moment its path is
   // referenced by a published header; entries also age out (a write
   // longer than the window, or one that crashed before committing,
   // falls back to the documented grace-must-exceed-longest-write
@@ -446,14 +446,34 @@ object TxLog {
     Option(inFlightScopes.remove(scope))
       .foreach(_.forEach(n => inFlightNames.remove(n)))
 
-  private[table] def inFlightProtected(name: String): Boolean = {
+  /** A fresh write token, registered in-flight before the write it
+    * names creates any file: [[TableWriter]] puts it in every file name,
+    * so one registration protects all of that write's files. */
+  private[table] def newWriteToken(): String = {
+    val t = java.util.UUID.randomUUID().toString
+    registerInFlight(t)
+    t
+  }
+
+  private val WriteTokenRe =
+    "[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}".r
+
+  private def registered(name: String): Boolean = {
     val t = inFlightNames.get(name)
     t != null && System.currentTimeMillis() - t < InFlightProtectMs
   }
 
-  private def releaseInFlight(rel: String): Unit = {
+  /** Whether `name` (a file or directory name) belongs to an in-flight
+    * write of this process: registered itself, or carrying a registered
+    * write token. */
+  private[table] def inFlightProtected(name: String): Boolean =
+    registered(name) || WriteTokenRe.findFirstIn(name).exists(registered)
+
+  private[table] def releaseInFlight(rel: String): Unit = {
     val i = rel.lastIndexOf('/')
-    inFlightNames.remove(if (i < 0) rel else rel.substring(i + 1))
+    val name = if (i < 0) rel else rel.substring(i + 1)
+    inFlightNames.remove(name)
+    WriteTokenRe.findFirstIn(name).foreach(inFlightNames.remove)
   }
 
   /** Highest header format this build can read: 1 = inline layout,

@@ -2441,16 +2441,15 @@ class TxTable private (
     require(schemaOf(s).fieldNames.contains(keyColumn),
       s"key column '$keyColumn' is not in the table schema")
     val keys = dfFor(s).filter(predicate).select(col(keyColumn)).distinct()
-    val rel = s"eq-delete-${java.util.UUID.randomUUID()}.parquet"
-    val target = new Path(deletesDir, rel)
     // one file: delete sets are small by contract (large deletes →
-    // copy-on-write delete())
-    keys.coalesce(1).write.mode("overwrite").parquet(target.toString)
-    val count = spark.read.parquet(target.toString).count()
-    if (count == 0) {
-      fs.delete(target, true)
-      return s.version                       // nothing matched: no commit
-    }
+    // copy-on-write delete()); none when nothing matched
+    val written = TableWriter.run(keys.coalesce(1), new TableWriter(spark,
+      deletesDir, keys.schema, Nil,
+      spark.sessionState.conf.sessionLocalTimeZone, prefix = "eq-delete-"))
+    if (written.isEmpty) return s.version    // nothing matched: no commit
+    val rel = written.head.path
+    val target = new Path(deletesDir, rel)
+    val count = written.head.rowCount
     // a key type EqKeyStore cannot load executor-side has exactly one
     // read path: a driver-side collect of the whole key set at every
     // scan. Past the inline cap that collect is unbounded (r9 VERDICT
@@ -2470,7 +2469,7 @@ class TxTable private (
       else writeChangeData(dfFor(s).filter(predicate)
         .select(schemaOf(s).map(f => col(f.name)) :+
           lit("delete").as("_change_type"): _*))
-    retryingCommit("DELETE_MOR") { expected =>
+    val v = retryingCommit("DELETE_MOR") { expected =>
       val cur = snapshotAt(expected)
       commit(Some(expected), "DELETE_MOR", schemaOf(cur),
         cur.partitionColumns, cur.files,
@@ -2478,6 +2477,8 @@ class TxTable private (
           EqualityDeleteFile(rel, keyColumn, expected + 1, count),
         changeFiles = cdfFiles)
     }
+    TxLog.releaseInFlight(rel) // referenced by the commit from here on
+    v
   }
 
   // ---- stored change data feed (CDF) -----------------------------------
@@ -2519,28 +2520,18 @@ class TxTable private (
 
   /** Write one commit's change rows (table columns + `_change_type`) as
     * parquet under `_change_data/`; returns the relative names the
-    * commit records in [[Snapshot.changeFiles]]. Files are invisible
-    * until that commit wins its CAS — a failed commit strands them as
-    * orphans, reclaimed by [[vacuum]] exactly like unreferenced data
-    * files. Unpartitioned on purpose: a commit's change set is
+    * commit records in [[Snapshot.changeFiles]] — at least one, so a
+    * DML commit that changed no row still replays as stored (empty)
+    * change data. Files are invisible until that commit wins its CAS —
+    * a failed commit strands them as orphans, reclaimed by [[vacuum]]
+    * exactly like unreferenced data files. Unpartitioned on purpose: a commit's change set is
     * O(changes), and the reader addresses files by commit, never by
     * partition directory. */
   private def writeChangeData(df: DataFrame): Seq[String] = {
-    val staging = new Path(root, s"_staging/${UUID.randomUUID().toString}")
-    TxLog.registerInFlight(staging.getName)
-    df.write.mode("overwrite").parquet(staging.toString)
-    val f = fs
-    f.mkdirs(changeDataDir)
-    val moved = f.listStatus(staging).toSeq
-      .filter(_.getPath.getName.endsWith(".parquet"))
-      .map { st =>
-        val rel = s"${UUID.randomUUID().toString}.parquet"
-        TxLog.registerInFlight(rel)
-        f.rename(st.getPath, new Path(changeDataDir, rel))
-        rel
-      }
-    f.delete(staging, true)
-    moved
+    val writer = new TableWriter(spark, changeDataDir, df.schema, Nil,
+      spark.sessionState.conf.sessionLocalTimeZone)
+    val files = TableWriter.run(df, writer)
+    (if (files.nonEmpty) files else Seq(writer.emptyFile())).map(_.path)
   }
 
   /**
@@ -2706,9 +2697,9 @@ class TxTable private (
       schemaOf(s), spark.sessionState.conf.sessionLocalTimeZone)
 
   /** Write `df`'s rows as new immutable files under data/, partitioned by
-    * the table's partition columns; returns their DataFile descriptors.
-    * Files are invisible to readers until referenced by a committed
-    * snapshot, so this move is not required to be atomic. */
+    * the table's partition columns (derived ones already columns of
+    * `df`); returns their DataFile descriptors. Files are invisible to
+    * readers until referenced by a committed snapshot. */
   private def writeFiles(df: DataFrame, partitionColumns: Seq[String]): Seq[DataFile] = {
     // Declared write sort order (the Iceberg WRITE ORDERED BY surface):
     // range-distribute on (partition cols, order cols) and sort within
@@ -2742,76 +2733,9 @@ class TxTable private (
         val keys = (partCols ++ sortCols).distinct.map(col)
         df.repartitionByRange(n, keys: _*).sortWithinPartitions(keys: _*)
       }
-    val staging = new Path(root, s"_staging/${UUID.randomUUID().toString}")
-    TxLog.registerInFlight(staging.getName)
-    val writer = clustered.write.mode("overwrite")
-    (if (partitionColumns.nonEmpty) writer.partitionBy(partitionColumns: _*) else writer)
-      .parquet(staging.toString)
-
-    val f = fs
-    // move each part file into data/ under its partition dir with a unique name
-    def collect(p: Path, parts: Map[String, String]): Seq[(String, Map[String, String], Path, Long)] = {
-      f.listStatus(p).toSeq.flatMap { st =>
-        val nm = st.getPath.getName
-        if (st.isDirectory && nm.contains("=")) {
-          val Array(k, v) = nm.split("=", 2)
-          collect(st.getPath, parts + (k -> unescapePath(v)))
-        } else if (nm.endsWith(".parquet")) {
-          val dataName = s"${UUID.randomUUID().toString}.parquet"
-          val rel = (partitionColumns.flatMap(c => parts.get(c).map(v => s"$c=${escapePath(v)}"))
-            :+ dataName).mkString("/")
-          // moved-but-uncommitted window: a same-process vacuum racing
-          // this write must not see the file as an orphan
-          TxLog.registerInFlight(dataName)
-          val target = new Path(dataDir, rel)
-          f.mkdirs(target.getParent)
-          f.rename(st.getPath, target)
-          Some((rel, parts, target, st.getLen))
-        } else None
-      }
-    }
-    val moved = collect(staging, Map.empty)
-    f.delete(staging, true)
-    describeFiles(moved.map { case (rel, parts, target, len) =>
-      (rel, parts, target, Some(len)) })
-  }
-
-  /** Describe data files already written under data/ — used by the V2
-    * ReplaceData and streaming writes, whose executors write files
-    * directly and hand back (path, partition) pairs. */
-  private[graft] def describeDataFiles(
-      files: Seq[(String, Map[String, String])]): Seq[DataFile] = {
-    files.foreach { case (rel, _) => TxLog.registerInFlight(new Path(rel).getName) }
-    describeFiles(files.map { case (rel, parts) =>
-      (rel, parts, new Path(dataDir, rel), None) })
-  }
-
-  /** DataFile descriptors for written files: (log path, partition
-    * values, file, size when already known). One footer read per file
-    * yields both row count and min/max stats (free metadata — the
-    * writer already computed it — that drives file skipping and
-    * size-aware planning). The reads are independent, so they run
-    * concurrently instead of serially on the driver. An unreadable
-    * footer leaves the file without stats (row count -1); a fatal
-    * error (OOM, interrupt) propagates. */
-  private def describeFiles(
-      files: Seq[(String, Map[String, String], Path, Option[Long])]): Seq[DataFile] = {
-    import java.util.concurrent.{CompletableFuture, CompletionException}
-    val pending = files.map { case (rel, parts, file, size) =>
-      CompletableFuture.supplyAsync(() => {
-        val len = size.getOrElse(fs.getFileStatus(file).getLen)
-        val (rowCount, stats) =
-          try {
-            val (rc, st) = FileStats.collect(file, conf)
-            (rc, Some(st))
-          } catch { case scala.util.control.NonFatal(_) => (-1L, None) }
-        DataFile(rel, parts, rowCount = rowCount, sizeBytes = len, stats = stats)
-      }, scala.concurrent.ExecutionContext.global)
-    }
-    pending.map { p =>
-      try p.join()
-      catch { case e: CompletionException => throw e.getCause }
-    }
+    TableWriter.run(clustered, new TableWriter(spark, dataDir, clustered.schema,
+      partitionColumns.map(c => PartField(c, PartitionTransform.Identity, c)),
+      spark.sessionState.conf.sessionLocalTimeZone))
   }
 
   /**
@@ -2915,12 +2839,9 @@ class TxTable private (
     if (rows > 0) counted.map(_.sizeBytes).sum.toDouble / rows else 256.0
   }
 
-  // Use Spark's own Hive-style partition-path escaping so directory
-  // names written by partitionBy, the snapshot's partitionValues, and
-  // the read path's partition inference all agree (URLEncoder would
-  // diverge: '+' ↔ space corruption).
-  private def escapePath(v: String): String =
-    org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(v)
+  // Spark's own Hive-style partition-path unescaping, the inverse of
+  // the writer's directory names (URLEncoder would diverge: '+' ↔ space
+  // corruption).
   private def unescapePath(v: String): String =
     org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName(v)
 
@@ -3526,8 +3447,9 @@ class TxTable private (
             s"as table type ${t.sql}")
       }
     }
-    val newFiles = describeFiles(fresh.map { case (st, vals) =>
-      (st.getPath.toString, vals, st.getPath, Some(st.getLen)) })
+    // files the engine did not write: the driver reads their footers
+    val newFiles = fresh.par.map { case (st, vals) =>
+      FileStats.describe(st.getPath.toString, vals, st, conf) }.seq
     val v = retryingCommit("ADD_FILES") { expected =>
       val cur = snapshotAt(expected)
       val curPaths = cur.files.map(_.path).toSet
@@ -3691,8 +3613,7 @@ class TxTable private (
           .groupBy(parts.map(col): _*)
           .agg(org.apache.spark.sql.functions.count(lit(1)).as("__n"),
             keyList.as("__k")).collect()
-        (perPart.map(r => parts.zipWithIndex.map { case (c, i) =>
-          c -> partitionValueString(r.get(i)) }.toMap).toSet,
+        (perPart.map(partitionValuesOf(_, parts)).toSet,
           perPart.map(r => r.getLong(parts.size)).sum,
           perPart.toSeq.flatMap(_.getSeq[Any](parts.size + 1)))
       }
@@ -3996,8 +3917,7 @@ class TxTable private (
         else pass1.filter(col("__graft_m"))
           .select(parts.map(c => col(s"__graft_p_$c")): _*).distinct()
           .collect()
-          .map(r => parts.zipWithIndex.map { case (c, i) =>
-            c -> partitionValueString(r.get(i)) }.toMap).toSet
+          .map(partitionValuesOf(_, parts)).toSet
       val rewriteNeeded = matched.nonEmpty || notMatchedBySource.nonEmpty
       val affected =
         if (!rewriteNeeded) Seq.empty[DataFile]        // pure-INSERT merge
@@ -4562,9 +4482,10 @@ class TxTable private (
    * files are gone — reads of vacuumed versions fail, as in
    * Delta/Iceberg retention. Returns the number of files removed.
    *
-   * Two safeguards protect concurrent writers (writeFiles renames files
-   * into data/ BEFORE its CAS commit, so an unreferenced file may be a
-   * commit in flight, not garbage):
+   * Two safeguards protect concurrent writers (files land in data/
+   * BEFORE their CAS commit, so an unreferenced file may be a commit in
+   * flight, not garbage), besides this process's own in-flight writes
+   * ([[TxLog.inFlightProtected]]):
    *  - files modified within `graceMillis` are never deleted
    *    (Delta-style retention grace — covers staged-but-uncommitted
    *    files);
@@ -4619,11 +4540,12 @@ class TxTable private (
       vacuumStaging(cutoffMs)
   }
 
-  /** Reap `_staging/` leftovers from crashed writes: every write path
-    * stages under a fresh UUID and deletes it after the move, so any
-    * staging dir older than the grace window is an abandoned write
-    * (nothing committed references staging paths — snapshots only ever
-    * point into data/). Same contract as the data-file sweep: the
+  /** Reap `_staging/` leftovers from crashed writes: the vector-codes
+    * refresh and the synthesized overwrite deletes stage under a fresh
+    * UUID and delete it after the move (their readers list a directory,
+    * so files must appear there whole), so any staging dir older than
+    * the grace window is an abandoned write (nothing committed
+    * references staging paths). Same contract as the data-file sweep: the
     * grace window must exceed the longest in-flight write. */
   private def vacuumStaging(cutoffMs: Long): Int = {
     val f = fs
@@ -5476,7 +5398,9 @@ class TxTable private (
     var removed = 0
     f.listStatus(deletesDir).foreach { st =>
       if (!referenced.contains(st.getPath.getName) &&
-          st.getModificationTime < cutoffMs && f.delete(st.getPath, true))
+          st.getModificationTime < cutoffMs &&
+          !TxLog.inFlightProtected(st.getPath.getName) &&
+          f.delete(st.getPath, true))
         removed += 1
     }
     removed
@@ -5680,11 +5604,19 @@ class TxTable private (
     throw new IllegalStateException("unreachable")
   }
 
-  private[graft] def partitionValueString(v: Any): String = v match {
-    case null => "__HIVE_DEFAULT_PARTITION__"
-    case d: java.sql.Date => d.toString
-    case other => other.toString
-  }
+  /** The stored partition value of external (`Row`) value `v` of the
+    * partition column type `dt` (see [[PartitionRender]]). */
+  private[graft] def partitionValueString(v: Any,
+      dt: org.apache.spark.sql.types.DataType): String =
+    PartitionRender(
+      org.apache.spark.sql.catalyst.expressions.Literal.create(v, dt).value,
+      dt, spark.sessionState.conf.sessionLocalTimeZone)
+
+  /** `parts`' stored values from the leading fields of a collected row. */
+  private def partitionValuesOf(r: org.apache.spark.sql.Row,
+      parts: Seq[String]): Map[String, String] =
+    parts.zipWithIndex.map { case (c, i) =>
+      c -> partitionValueString(r.get(i), r.schema(i).dataType) }.toMap
 }
 
 /** The change-feed gap contract (see [[TxTable.changeFeed]]): a commit

@@ -1115,8 +1115,9 @@ private[graft] object RuntimePartitionFilter {
     }
     def render(e: VExpr): Option[String] = e match {
       case l: VLit[_] =>
-        try Some(_root_.graft.catalog.PartitionRender(l.value, l.dataType))
-        catch { case _: UnsupportedOperationException => None }
+        try Some(_root_.graft.table.PartitionRender(l.value, l.dataType,
+          org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone))
+        catch { case scala.util.control.NonFatal(_) => None }
       case _ => None
     }
     val cs = p.children()

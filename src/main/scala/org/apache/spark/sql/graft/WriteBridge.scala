@@ -34,9 +34,9 @@ final class SerializableHadoopConf(@transient var value: Configuration)
  * A serializable recipe for opening Spark's OWN parquet row writers on
  * executors — the `private[sql]` machinery behind every Spark parquet
  * write (`ParquetFileFormat.prepareWrite` → `OutputWriterFactory`),
- * packaged for the graft V2 connector's group-based `ReplaceData`
- * write. Built on the driver (captures the session's parquet conf:
- * compression, timestamp mode, rebase handling, write support class);
+ * packaged for the table writer (`graft.table.TableWriter`). Built on
+ * the driver (captures the session's parquet conf: compression,
+ * timestamp mode, rebase handling, write support class);
  * `open` runs on executors with a per-task Hadoop attempt context.
  *
  * Lives in `org.apache.spark.sql` because `OutputWriterFactory` /

@@ -507,4 +507,48 @@ class HiddenPartitionSpec extends SparkSpec {
       assert(t.toDF.columns.toSeq === Seq("id", "v"))
     }
   }
+
+  test("one partition rendering: append, INSERT and UPDATE agree per type; merge keeps one row per key") {
+    withCatalog("render") { wh =>
+      spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.render")
+      val cat = new TableCatalog(spark, new Path(wh))
+      // (column type, partition-value literals); NULL is added to each
+      val cases = Seq(
+        "DATE" -> Seq("DATE'2024-01-01'", "DATE'1999-12-31'"),
+        "TIMESTAMP" -> Seq("TIMESTAMP'2024-01-01 10:00:00'",
+          "TIMESTAMP'2024-01-01 10:00:00.5'"),
+        "TIMESTAMP_NTZ" -> Seq("TIMESTAMP_NTZ'2024-01-01 10:00:00'",
+          "TIMESTAMP_NTZ'2024-06-01 23:59:59.123'"),
+        "STRING" -> Seq("''", "'a/b=c d'", "'x'"),
+        "INT" -> Seq("1", "-7"),
+        "BIGINT" -> Seq("5000000000", "2"),
+        "DECIMAL(10,2)" -> Seq("1.5", "-20.25"),
+        "BOOLEAN" -> Seq("true", "false"),
+        "DOUBLE" -> Seq("1.5", "1.0E10"))
+      cases.zipWithIndex.foreach { case ((tpe, lits), n) =>
+        val values = (lits :+ "NULL").zipWithIndex.map { case (l, i) =>
+          s"('k$i', $i, CAST($l AS $tpe))" }.mkString(", ")
+        def layout(t: TxTable): Set[(Map[String, String], String)] =
+          t.snapshot.files.map(f =>
+            (f.partitionValues, f.path.substring(0, f.path.lastIndexOf('/')))).toSet
+        Seq("a", "b").foreach(x => spark.sql(
+          s"CREATE TABLE graft.render.$x$n (k STRING, v INT, p $tpe) PARTITIONED BY (p)"))
+        val a = cat.getTable("render", s"a$n")
+        a.append(spark.sql(s"SELECT * FROM VALUES $values AS r(k, v, p)"))
+        spark.sql(s"INSERT INTO graft.render.b$n VALUES $values")
+        val expected = layout(a)
+        assert(layout(cat.getTable("render", s"b$n")) === expected, s"$tpe: INSERT")
+        spark.sql(s"UPDATE graft.render.b$n SET v = v + 100")
+        assert(layout(cat.getTable("render", s"b$n")) === expected, s"$tpe: UPDATE")
+        // the keyed merge finds each key's partition from its rendered
+        // value: a rendering mismatch would leave the old row behind
+        a.merge(spark.sql(s"SELECT k, v + 10 AS v, p FROM VALUES $values AS r(k, v, p)"),
+          "k", "v")
+        val perKey = a.toDF.groupBy("k").count().collect()
+        assert(perKey.length === lits.size + 1 && perKey.forall(_.getLong(1) === 1L),
+          s"$tpe: merge left ${perKey.mkString(", ")}")
+        assert(a.toDF.filter(col("v") < 10).count() === 0, s"$tpe: merge lost an update")
+      }
+    }
+  }
 }

@@ -17,6 +17,9 @@ import org.apache.hadoop.util.Progressable
  *    parse failure);
  *  - `append()` is unsupported (S3 objects are immutable).
  *
+ * Every create is recorded too, so specs can assert where files were
+ * written.
+ *
  * `create(overwrite=false)` stands in for the service-side conditional
  * PUT (`If-None-Match`) that [[TxLog.FsCreateProtocol]] expects on
  * non-`file:` schemes — the same primitive the reference's
@@ -35,6 +38,14 @@ class MockS3FileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
       delete(src, true)
   }
 
+  // RawLocalFileSystem funnels its create paths through this overload
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int,
+      replication: Short, blockSize: Long,
+      progress: Progressable): FSDataOutputStream = {
+    MockS3FileSystem.creates.add(f.toString)
+    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+  }
+
   override def append(f: Path, bufferSize: Int,
       progress: Progressable): FSDataOutputStream =
     throw new UnsupportedOperationException(
@@ -44,4 +55,6 @@ class MockS3FileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
 object MockS3FileSystem {
   /** Every rename routed through the mock, as "src -> dst" strings. */
   val renames = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  /** Every path created through the mock. */
+  val creates = new java.util.concurrent.ConcurrentLinkedQueue[String]()
 }

@@ -24,6 +24,7 @@ class ObjectStoreSpec extends SparkSpec {
   test("full table lifecycle on an object-store-shaped filesystem") {
     val root = new Path(s"s3mock://${freshDir("s3mock_e2e")}/t")
     MockS3FileSystem.renames.clear()
+    MockS3FileSystem.creates.clear()
     val t = TxTable.create(spark, root, "s3.t",
       Schemas.transactions, Seq("date"))
     val seed = SampleData.transactions(spark, 80, seed = 50L)
@@ -45,17 +46,27 @@ class ObjectStoreSpec extends SparkSpec {
     assert(t.count() === 80 - nHigh)
     // time travel across the same log
     assert(t.asOf(1).count() === 80)
-    // the COMMIT PATH never published a version slot via rename: every
-    // recorded rename is a data/staging/change-data move (or an index-
-    // chunk cache write, whose reader tolerates torn copies) — the
-    // version slots went through the conditional-PUT protocol
+    // the COMMIT PATH never published a version slot via rename (a
+    // recorded rename is an index-chunk cache write, whose reader
+    // tolerates torn copies) — the version slots went through the
+    // conditional-PUT protocol
     val headerRenames = MockS3FileSystem.renames.asScala
       .filter(r => r.split("->")(1).contains("/_log/") &&
         r.split("->")(1).contains(".metadata.json"))
     assert(headerRenames.isEmpty,
       s"log headers published via rename: ${headerRenames.take(3)}")
-    assert(MockS3FileSystem.renames.asScala.nonEmpty,
-      "expected data-file staging moves to route through the mock")
+    // data and change files are written once, in place: no rename
+    // moves one into data/ or _change_data/, and every live data file
+    // was created through the mock at its final path
+    val fileRenames = MockS3FileSystem.renames.asScala.map(_.split("->")(1))
+      .filter(d => d.contains("/t/data/") || d.contains("/t/_change_data/"))
+    assert(fileRenames.isEmpty,
+      s"data/change files published via rename: ${fileRenames.take(3)}")
+    val created = MockS3FileSystem.creates.asScala.toSeq
+    t.snapshot.files.foreach { f =>
+      assert(created.exists(_.endsWith(s"/t/data/${f.path}")),
+        s"data file ${f.path} was not created through the mock")
+    }
   }
 
   test("multi-table transaction commits atomically over s3mock") {

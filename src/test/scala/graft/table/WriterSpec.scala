@@ -1,0 +1,189 @@
+package graft.table
+
+import graft.SparkSpec
+import graft.ingest.SampleData
+import graft.model.Schemas
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+
+/**
+ * The executor-side write path ([[TableWriter]]): what a crash at any
+ * file-system call leaves behind, empty writes, and the in-flight guard
+ * that keeps a same-process vacuum off a write still running.
+ */
+class WriterSpec extends SparkSpec {
+
+  spark.sparkContext.hadoopConfiguration
+    .set("fs.crashfs.impl", classOf[CrashFs].getName)
+
+  private def rowsOf(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
+  /** Relative paths of every parquet file below `dir`. */
+  private def parquetUnder(fs: org.apache.hadoop.fs.FileSystem,
+      dir: Path, rel: String = ""): Set[String] =
+    if (!fs.exists(dir)) Set.empty
+    else fs.listStatus(dir).toSet.flatMap { (st: org.apache.hadoop.fs.FileStatus) =>
+      val r = rel + st.getPath.getName
+      if (st.isDirectory) parquetUnder(fs, st.getPath, r + "/")
+      else if (r.endsWith(".parquet")) Set(r) else Set.empty[String]
+    }
+
+  /** The table state every crash point starts from: two appends (so
+    * compaction has files to merge), change feed on. */
+  private def template(wh: String): Unit = {
+    val t = new TableCatalog(spark, new Path(wh)).createTable("c", "t",
+      Schemas.transactions, Seq("date"),
+      properties = Map(TxTable.ChangeFeedProperty -> "true"))
+    t.append(SampleData.transactions(spark, 30, seed = 301L))
+    t.append(SampleData.transactions(spark, 10, seed = 302L))
+  }
+
+  private val ops: Seq[(String, TxTable => Unit)] = Seq(
+    "append" -> (_.append(SampleData.transactions(spark, 12, seed = 303L))),
+    "cow merge" -> { t =>
+      val batch = SampleData.transactions(spark, 30, seed = 301L)
+        .orderBy("transaction_id").limit(8)
+        .withColumn("processing_timestamp", col("processing_timestamp") + 1L)
+        .unionByName(SampleData.transactions(spark, 4, seed = 304L))
+      t.merge(batch, "transaction_id", "processing_timestamp")
+    },
+    "overwrite" -> (_.overwrite(SampleData.transactions(spark, 9, seed = 305L))),
+    "compact" -> (_.compact()))
+
+  test("crash-point sweep: append, COW merge with change feed, overwrite, compact") {
+    val tpl = freshDir("crash_template")
+    template(tpl)
+    ops.foreach { case (name, op) =>
+      var run = 0
+      // a copy of the template on crashfs, opened through a fresh catalog
+      def copy(): Path = {
+        run += 1
+        val dir = freshDir(s"crash_${name.replace(' ', '_')}_$run")
+        org.apache.commons.io.FileUtils.copyDirectory(
+          new java.io.File(tpl), new java.io.File(dir))
+        new Path(s"crashfs://$dir")
+      }
+      def open(wh: Path) = new TableCatalog(spark, wh).getTable("c", "t")
+      val dry = copy()
+      val before = rowsOf(open(dry).toDF)
+      CrashFs.reset()
+      op(open(dry))
+      val calls = CrashFs.count
+      val after = rowsOf(open(dry).toDF)
+      assert(calls > 0, s"$name: the dry run wrote nothing")
+      val points = (0 until 5).map(i => 1 + i * (calls - 1) / 4).distinct
+      info(s"$name: $calls mutating calls, crashed at ${points.mkString(", ")}")
+      points.foreach { n =>
+        val wh = copy()
+        val t0 = open(wh)
+        CrashFs.reset(n)
+        try op(t0) catch { case scala.util.control.NonFatal(_) => () }
+        finally CrashFs.reset()
+        val label = s"$name crashed at call $n of $calls"
+        // the crashed process is gone, and its in-flight registrations
+        // with it: from here on only the log says what is live
+        TxLog.inFlightNames.clear()
+        val t = open(wh)
+        val rows = rowsOf(t.toDF)
+        assert(rows == before || rows == after, s"$label: partial state")
+        val fs = t.root.getFileSystem(spark.sessionState.newHadoopConf())
+        val head = t.snapshot
+        head.files.foreach(f => assert(
+          fs.exists(new Path(t.root, s"data/${f.path}")),
+          s"$label: live data file ${f.path} was deleted"))
+        head.changeFiles.foreach(c => assert(
+          fs.exists(new Path(t.root, s"_change_data/$c")),
+          s"$label: live change file $c was deleted"))
+        t.vacuum(retainVersions = 1, graceMillis = 0)
+        assert(parquetUnder(fs, new Path(t.root, "data")) ===
+          t.snapshot.files.map(_.path).toSet, s"$label: orphans survive vacuum")
+        assert(parquetUnder(fs, new Path(t.root, "_change_data"))
+          .subsetOf(t.snapshot.changeFiles.toSet),
+          s"$label: orphan change files survive vacuum")
+        assert(parquetUnder(fs, new Path(t.root, "_staging")).isEmpty,
+          s"$label: staging leftovers survive vacuum")
+        assert(rowsOf(open(wh).toDF) === rows, s"$label: vacuum changed rows")
+      }
+    }
+  }
+
+  test("empty frames: append and overwrite write no file and read back empty") {
+    Seq(Nil, Seq("date")).foreach { parts =>
+      val root = new Path(freshDir(s"empty_write_${parts.size}"))
+      val t = TxTable.create(spark, root, "t", Schemas.transactions, parts)
+      val seed = SampleData.transactions(spark, 20, seed = 310L)
+      t.append(seed)
+      val filesBefore = t.snapshot.files.toSet
+      val schemaBefore = t.toDF.schema
+      val empty = seed.limit(0)
+      t.append(empty)
+      assert(t.snapshot.files.toSet === filesBefore)
+      assert(t.toDF.count() === 20 && t.count() === 20)
+      assert(t.toDF.schema === schemaBefore)
+      t.overwrite(empty)
+      assert(t.snapshot.files.isEmpty)
+      assert(t.toDF.count() === 0 && t.count() === 0)
+      assert(t.toDF.schema === schemaBefore)
+      assert(t.asOf(1).count() === 20)
+    }
+  }
+
+  test("a change-feed commit that changed no row still replays") {
+    val t = TxTable.create(spark, new Path(freshDir("empty_change_data")), "t",
+      Schemas.transactions, Seq("date"),
+      properties = Map(TxTable.ChangeFeedProperty -> "true"))
+    t.append(SampleData.transactions(spark, 10, seed = 311L))
+    // deleting an absent key commits a MERGE with no change rows
+    val ghost = SampleData.transactions(spark, 1, seed = 311L)
+      .withColumn("transaction_id", lit("TXN_GHOST"))
+      .withColumn("_deleted", lit(true))
+    val v = t.merge(ghost, "transaction_id", "processing_timestamp",
+      deleteCol = Some("_deleted"))
+    assert(v === 2L && t.snapshot.changeFiles.size === 1)
+    assert(t.changeFeed(v, v).count() === 0)
+  }
+
+  test("in-flight guard: a grace-0 vacuum racing a held-open write deletes none of its files") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val root = new Path(freshDir("inflight_guard"))
+    val t = TxTable.create(spark, root, "t",
+      org.apache.spark.sql.types.StructType.fromDDL("id BIGINT, v BIGINT"), Nil)
+    t.append(spark.range(0, 5).select(col("id"), col("id").as("v")))
+    WriterSpec.reached = new CountDownLatch(1)
+    WriterSpec.release = new CountDownLatch(1)
+    val hold = udf { (id: Long) =>
+      if (id == 5L) {
+        WriterSpec.reached.countDown()
+        WriterSpec.release.await(60, TimeUnit.SECONDS)
+      }
+      id
+    }
+    // one task: rows 0..4 reach the open file before row 5 holds it
+    val write = Future(t.append(spark.range(0, 10, 1, 1)
+      .select(col("id"), hold(col("id")).as("v"))))
+    try {
+      assert(WriterSpec.reached.await(60, TimeUnit.SECONDS), "the write never started")
+      val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+      val data = new Path(root, "data")
+      val inFlight = parquetUnder(fs, data) -- t.snapshot.files.map(_.path)
+      assert(inFlight.nonEmpty, "the held task has not created its file")
+      t.vacuum(retainVersions = 1, graceMillis = 0)
+      inFlight.foreach(f =>
+        assert(fs.exists(new Path(data, f)), s"vacuum deleted in-flight $f"))
+    } finally WriterSpec.release.countDown()
+    Await.result(write, 120.seconds)
+    assert(t.toDF.count() === 15)
+    assert(t.count() === 15)
+  }
+}
+
+object WriterSpec {
+  @volatile var reached: CountDownLatch = _
+  @volatile var release: CountDownLatch = _
+}
