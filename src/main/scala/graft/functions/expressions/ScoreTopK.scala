@@ -74,19 +74,8 @@ case class ScoreTopK(
 
   type Buf = ScoreTopK.Buf
 
-  /** id comparator on catalyst-internal values (UTF8String for
-    * StringType) — the window ORDER BY's `id ASC` leg. */
-  @transient private lazy val idCmp: (Any, Any) => Int = id.dataType match {
-    case LongType => (a, b) =>
-      java.lang.Long.compare(a.asInstanceOf[Long], b.asInstanceOf[Long])
-    case IntegerType => (a, b) =>
-      java.lang.Integer.compare(a.asInstanceOf[Int], b.asInstanceOf[Int])
-    case DoubleType => (a, b) =>
-      java.lang.Double.compare(a.asInstanceOf[Double], b.asInstanceOf[Double])
-    case StringType => (a, b) =>
-      a.asInstanceOf[UTF8String].compareTo(b.asInstanceOf[UTF8String])
-    case other => throw new IllegalStateException(s"unsupported id type $other")
-  }
+  @transient private lazy val idCmp: (Any, Any) => Int =
+    ScoreTopK.idComparator(id.dataType)
 
   override def createAggregationBuffer(): Buf = new ScoreTopK.Buf(k)
 
@@ -115,13 +104,8 @@ case class ScoreTopK(
     * stores (UTF8String cloned out of the reusable unsafe-row buffer —
     * the collect_list contract; primitives box here, but only on the
     * rare insert/tie path, never per scored row). */
-  @transient private lazy val idRead: InternalRow => Any = id.dataType match {
-    case LongType => in => java.lang.Long.valueOf(in.getLong(idOrd))
-    case IntegerType => in => java.lang.Integer.valueOf(in.getInt(idOrd))
-    case DoubleType => in => java.lang.Double.valueOf(in.getDouble(idOrd))
-    case StringType => in => in.getUTF8String(idOrd).clone()
-    case other => throw new IllegalStateException(s"unsupported id type $other")
-  }
+  @transient private lazy val idRead: InternalRow => Any =
+    ScoreTopK.idReader(id.dataType, idOrd)
 
   override def update(buf: Buf, input: InternalRow): Buf = {
     if (scoreOrd >= 0 && idOrd >= 0) {
@@ -163,12 +147,7 @@ case class ScoreTopK(
   }
 
   override def eval(buf: Buf): Any = {
-    // preferred-first: score desc, id asc — exactly the window ORDER BY
-    val order = (0 until buf.n).sortBy(identity)(Ordering.fromLessThan { (a, b) =>
-      buf.scores(a) > buf.scores(b) ||
-        (buf.scores(a) == buf.scores(b) && idCmp(buf.ids(a), buf.ids(b)) < 0)
-    })
-    new GenericArrayData(order.map { i =>
+    new GenericArrayData(buf.order(idCmp).map { i =>
       new GenericInternalRow(Array[Any](buf.ids(i), buf.scores(i)))
     }.toArray[Any])
   }
@@ -238,6 +217,31 @@ case class ScoreTopK(
 }
 
 object ScoreTopK {
+  /** The id comparator on catalyst-internal values (UTF8String for
+    * StringType): the window ORDER BY's `id ASC` leg. */
+  def idComparator(dt: DataType): (Any, Any) => Int = dt match {
+    case LongType => (a, b) =>
+      java.lang.Long.compare(a.asInstanceOf[Long], b.asInstanceOf[Long])
+    case IntegerType => (a, b) =>
+      java.lang.Integer.compare(a.asInstanceOf[Int], b.asInstanceOf[Int])
+    case DoubleType => (a, b) =>
+      java.lang.Double.compare(a.asInstanceOf[Double], b.asInstanceOf[Double])
+    case StringType => (a, b) =>
+      a.asInstanceOf[UTF8String].compareTo(b.asInstanceOf[UTF8String])
+    case other => throw new IllegalStateException(s"unsupported id type $other")
+  }
+
+  /** Reads the id at `ord` as the catalyst-internal value a heap stores:
+    * primitives boxed, a UTF8String cloned out of the row's reusable
+    * buffer (the collect_list contract). */
+  def idReader(dt: DataType, ord: Int): InternalRow => Any = dt match {
+    case LongType => in => java.lang.Long.valueOf(in.getLong(ord))
+    case IntegerType => in => java.lang.Integer.valueOf(in.getInt(ord))
+    case DoubleType => in => java.lang.Double.valueOf(in.getDouble(ord))
+    case StringType => in => in.getUTF8String(ord).clone()
+    case other => throw new IllegalStateException(s"unsupported id type $other")
+  }
+
   /**
    * Bounded binary min-heap over (score, id) where the ROOT is the
    * least-preferred kept entry — lowest score, ties to the LARGEST id —
@@ -248,45 +252,88 @@ object ScoreTopK {
     var n: Int = 0
     val scores = new Array[Double](k)
     val ids = new Array[Any](k)
+    /** id -> heap slot, kept only once [[insertDistinct]] is used;
+      * rebuilt from the entries after deserialization. */
+    @transient private var slots: java.util.HashMap[Any, Integer] = null
 
     /** entry a is WORSE-kept than entry b (a sorts toward the root). */
     private def worse(sa: Double, ia: Any, sb: Double, ib: Any,
         cmp: (Any, Any) => Int): Boolean =
       sa < sb || (sa == sb && cmp(ia, ib) > 0)
 
+    /** Whether a score can still enter: false only when the heap is full
+      * and `s` loses to the root outright (ties need the id). */
+    def admits(s: Double): Boolean = n < k || s >= scores(0)
+
     def insert(s: Double, idV: Any, cmp: (Any, Any) => Int): Unit = {
       if (n < k) {
         // grow: place at the end, sift up toward the worst-first root
-        var i = n
-        scores(i) = s; ids(i) = idV; n += 1
-        var sifting = true
-        while (sifting && i > 0) {
-          val p = (i - 1) >> 1
-          if (worse(scores(i), ids(i), scores(p), ids(p), cmp)) {
-            swap(i, p); i = p
-          } else sifting = false
-        }
+        scores(n) = s; ids(n) = idV; n += 1
+        if (slots != null) slots.put(idV, n - 1)
+        siftUp(n - 1, cmp)
       } else if (worse(scores(0), ids(0), s, idV, cmp)) {
         // the new entry is preferred over the current worst: replace
         // the root and sift down
+        if (slots != null) { slots.remove(ids(0)); slots.put(idV, 0) }
         scores(0) = s; ids(0) = idV
+        siftDown(0, cmp)
+      }
+    }
+
+    /** [[insert]], keeping each id at most once at its best score: a
+      * repeated id only raises its kept score. The kept set is then the
+      * top k of the per-id maximum scores, so partial heaps merge
+      * exactly. */
+    def insertDistinct(s: Double, idV: Any, cmp: (Any, Any) => Int): Unit = {
+      if (slots == null) {
+        slots = new java.util.HashMap[Any, Integer]()
         var i = 0
-        var done = false
-        while (!done) {
-          val l = 2 * i + 1
-          val r = l + 1
-          var w = i
-          if (l < n && worse(scores(l), ids(l), scores(w), ids(w), cmp)) w = l
-          if (r < n && worse(scores(r), ids(r), scores(w), ids(w), cmp)) w = r
-          if (w == i) done = true
-          else { swap(i, w); i = w }
-        }
+        while (i < n) { slots.put(ids(i), i); i += 1 }
+      }
+      val at = slots.get(idV)
+      if (at == null) insert(s, idV, cmp)
+      else if (s > scores(at)) {
+        // a better score moves the entry away from the worst-first root
+        scores(at) = s
+        siftDown(at, cmp)
+      }
+    }
+
+    /** Slots of the kept entries, preferred first: score desc, id asc. */
+    def order(cmp: (Any, Any) => Int): Array[Int] =
+      (0 until n).sortWith { (a, b) =>
+        scores(a) > scores(b) || (scores(a) == scores(b) && cmp(ids(a), ids(b)) < 0)
+      }.toArray
+
+    private def siftUp(from: Int, cmp: (Any, Any) => Int): Unit = {
+      var i = from
+      var sifting = true
+      while (sifting && i > 0) {
+        val p = (i - 1) >> 1
+        if (worse(scores(i), ids(i), scores(p), ids(p), cmp)) {
+          swap(i, p); i = p
+        } else sifting = false
+      }
+    }
+
+    private def siftDown(from: Int, cmp: (Any, Any) => Int): Unit = {
+      var i = from
+      var done = false
+      while (!done) {
+        val l = 2 * i + 1
+        val r = l + 1
+        var w = i
+        if (l < n && worse(scores(l), ids(l), scores(w), ids(w), cmp)) w = l
+        if (r < n && worse(scores(r), ids(r), scores(w), ids(w), cmp)) w = r
+        if (w == i) done = true
+        else { swap(i, w); i = w }
       }
     }
 
     private def swap(a: Int, b: Int): Unit = {
       val ts = scores(a); scores(a) = scores(b); scores(b) = ts
       val ti = ids(a); ids(a) = ids(b); ids(b) = ti
+      if (slots != null) { slots.put(ids(a), a); slots.put(ids(b), b) }
     }
   }
 }

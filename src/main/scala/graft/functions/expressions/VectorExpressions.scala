@@ -747,7 +747,15 @@ case class AdcLut(child: Expression, codebooks: Array[Double],
   override def nullable: Boolean = child.nullable || elemNullable
 
   override def nullSafeEval(input: Any): Any = {
-    val a = input.asInstanceOf[ArrayData]
+    val table = tableOf(input.asInstanceOf[ArrayData])
+    if (table == null) null
+    else new org.apache.spark.sql.catalyst.util.GenericArrayData(table.map(row =>
+      new org.apache.spark.sql.catalyst.util.GenericArrayData(row): Any))
+  }
+
+  /** The table of a query vector already on the driver, indexed
+    * [subspace][code] (null: a null element). */
+  def tableOf(a: ArrayData): Array[Array[Double]] = {
     val len = math.min(m * dSub, a.numElements())
     val buf = new Array[Double](len)
     var q = 0
@@ -756,7 +764,7 @@ case class AdcLut(child: Expression, codebooks: Array[Double],
       buf(q) = if (elemIsFloat) a.getFloat(q).toDouble else a.getDouble(q)
       q += 1
     }
-    val rows = new Array[Any](m)
+    val rows = new Array[Array[Double]](m)
     var mi = 0
     while (mi < m) {
       val row = new Array[Double](kCodes)
@@ -771,10 +779,10 @@ case class AdcLut(child: Expression, codebooks: Array[Double],
         row(j) = sum
         j += 1
       }
-      rows(mi) = new org.apache.spark.sql.catalyst.util.GenericArrayData(row)
+      rows(mi) = row
       mi += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(rows)
+    rows
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =

@@ -542,63 +542,22 @@ object Similarity {
        else Nil))
   }
 
-  /** Per-query probe list: the `nprobe` nearest cells, as
-    * (query id, query vector, cell) rows. */
-  private def probeCells(queries: DataFrame, model: VectorIndexModel,
-      nprobe: Int, queryId: String, queryVec: String): DataFrame =
-    probeCellsRanked(queries, model, nprobe, queryId, queryVec)
-      .drop("__pr")
-
-  /** The probe kernel of `model`: each vector's `nprobe` best cells in
-    * probe order (see [[graft.functions.expressions.TopCosineCells]]). */
-  private def topCells(model: VectorIndexModel, nprobe: Int,
-      vec: org.apache.spark.sql.catalyst.expressions.Expression) =
-    graft.functions.expressions.TopCosineCells(vec,
-      model.centroids.flatten.toArray, model.nCells, nprobe)
-
-  /** [[probeCells]] with the probe RANK kept (`__pr` = 1-based position
-    * of the cell in the query's sim-desc/cell-asc order) — the fused
+  /** Per-query probe list with the probe RANK kept (`__pr` = 1-based
+    * position of the cell in the query's sim-desc/cell-asc order, the
+    * order of [[graft.functions.expressions.TopCosineCells]]) — the fused
     * calibration sweep derives every candidate nprobe's probe set from
     * one ranked list (`__pr <= candidate`). One narrow map: each query
     * row explodes its own probe list, so no join, window or shuffle. */
   private def probeCellsRanked(queries: DataFrame, model: VectorIndexModel,
       nprobe: Int, queryId: String, queryVec: String): DataFrame = {
-    val cells = org.apache.spark.sql.graft.ColumnBridge.column(topCells(model,
-      nprobe, org.apache.spark.sql.graft.ColumnBridge.expression(col(queryVec))))
+    val cells = org.apache.spark.sql.graft.ColumnBridge.column(
+      graft.functions.expressions.TopCosineCells(
+        org.apache.spark.sql.graft.ColumnBridge.expression(col(queryVec)),
+        model.centroids.flatten.toArray, model.nCells, nprobe))
     queries.select(col(queryId), col(queryVec),
         posexplode(cells).as(Seq("__pos", "cell")))
       .select(col(queryId), col(queryVec), col("cell"),
         (col("__pos") + 1).as("__pr"))
-  }
-
-  /** Probe assignment for a query batch already on the driver: the same
-    * kernel as [[probeCells]], evaluated here per row, so it runs no
-    * Spark job. `rows` are (query id, query vector) of `schema`. Returns
-    * the (query id, cell) pairs as a local relation (the `probed`
-    * argument of [[searchIndexed]]) and the distinct probed cells,
-    * sorted — the set a caller pushes into a persisted codes scan as a
-    * LITERAL `cell IN (…)`, which a join's dynamic keys never reach. */
-  def probeOnDriver(spark: org.apache.spark.sql.SparkSession,
-      rows: Seq[org.apache.spark.sql.Row],
-      schema: org.apache.spark.sql.types.StructType, model: VectorIndexModel,
-      nprobe: Int = -1): (DataFrame, Array[Int]) = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
-    val np = if (nprobe > 0) nprobe else model.nprobe
-    val kernel = topCells(model, np,
-      org.apache.spark.sql.catalyst.expressions.BoundReference(0,
-        schema(1).dataType, nullable = true))
-    val pairs = rows.flatMap { r =>
-      val vec = if (r.isNullAt(1)) null
-        else new org.apache.spark.sql.catalyst.util.GenericArrayData(
-          r.getSeq[Any](1))
-      kernel.cellsOf(vec).map(c => Row(r.get(0), c))
-    }
-    val pairSchema = StructType(Seq(schema(0), StructField("cell", IntegerType,
-      nullable = false)))
-    (spark.createDataFrame(
-        java.util.Arrays.asList(pairs: _*), pairSchema),
-      pairs.map(_.getInt(1)).distinct.sorted.toArray)
   }
 
   /**
@@ -606,80 +565,27 @@ object Similarity {
    * from a persisted sidecar): probe `nprobe` cells per query, score
    * via the per-query ADC lookup table (codes path) or exact cosine
    * (plain-IVF path), optionally exact-re-rank the top `rerankTo` ADC
-   * candidates (IVFADC+R). `corpus` supplies full vectors ONLY for the
-   * exact paths — the probed scan itself reads codes, never vectors.
+   * candidates (IVFADC+R; the shortlist keeps at least `k`). `corpus`
+   * supplies full vectors ONLY for the exact scores — the probed scan
+   * itself reads codes, never vectors. The query batch is collected
+   * when this is called, and the search runs as one [[VectorSearch]]
+   * operator: a pass over the codes and one over the corpus.
    */
   def searchIndexed(indexed: DataFrame, corpus: DataFrame,
       queries: DataFrame, model: VectorIndexModel, k: Int,
       nprobe: Int = -1, rerankTo: Int = -1,
       corpusId: String = "vec_id", corpusVec: String = "embedding",
-      queryId: String = "query_id", queryVec: String = "query_vec",
-      /** (query id, cell) probe pairs computed ahead, e.g. by
-        * [[probeOnDriver]]; by default each query's `nprobe` cells are
-        * assigned in the plan */
-      probed: Option[DataFrame] = None): DataFrame = {
-    val probeCount = if (nprobe > 0) nprobe else model.nprobe
-    val rerank = if (rerankTo >= 0) rerankTo else model.rerankTo
-    val pairs = probed.getOrElse(
-        probeCells(queries, model, probeCount, queryId, queryVec))
-      .select(col("cell"), col(queryId))
-    if (model.codebooks.isEmpty) {
-      // plain IVF: exact cosine within probed cells — the corpus joins
-      // by id to supply vectors (zero-copy when `indexed` still carries
-      // them; the persisted sidecar does not)
-      val cells =
-        if (indexed.columns.contains(corpusVec)) indexed
-        else indexed.join(corpus.select(col(corpusId), col(corpusVec)),
-          Seq(corpusId))
-      // probe pairs and query vectors broadcast separately (the fused
-      // pair carried each query's vector nprobe× in one relation)
-      val scored = cells
-        .join(broadcast(pairs), Seq("cell"))
-        .join(broadcast(queries.select(col(queryId), col(queryVec))),
-          Seq(queryId))
-        .select(col(queryId), col(corpusId),
-          cosine(col(corpusVec), col(queryVec)).as("score"))
-      topKByScore(scored, k, queryId, corpusId)
-    } else {
-      // the LUT computes ONCE per query row (|q| kernel evaluations)
-      // and BROADCASTS once per query: the former shape joined the
-      // LUTs onto the probe rows BEFORE broadcasting, duplicating each
-      // query's m×kCodes-double table nprobe× inside the broadcast
-      // relation (~450 KB per query at the PQ-256 default — a ~230 MB
-      // broadcast build at the clustered bench's 504-query batch,
-      // measured as the dominant index_batch cost). The probe rows now
-      // broadcast as bare (cell, query) pairs and the LUT attaches by
-      // query id from its own |q|-row broadcast at scoring time — two
-      // fused broadcast hash joins, still zero shuffle of the codes.
-      val luts = queries.select(col(queryId),
-        adcLut(model.codebooks, queryVec, model.dSub).as("__lut"))
-      val scored = indexed
-        .join(broadcast(pairs), Seq("cell"))
-        .join(broadcast(luts), Seq(queryId))
-        .select(col(queryId), col(corpusId),
-          adcScore(col("__lut"), model.m).as("score"))
-      if (rerank <= 0) topKByScore(scored, k, queryId, corpusId)
-      else {
-        // exact re-rank of the ADC short list: only `rerank` rows per
-        // query re-join their full vectors — the scan itself still
-        // read codes only. The SHORT LIST side broadcasts (|q|×rerank
-        // id pairs, far smaller than the LUT broadcast above): leaving
-        // the strategy to size estimates let the planner sort-merge
-        // this join, shuffling every corpus vector by id to fetch
-        // |q|×rerank of them (guide §3.1 — estimates after aggregates
-        // are unreliable; the post-ScoreTopK shortlist read as "big").
-        val shortList = topKByScore(scored, rerank, queryId, corpusId)
-          .select(col(queryId), col(corpusId))
-        val exact = corpus.select(col(corpusId), col(corpusVec))
-          .join(broadcast(shortList), Seq(corpusId))
-          .join(broadcast(queries.select(col(queryId), col(queryVec))),
-            Seq(queryId))
-          .select(col(queryId), col(corpusId),
-            cosine(col(corpusVec), col(queryVec)).as("score"))
-        topKByScore(exact, k, queryId, corpusId)
-      }
-    }
-  }
+      queryId: String = "query_id", queryVec: String = "query_vec"): DataFrame =
+    VectorSearch.plan(queries, indexed, corpus, None, model, k,
+      if (nprobe > 0) nprobe else model.nprobe,
+      shortlistDepth(if (rerankTo >= 0) rerankTo else model.rerankTo, k),
+      corpusId, corpusVec, queryId, queryVec, pruneCells = false)
+
+  /** The ADC shortlist depth for a re-rank depth of `rerank` (≤ 0: no
+    * re-rank): never below k, or a k above the re-rank depth would
+    * return at most `rerank` rows. */
+  private[graft] def shortlistDepth(rerank: Int, k: Int): Int =
+    if (rerank > 0) math.max(rerank, k) else 0
 
   /** Deterministic held-out query sample for calibration: reverse hash
     * order — disjoint from the hash-MIN centroid seeds, so recall is
@@ -782,8 +688,7 @@ object Similarity {
     val candCol = explode(filter(typedlit(cands.sorted),
       c => c >= col("__pr"))).as("__np")
     if (model.codebooks.isEmpty) {
-      // plain IVF: exact cosine within probed cells (searchIndexed's
-      // codebook-less branch, per candidate)
+      // plain IVF: exact cosine within probed cells, per candidate
       val cells =
         if (indexed.columns.contains(corpusVec)) indexed
         else indexed.join(corpus.select(col(corpusId), col(corpusVec)),
@@ -800,9 +705,9 @@ object Similarity {
       countsOf(topKByScoreGrouped(scored, k, Seq("__np", "query_id"),
         corpusId))
     } else {
-      // same broadcast shape as searchIndexed: bare probe tuples, LUTs
-      // attached by query id from their own |q|-row broadcast (never
-      // duplicated nprobe× inside a broadcast relation)
+      // bare probe tuples broadcast, LUTs attached by query id from
+      // their own |q|-row broadcast (never duplicated nprobe× inside a
+      // broadcast relation)
       val luts = queries.select(col("query_id"),
         adcLut(model.codebooks, "query_vec", model.dSub).as("__lut"))
       val scored = indexed
@@ -817,14 +722,13 @@ object Similarity {
         countsOf(topKByScoreGrouped(scored, k, Seq("__np", "query_id"),
           corpusId))
       else {
-        // exact re-rank of each candidate's ADC short list — the same
-        // IVFADC+R step searchIndexed applies per candidate
+        // exact re-rank of each candidate's ADC short list — the
+        // search's IVFADC+R step, per candidate
         val shortList = topKByScoreGrouped(scored, model.rerankTo,
             Seq("__np", "query_id"), corpusId)
           .select(col("__np"), col("query_id"), col(corpusId))
-        // shortlist broadcast for the same reason as searchIndexed's
-        // rerank: never shuffle the corpus by id to fetch |shortlist|
-        // vectors
+        // the shortlist broadcasts: never shuffle the corpus by id to
+        // fetch |shortlist| vectors
         val exact = corpus.select(col(corpusId), col(corpusVec))
           .join(broadcast(shortList), Seq(corpusId))
           .join(broadcast(queries.select(col("query_id"), col("query_vec"))),
@@ -1097,9 +1001,9 @@ object Similarity {
         org.apache.spark.sql.graft.ColumnBridge.unpersistAfterFirstUse(cached)
         np
       }
-    val probes = probeCells(queries, VectorIndexModel(dim,
+    val probes = probeCellsRanked(queries, VectorIndexModel(dim,
         centroids.map(_._2.toSeq).toSeq, Nil, probeCount, 0),
-      probeCount, queryId, queryVec)
+      probeCount, queryId, queryVec).drop("__pr")
     // probe set is |queries|×nprobe — broadcast it so the bucketed
     // corpus never shuffles (cells is a narrow projection of the scan)
     val scored = cells.join(broadcast(probes), "cell")

@@ -250,6 +250,8 @@ object GraftSql {
     val name = ensureCatalogRegistered(cat)
     val clone = org.apache.spark.sql.graft.ColumnBridge.cloneSession(cat.spark)
     clone.catalog.setCurrentCatalog(name)
+    // a vector_search in the statement plans its operator on the clone
+    graft.operators.VectorSearchStrategy.setup(clone)
     clone
   }
 

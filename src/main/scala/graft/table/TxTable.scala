@@ -618,7 +618,7 @@ class TxTable private (
    * drifts as the corpus grows, so rebuild (`buildVectorIndex`) when
    * the exact-scored delta or recall drift matters. Rows deleted or
    * updated since any build keep their stale code rows; the re-rank
-   * join retires them and [[vectorSearch]] dedups by id, so
+   * retires them and [[vectorSearch]] dedups by id, so
    * correctness never depends on refresh timing. Returns the number
    * of rows encoded.
    */
@@ -720,7 +720,7 @@ class TxTable private (
    * stripe per append). The rewrite also REAPS dead code rows (r15
    * VERDICT task 2): rows whose id no longer exists in the live corpus
    * — MOR deletes, overwrites, rows whose files churned away — were
-   * carried forever (correct: the re-rank join retires them and
+   * carried forever (correct: the re-rank retires them and
    * vectorSearch dedups by id, but every probed-cell scan paid for
    * them), so the codes are semi-joined against the LIVE ids during
    * the rewrite: O(ids) extra scan of the id column only, NO
@@ -1444,21 +1444,22 @@ class TxTable private (
    *    build, or re-added by a RESTORE from before it — membership is
    *    by file path, see [[uncoveredFiles]]) are exact-scored and
    *    merged in — a stale index never drops them;
-   *  - rows DELETED/UPDATED since the build drop out at the re-rank
-   *    join (inner join by id against the current snapshot serves
-   *    current vectors) — which is why this path REQUIRES a positive
+   *  - rows DELETED/UPDATED since the build drop out at the re-rank,
+   *    which scores only the current snapshot's rows with their
+   *    current vectors — which is why this path REQUIRES a positive
    *    re-rank depth;
    *  - periodic rebuilds keep the exact-scored delta small, like any
    *    secondary index.
    *
    * The query batch is collected to the driver once, when this is
-   * called: probes are assigned there by the same kernel the plan form
-   * uses ([[graft.functions.expressions.TopCosineCells]]), and every
-   * query side of the returned plan is a local relation. So building
-   * the plan runs no Spark job for a local batch and one for a
-   * table-backed batch, and the result answers for the batch as it was
-   * at the call. The batch must fit the driver, like the broadcasts of
-   * its vectors and LUTs always had to.
+   * called, so the result answers for the batch as it was at the call
+   * and the batch must fit the driver. Its probed cells push into the
+   * codes scan as a literal `cell IN (…)`. The search is one
+   * [[graft.operators.VectorSearch]] operator: one pass over the probed
+   * codes for the ADC shortlist, one over the snapshot's rows for the
+   * exact re-rank of the shortlisted ids and of every uncovered row.
+   * For a local batch over a covered index that is two Spark jobs,
+   * and building the plan runs none.
    */
   def vectorSearch(queries: DataFrame, k: Int,
       vecCol: String = "embedding", nprobe: Int = -1, rerankTo: Int = -1,
@@ -1472,7 +1473,7 @@ class TxTable private (
         * × corpus) extra work, and the delta path filters the same
         * way. */
       where: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    import graft.operators.Similarity
+    import graft.operators.{Similarity, VectorSearch}
     val meta = vectorIndexMeta(vecCol).getOrElse(throw new IllegalStateException(
       s"no vector index on $name.$vecCol — run buildVectorIndex first"))
     val model = Similarity.VectorIndexModel(meta.dim, meta.centroids,
@@ -1483,69 +1484,36 @@ class TxTable private (
         "against the current snapshot is what retires deleted/updated rows")
     val idCol = meta.idColumn
     val s = snapshot
-    val current0 = dfFor(s)
-    val current = where.map(current0.filter).getOrElse(current0)
+    def filtered(df: DataFrame) = where.map(df.filter).getOrElse(df)
+    val current = dfFor(s)
     val codesAll = readCodes(new Path(vectorIndexPath(vecCol), meta.codesDir),
       idCol, meta.codebooks.nonEmpty, s)
-    // the whole batch is broadcast anyway (query vectors for the
-    // re-rank, one m×kCodes LUT per query), so collecting it once adds
-    // no driver-memory bound; it costs no job for a local batch and one
-    // for a table-backed one. Every query side below then reads this
-    // local relation instead of re-reading the source.
-    val batchDf = queries.select(col(queryId), col(queryVec))
-    val batchRows = batchDf.collect().toSeq
-    val batch = spark.createDataFrame(java.util.Arrays.asList(batchRows: _*),
-      batchDf.schema)
-    // probes are assigned right here, with no job, and the distinct
-    // probed cells push into the codes scan as a LITERAL IN filter: the
-    // probe pairs join the codes by a broadcast join, whose dynamic keys
-    // never reach parquet row-group pruning, so the literal is what
-    // makes "scan only probed cells' codes" true on the cell-sorted
-    // sidecar. Skipped when the batch probes most cells anyway (the
-    // filter would prune nothing and a huge IN list costs planning time).
-    val (probed, probedCells) = Similarity.probeOnDriver(spark, batchRows,
-      batchDf.schema, model, nprobe)
-    val codes0 =
-      if (probedCells.length * 2 >= meta.centroids.size) codesAll
-      else codesAll.filter(col("cell").isin(probedCells.map(Int.box): _*))
     val codes = where match {
-      case None => codes0
+      case None => codesAll
       // the filtered-id semi-join ALSO retires deleted rows' stale
       // codes for free (they have no current row to survive the join)
       case Some(_) =>
-        codes0.join(current.select(col(idCol)), Seq(idCol), "left_semi")
+        codesAll.join(filtered(current).select(col(idCol)), Seq(idCol), "left_semi")
     }
-    val indexedTop = Similarity.searchIndexed(codes, current, batch,
-        model, k, nprobe, rerank, idCol, vecCol, queryId, queryVec,
-        probed = Some(probed))
-      .select(col(queryId), col(idCol), col("score"))
     // files the index does NOT cover (appends since the build, and any
     // RESTORE-re-added files from before it — path-set membership, see
-    // uncoveredFiles): exact cosine over just the delta (O(new rows)),
-    // unioned before the final top-k — scores are exact on both sides,
-    // so ranking is coherent
+    // uncoveredFiles) are exact-scored against every query, so a stale
+    // index never drops them. A row updated since a build keeps its
+    // stale code row (refreshVectorIndex appends, never rewrites), so
+    // the same id can reach the shortlist twice; the operator keeps
+    // each id once.
     val deltaFiles = uncoveredFiles(s, meta)
-    val scored =
-      if (deltaFiles.isEmpty) indexedTop
+    val (corpus, delta) =
+      if (deltaFiles.isEmpty) (current, None)
       else {
-        val delta0 = dfFor(s.copy(files = deltaFiles))
-        val delta = where.map(delta0.filter).getOrElse(delta0)
-        val deltaTop = Similarity.bruteForceTopK(delta, batch, k,
-            idCol, vecCol, queryId, queryVec)
-          .select(col(queryId), col(idCol), col("score"))
-        indexedTop.unionByName(deltaTop)
+        val uncovered = deltaFiles.map(_.path).toSet
+        (dfFor(s.copy(files = s.files.filterNot(f => uncovered.contains(f.path)))),
+          Some(filtered(dfFor(s.copy(files = deltaFiles)))))
       }
-    // dedup by id UNCONDITIONALLY: a row updated since a build keeps
-    // its stale code row (refreshVectorIndex appends, never rewrites),
-    // so the same id can reach the shortlist twice — both re-ranked to
-    // the same exact score against the current snapshot
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col(queryId))
-      .orderBy(col("score").desc, col(idCol).asc)
-    scored.groupBy(col(queryId), col(idCol))
-      .agg(max(col("score")).as("score"))
-      .select(col(queryId), col(idCol), col("score"),
-        row_number().over(w).as("rank"))
-      .filter(col("rank") <= k)
+    VectorSearch.plan(queries, codes, filtered(corpus), delta, model, k,
+      if (nprobe > 0) nprobe else model.nprobe,
+      Similarity.shortlistDepth(rerank, k), idCol, vecCol, queryId, queryVec,
+      pruneCells = true)
   }
 
   // ---- metadata tables & tags ------------------------------------------

@@ -97,8 +97,9 @@ class VectorExprSpec extends SparkSpec {
 
   test("TopCosineCells equals the probe window: ties, zero/NaN/null vectors, nprobe >= nCells") {
     import graft.functions.expressions.TopCosineCells
-    import graft.operators.Similarity
     import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.graft.ColumnBridge
     import org.apache.spark.sql.types._
@@ -139,14 +140,14 @@ class VectorExprSpec extends SparkSpec {
       qs.select(col("q"), ColumnBridge.column(TopCosineCells(
           ColumnBridge.expression(col("v")), cents.flatten.toArray, nCells, n)))
         .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
+    // the same kernel evaluated on the driver, as the search operator
+    // assigns the probes of a collected query batch
     def driver(qs: DataFrame, n: Int): Map[Long, Seq[Int]] = {
-      val model = Similarity.VectorIndexModel(dim, cents, Nil, n, 0)
-      val (pairs, cells) = Similarity.probeOnDriver(spark,
-        qs.collect().toSeq, qs.schema, model)
-      val got = pairs.collect().groupBy(_.getLong(0)).map { case (q, rs) =>
-        q -> rs.map(_.getInt(1)).toSeq }
-      assert(cells.toSeq === got.values.flatten.toSeq.distinct.sorted)
-      got
+      val probe = TopCosineCells(BoundReference(0, qs.schema("v").dataType,
+        nullable = true), cents.flatten.toArray, nCells, n)
+      qs.collect().map(r => r.getLong(0) -> probe.cellsOf(
+        if (r.isNullAt(1)) null else new GenericArrayData(r.getSeq[Any](1))).toSeq)
+        .toMap
     }
     def checkAll(): Unit =
       for (qs <- Seq(dbl, flt, nullElem); n <- Seq(1, 3, nCells, nCells + 5)) {

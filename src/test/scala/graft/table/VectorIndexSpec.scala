@@ -3,6 +3,7 @@ package graft.table
 import graft.SparkSpec
 import graft.operators.Similarity
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
@@ -205,10 +206,10 @@ class VectorIndexSpec extends SparkSpec {
     assert(df.count() === 10L)
   }
 
-  test("vectorSearch plans with no Spark job and runs at most 7") {
+  test("vectorSearch plans with no Spark job, runs at most 2 (3 with a delta)") {
     // probes are assigned on the driver over the collected batch, so
-    // no job runs before the DataFrame exists; the plan then probes,
-    // scores and re-ranks in few jobs
+    // no job runs before the DataFrame exists; the operator then runs
+    // one pass over the probed codes and one over the table's rows
     val t = embTable("vecidx_jobs")
     t.buildVectorIndex("vec_id", "embedding", dim = 64)
     val q0 = queriesFrom(t, 16)
@@ -219,19 +220,180 @@ class VectorIndexSpec extends SparkSpec {
     val (rows, runJobs) = withJobCount(df.collect())
     info(s"jobs: $planJobs planning, $runJobs collect")
     assert(planJobs === 0, "vectorSearch ran a Spark job before returning")
-    assert(runJobs <= 7, s"vectorSearch ran $runJobs jobs")
-    // the same rows as the plan-side probe over the reloaded codes
+    assert(runJobs <= 2, s"vectorSearch ran $runJobs jobs")
+    assert(rows.map(r => (r.getLong(0), r.getLong(1))).toSet.size === 160)
+    // a projection of the result still collects in the operator's jobs
+    val (_, selectJobs) = withJobCount(
+      t.vectorSearch(queries, k = 10).select("query_id", "vec_id").collect())
+    assert(selectJobs <= 2, s"select over vectorSearch ran $selectJobs jobs")
+    // rows appended after the build are exact-scored in the corpus pass
+    t.append(t.toDF.filter(col("vec_id") === 3L)
+      .withColumn("vec_id", lit(900003L)))
+    val (withDelta, deltaPlanJobs) = withJobCount(t.vectorSearch(queries, k = 10))
+    val (_, deltaJobs) = withJobCount(withDelta.collect())
+    info(s"with an uncovered delta: $deltaPlanJobs planning, $deltaJobs collect")
+    assert(deltaPlanJobs === 0 && deltaJobs <= 3, s"delta search ran $deltaJobs jobs")
+  }
+
+  test("a k above the re-rank depth still returns k rows per query") {
+    // the ADC shortlist keeps max(rerank, k) candidates: keeping only
+    // `rerank` returned at most that many rows however large k was
+    val t = embTable("vecidx_deep_k")
+    t.buildVectorIndex("vec_id", "embedding", dim = 64, kCodes = 16, iters = 0)
+    val queries = queriesFrom(t, 4)
+    val counts = t.vectorSearch(queries, k = 20, rerankTo = 10)
+      .groupBy("query_id").count().select("count").as[Long].collect()
+    assert(counts.length === 4 && counts.forall(_ == 20L), s"rows per query: ${counts.toSeq}")
+  }
+
+  /** The search written with plain DataFrame operators and the column
+    * kernels, independent of the operator: each query's `nprobe` cells
+    * by a `row_number()` window over cosine; the ADC shortlist of
+    * `depth` ids (0: the ADC scores are the result; plain IVF: every id
+    * of the probed cells); the exact cosine of the shortlisted ids in
+    * `corpus` and of every `delta` row; each ranking by (score desc,
+    * id asc) over each id's best score. */
+  private def referenceSearch(codes: DataFrame, corpus: DataFrame,
+      delta: DataFrame, queries: DataFrame, model: Similarity.VectorIndexModel,
+      k: Int, nprobe: Int, depth: Int): Set[(Long, Long, Double, Int)] = {
+    import graft.functions.VectorFunctions.cosine
+    import graft.functions.expressions.{AdcLut, AdcScore}
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
+    def ranked(scored: DataFrame, n: Int): DataFrame =
+      scored.filter(col("score").isNotNull)
+        .groupBy("query_id", "vec_id").agg(max("score").as("score"))
+        .withColumn("rank", row_number().over(Window.partitionBy("query_id")
+          .orderBy(col("score").desc, col("vec_id").asc)))
+        .filter(col("rank") <= n)
+    def exact(rows: DataFrame): DataFrame = rows.join(queries, "query_id")
+      .select(col("query_id"), col("vec_id"),
+        cosine(col("embedding"), col("query_vec")).as("score"))
+    def reranked(short: DataFrame): DataFrame = ranked(
+      exact(short.join(corpus.select("vec_id", "embedding"), "vec_id"))
+        .unionByName(exact(delta.select("vec_id", "embedding")
+          .crossJoin(queries.select("query_id")))), k)
+    val cents = model.centroids.zipWithIndex.map { case (c, i) => (i, c.toArray) }
+      .toDF("cell", "cvec")
+    val probes = queries.crossJoin(cents)
+      .withColumn("pr", row_number().over(Window.partitionBy("query_id")
+        .orderBy(cosine(col("query_vec"), col("cvec")).desc, col("cell").asc)))
+      .filter(col("pr") <= nprobe).select("query_id", "cell")
+    val probed = codes.join(probes, "cell")
+    val top =
+      if (model.codebooks.isEmpty)
+        reranked(probed.select("query_id", "vec_id"))
+      else {
+        val lut = column(AdcLut(expression(col("query_vec")),
+          model.codebooks.flatten.flatten.toArray, model.m,
+          model.codebooks.head.size, model.dSub))
+        val adc = probed.join(queries.select(col("query_id"), lut.as("lut")), "query_id")
+          .select(col("query_id"), col("vec_id"),
+            column(AdcScore(expression(col("codes")), expression(col("lut")))).as("score"))
+        if (depth <= 0) ranked(adc, k)
+        else reranked(ranked(adc, depth).select("query_id", "vec_id"))
+      }
+    top.select("query_id", "vec_id", "score", "rank")
+      .as[(Long, Long, Double, Int)].collect().toSet
+  }
+
+  private def resultOf(df: DataFrame): Set[(Long, Long, Double, Int)] =
+    df.select("query_id", "vec_id", "score", "rank")
+      .as[(Long, Long, Double, Int)].collect().toSet
+
+  /** A local query batch: `n` table rows plus one null query vector. */
+  private def localQueries(t: TxTable, n: Int): DataFrame = {
+    val q = queriesFrom(t, n)
+    spark.createDataFrame(java.util.Arrays.asList(
+      (q.collect() :+ org.apache.spark.sql.Row(999999L, null)): _*), q.schema)
+  }
+
+  /** Rows of the files the index does not cover. */
+  private def uncoveredRows(t: TxTable): DataFrame = {
+    val meta = t.vectorIndexMeta("embedding").get
+    val dir = new Path(t.root, "_index/vector_embedding")
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val covered = (meta.coveredFilesFile.toSeq ++ meta.coveredDeltaFiles).flatMap { n =>
+      val in = fs.open(new Path(dir, n))
+      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().filter(_.nonEmpty).toList
+      finally in.close()
+    }.toSet
+    val names = t.filesDf.select("path").as[String].collect()
+      .filterNot(covered.contains).map(p => new Path(p).getName)
+    t.toDF.filter(element_at(split(input_file_name(), "/"), -1).isin(names: _*))
+  }
+
+  test("the search operator equals a join-and-window oracle: IVF-PQ over a table") {
+    val t = embTable("vecidx_oracle")
+    // tied vectors inside the index: copies of two rows under new ids
+    t.append(t.toDF.filter(col("vec_id").isin(3L, 10L))
+      .withColumn("vec_id", col("vec_id") + 500000L))
+    t.buildVectorIndex("vec_id", "embedding", dim = 64, kCodes = 16, iters = 0)
     val meta = t.vectorIndexMeta("embedding").get
     val model = Similarity.VectorIndexModel(meta.dim, meta.centroids,
       meta.codebooks, meta.nprobe, meta.rerankTo)
-    val codes = spark.read.parquet(new Path(t.root,
-      s"_index/vector_embedding/${meta.codesDir}").toString)
-    val expected = Similarity.searchIndexed(codes, t.toDF, queries, model, 10)
-      .select("query_id", "vec_id", "score", "rank")
-      .as[(Long, Long, Double, Int)].collect().toSet
-    val got = rows.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
-      r.getInt(3))).toSet
-    assert(got.size === 160 && got === expected)
+    val codesDir = new Path(t.root, s"_index/vector_embedding/${meta.codesDir}").toString
+    def codes = spark.read.parquet(codesDir)
+    val queries = localQueries(t, 6)
+    val depth = math.max(meta.rerankTo, 10)
+    def check(label: String, got: DataFrame, expected: Set[(Long, Long, Double, Int)]): Unit = {
+      val rows = resultOf(got)
+      assert(rows.nonEmpty && rows === expected, s"$label: operator and oracle differ")
+      assert(!rows.exists(_._1 == 999999L), s"$label: the null query vector found rows")
+    }
+    check("covered", t.vectorSearch(queries, k = 10),
+      referenceSearch(codes, t.toDF, t.toDF.limit(0), queries, model, 10,
+        meta.nprobe, depth))
+    // a k larger than one probed cell holds: the rows there, no more
+    val deep = t.vectorSearch(queries, k = 500, nprobe = 1)
+    check("deep k", deep, referenceSearch(codes, t.toDF, t.toDF.limit(0),
+      queries, model, 500, 1, 500))
+    assert(deep.groupBy("query_id").count().as[(Long, Long)].collect()
+      .forall(_._2 < 500L))
+    // rows deleted after the build keep stale codes; rows appended after
+    // it, including another tie, are exact-scored
+    t.deletePos(col("vec_id") % 11 === 0)
+    t.append(t.toDF.filter(col("vec_id").isin(3L, 24L))
+      .withColumn("vec_id", col("vec_id") + 600000L))
+    assert(uncoveredRows(t).count() === 2L)
+    check("deleted + appended", t.vectorSearch(queries, k = 10),
+      referenceSearch(codes, t.toDF, uncoveredRows(t), queries, model, 10,
+        meta.nprobe, depth))
+    val pred = col("label") <= 4
+    check("filtered", t.vectorSearch(queries, k = 10, where = Some(pred)),
+      referenceSearch(codes.join(t.toDF.filter(pred).select("vec_id"), Seq("vec_id"),
+        "left_semi"), t.toDF.filter(pred), uncoveredRows(t).filter(pred), queries,
+        model, 10, meta.nprobe, depth))
+  }
+
+  test("the search operator equals a join-and-window oracle: plain IVF and ADC-only IVF-PQ") {
+    val emb0 = spark.read.parquet(s"$sf0001/embeddings.parquet")
+      .select("vec_id", "embedding")
+    // tied vectors: copies of five rows under new ids
+    val emb = emb0.unionByName(emb0.filter(col("vec_id") < 5)
+      .withColumn("vec_id", col("vec_id") + 100000L)).cache()
+    val q = emb.filter(col("vec_id") % 7 === 3).limit(5)
+      .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
+    val queries = spark.createDataFrame(java.util.Arrays.asList(
+      (q.collect() :+ org.apache.spark.sql.Row(999999L, null)): _*), q.schema)
+    try {
+      val ivf = Similarity.trainIvfModel(emb, dim = 64, nCells = 16, iters = 0)
+      val ivfCodes = Similarity.encodeIvfPq(emb, ivf)
+      val gotIvf = resultOf(Similarity.searchIndexed(ivfCodes, emb, queries, ivf,
+        k = 10, nprobe = 3))
+      assert(gotIvf.nonEmpty && gotIvf === referenceSearch(ivfCodes, emb, emb.limit(0),
+        queries, ivf, 10, 3, 0))
+      val pq = Similarity.trainIvfPqModel(emb, dim = 64, nCells = 16, m = 8,
+        kCodes = 16, iters = 0, rerankTo = 0)
+      val pqCodes = Similarity.encodeIvfPq(emb, pq)
+      for (rerank <- Seq(0, 40)) {
+        val got = resultOf(Similarity.searchIndexed(pqCodes, emb, queries, pq,
+          k = 10, nprobe = 3, rerankTo = rerank))
+        assert(got.nonEmpty && got === referenceSearch(pqCodes, emb, emb.limit(0),
+          queries, pq, 10, 3, rerank), s"rerankTo = $rerank")
+        assert(!got.exists(_._1 == 999999L))
+      }
+    } finally emb.unpersist()
   }
 
   test("vector_search TVF reads a table-backed query relation once: its query sides are local") {
