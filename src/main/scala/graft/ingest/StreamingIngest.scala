@@ -91,6 +91,31 @@ object StreamingIngest {
     ss
   }
 
+  /**
+   * The session a stream is built and run on: a clone of the caller's,
+   * so nothing here touches the caller's conf. Its checkpoint logs
+   * publish through [[LocalCheckpointFileManager]] (no process starts
+   * on `file:` paths) unless the caller already named a manager. The
+   * query registers with the clone's `streams`, not the caller's, so
+   * the caller's streaming listeners are added to it: they still see
+   * the query's progress, and `spark.streams.active` does not list it.
+   * The clone's listener bus leaves the SparkContext when the query
+   * ends.
+   */
+  private[ingest] def streamSession(spark: SparkSession): SparkSession = {
+    val clone = org.apache.spark.sql.graft.ColumnBridge.cloneSession(spark)
+    if (clone.conf.getOption(LocalCheckpointFileManager.ConfKey).isEmpty)
+      clone.conf.set(LocalCheckpointFileManager.ConfKey,
+        classOf[LocalCheckpointFileManager].getName)
+    // a listener the clone built from the static listener conf is
+    // already there; skip the caller's instance of the same class
+    val built = clone.streams.listListeners().map(_.getClass).toSet
+    spark.streams.listListeners().filterNot(l => built(l.getClass))
+      .foreach(clone.streams.addListener)
+    org.apache.spark.sql.graft.ColumnBridge.releaseStreamsOnTermination(clone)
+    clone
+  }
+
   /** DynamoDB-Streams-shaped ingest: a directory of JSON envelope files
     * (the test-harness stand-in for the stream shard). */
   def start(
@@ -111,7 +136,7 @@ object StreamingIngest {
         * them); requires the stream view to carry pre-images. */
       propagateDeletes: Boolean = false): StreamingQuery = {
 
-    val events = spark.readStream
+    val events = streamSession(spark).readStream
       .schema(Schemas.cdcEnvelope)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .json(inputDir)
@@ -156,7 +181,7 @@ object StreamingIngest {
       trigger: Trigger = Trigger.ProcessingTime("60 seconds"),
       maxFilesPerTrigger: Int = 100,
       streamAppId: Option[String] = None): StreamingQuery = {
-    val events = spark.readStream
+    val events = streamSession(spark).readStream
       .schema(Schemas.cdcEnvelope)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .json(inputDir)

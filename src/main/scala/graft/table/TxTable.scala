@@ -606,6 +606,29 @@ class TxTable private (
     spark.read.schema(graft.operators.Similarity.codesSchema(idCol,
       schemaOf(s)(idCol).dataType, pq)).parquet(dir.toString)
 
+  @transient private var codesCache: Map[String,
+    ((Path, Option[String], org.apache.spark.sql.types.DataType), DataFrame)] =
+    Map.empty
+
+  /** The live codes relation [[vectorSearch]] scans, cached per
+    * published meta. Resolving it through `DataFrameReader.parquet` (a
+    * data source lookup, a directory listing and an analysis) was about
+    * half of a search's driver time. Every change to the codes files
+    * publishes a meta with a fresh nonce, so a stale entry is never
+    * served. */
+  private def searchCodes(vecCol: String, meta: VectorIndexMeta,
+      s: Snapshot): DataFrame = synchronized {
+    val dir = new Path(vectorIndexPath(vecCol), meta.codesDir)
+    val key = (dir, meta.nonce, schemaOf(s)(meta.idColumn).dataType)
+    codesCache.get(vecCol) match {
+      case Some((k, codes)) if k == key => codes
+      case _ =>
+        val codes = readCodes(dir, meta.idColumn, meta.codebooks.nonEmpty, s)
+        codesCache += vecCol -> (key, codes)
+        codes
+    }
+  }
+
   /**
    * Incrementally extend the persisted index: encode ONLY the files
    * committed after `builtAtVersion` with the STORED quantizers,
@@ -1486,8 +1509,7 @@ class TxTable private (
     val s = snapshot
     def filtered(df: DataFrame) = where.map(df.filter).getOrElse(df)
     val current = dfFor(s)
-    val codesAll = readCodes(new Path(vectorIndexPath(vecCol), meta.codesDir),
-      idCol, meta.codebooks.nonEmpty, s)
+    val codesAll = searchCodes(vecCol, meta, s)
     val codes = where match {
       case None => codesAll
       // the filtered-id semi-join ALSO retires deleted rows' stale

@@ -46,6 +46,27 @@ object ColumnBridge {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .cloneSession()
 
+  /** Take `clone`'s streaming listener bus off the SparkContext's bus
+    * once its query terminates. A session's `streams` registers that
+    * bus on first use and Spark never removes it, so a session cloned
+    * per stream would leave one behind per start, each still handed
+    * every later event. For a clone that runs exactly one query. */
+  def releaseStreamsOnTermination(clone: SparkSession): Unit = {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    val sparkBus = clone.sparkContext.listenerBus
+    clone.streams.addListener(new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(
+          e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+        sparkBus.listeners.toArray.foreach {
+          case b: org.apache.spark.sql.execution.streaming.runtime.StreamingQueryListenerBus
+              if b.listeners.contains(this) => sparkBus.removeListener(b)
+          case _ => ()
+        }
+    })
+  }
+
   /** Copy a LOCAL temp view registered in `from` into `to` — the
     * per-statement-clone routing pattern: a CREATE TEMP VIEW executed
     * on a routing clone must survive into the caller's real session. */

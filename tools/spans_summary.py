@@ -16,8 +16,12 @@ For each op: total wall time, the `plan.front_door` and `exec.collect`
 times, the number of Spark jobs, split into those that ran under
 `plan.front_door` (`front_jobs`: work done before the DataFrame exists)
 and under `exec.collect` (`collect_jobs`), and each job's time (ms). A
-job belongs to the innermost span containing its start. A closing table
-gives the median of each column per op name.
+job belongs to the innermost span containing its start. For a streaming
+trigger (`ingest.trigger`) it also prints the time before its first job
+(`pre_ms`: the offsets and write-ahead log, planning the batch, and the
+merge's driver work up to its first job) and after its last job
+(`post_ms`: the merge's commit and the stream's commit log). A closing
+table gives the median of each column per op name.
 """
 import json
 import statistics
@@ -59,6 +63,11 @@ def summarize(spans):
             return False
         return sum(1 for j in jobs if under(j))
 
+    pre_ms = post_ms = None
+    if root["op_name"] == "ingest.trigger" and jobs:
+        pre_ms = (jobs[0]["start_ns"] - root["start_ns"]) / 1e6
+        post_ms = (root["end_ns"] - max(j["end_ns"] for j in jobs)) / 1e6
+
     return {
         "name": root["op_name"],
         "total_ms": ms(root),
@@ -67,8 +76,14 @@ def summarize(spans):
         "jobs": len(jobs),
         "front_jobs": jobs_under("plan.front_door"),
         "collect_jobs": jobs_under("exec.collect"),
+        "pre_ms": pre_ms,
+        "post_ms": post_ms,
         "job_ms": [ms(j) for j in jobs],
     }
+
+
+def cell(x):
+    return "-" if x is None else f"{x:.1f}"
 
 
 def main(argv):
@@ -79,27 +94,30 @@ def main(argv):
     rows = [(op, summarize(spans)) for op, spans in sorted(ops.items())]
     print(f"{'op':>10}  {'name':<22} {'total_ms':>9} {'front_ms':>9} "
           f"{'collect_ms':>10} {'jobs':>4} {'front_jobs':>10} "
-          f"{'collect_jobs':>12}  job_ms")
+          f"{'collect_jobs':>12} {'pre_ms':>7} {'post_ms':>7}  job_ms")
     for op, r in rows:
         jobs = " ".join(f"{x:.0f}" for x in r["job_ms"])
         print(f"{op:>10}  {r['name']:<22} {r['total_ms']:>9.1f} "
               f"{r['front_door_ms']:>9.1f} {r['collect_ms']:>10.1f} "
               f"{r['jobs']:>4} {r['front_jobs']:>10} "
-              f"{r['collect_jobs']:>12}  {jobs}")
+              f"{r['collect_jobs']:>12} {cell(r['pre_ms']):>7} "
+              f"{cell(r['post_ms']):>7}  {jobs}")
     by_name = defaultdict(list)
     for _, r in rows:
         by_name[r["name"]].append(r)
     print()
     print(f"{'median by name':<22} {'ops':>4} {'total_ms':>9} {'front_ms':>9} "
           f"{'collect_ms':>10} {'jobs':>5} {'front_jobs':>10} "
-          f"{'collect_jobs':>12}")
+          f"{'collect_jobs':>12} {'pre_ms':>7} {'post_ms':>7}")
     for name, rs in sorted(by_name.items()):
         def med(key):
-            return statistics.median(r[key] for r in rs)
+            xs = [r[key] for r in rs if r[key] is not None]
+            return statistics.median(xs) if xs else None
         print(f"{name:<22} {len(rs):>4} {med('total_ms'):>9.1f} "
               f"{med('front_door_ms'):>9.1f} {med('collect_ms'):>10.1f} "
               f"{med('jobs'):>5g} {med('front_jobs'):>10g} "
-              f"{med('collect_jobs'):>12g}")
+              f"{med('collect_jobs'):>12g} {cell(med('pre_ms')):>7} "
+              f"{cell(med('post_ms')):>7}")
     return 0
 
 
