@@ -67,6 +67,9 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     val key = s"spark.sql.catalog.$catalogName.warehouse"
     val wh = spark.conf.getOption(key).getOrElse(
       throw new IllegalStateException(s"$key is not set"))
+    // catalog calls run during analysis, before the optimizer picks its
+    // rules, so the session plans this query with them
+    org.apache.spark.sql.graft.GraftPlanner.install(spark)
     new GraftTableCatalog(spark, new Path(wh))
   }
 

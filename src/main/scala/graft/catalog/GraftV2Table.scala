@@ -506,7 +506,7 @@ class GraftV2Table(val tx: TxTable, val asOfVersion: Option[Long] = None)
     val layoutKey = if (scanFiles eq snap.files) fullKey else None
     val index = ScanBridge.snapshotIndex(tx.spark, new Path(tx.root, "data"),
       scanFullSchema, snap.partitionColumns,
-      scanFiles.map(f => (f.path, f.partitionValues, f.sizeBytes)),
+      scanFiles.map(f => (f.path, f.partitionValues, f.sizeBytes, f.rowCount)),
       scanFiles.flatMap(f => f.stats.map(f.path -> _)).toMap, partSpec,
       blooms0, layoutKey, priorSpec = priorSpec)
     (ScanBridge.parquetScanBuilder(tx.spark, index, scanFullSchema, dataSchema,

@@ -4,7 +4,7 @@ import graft.functions.expressions.{AdcLut, CosineSimilarity, ScoreTopK, TopCosi
 import org.apache.spark.TaskContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, AttributeSeq, AttributeSet, BindReferences, BoundReference, Expression, GenericInternalRow, In, InterpretedUnsafeProjection, Literal, NamedExpression}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, LogicalPlan, Project, Statistics, Union}
@@ -303,7 +303,7 @@ object VectorSearch {
     require(delta.isEmpty || model.codebooks.isEmpty || depth > 0,
       "rows outside the index are exact-scored, so they need an exact re-rank")
     val spark = codes.sparkSession
-    VectorSearchStrategy.setup(spark)
+    org.apache.spark.sql.graft.GraftPlanner.install(spark)
     val batchDf = queries.select(col(queryId), col(queryVec))
     val batch = LocalRelation(DataTypeUtils.toAttributes(batchDf.schema),
       batchDf.queryExecution.optimizedPlan match {
@@ -406,14 +406,4 @@ object VectorSearchStrategy extends SparkStrategy {
     VectorSearchExec(planLater(v.batch), planLater(v.codes), planLater(v.corpus),
       v.queryId, v.queryVec, v.codeId, v.codeCell, v.codeCodes, v.corpusId,
       v.corpusVec, v.corpusDelta, v.params, v.output, output)
-
-  /** Adds the strategy to `spark`'s planner once. Sessions cloned from
-    * `spark` afterwards inherit it. */
-  def setup(spark: SparkSession): Unit = {
-    val methods = spark.experimental
-    methods.synchronized {
-      if (!methods.extraStrategies.contains(this))
-        methods.extraStrategies = this +: methods.extraStrategies
-    }
-  }
 }

@@ -250,8 +250,9 @@ object GraftSql {
     val name = ensureCatalogRegistered(cat)
     val clone = org.apache.spark.sql.graft.ColumnBridge.cloneSession(cat.spark)
     clone.catalog.setCurrentCatalog(name)
-    // a vector_search in the statement plans its operator on the clone
-    graft.operators.VectorSearchStrategy.setup(clone)
+    // a vector_search in the statement plans its operator on the clone,
+    // and a small scan under a shuffling query runs as one task
+    org.apache.spark.sql.graft.GraftPlanner.install(clone)
     clone
   }
 

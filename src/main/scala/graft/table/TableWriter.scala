@@ -53,6 +53,14 @@ final class TableWriter(
   def task(partitionId: Int, taskId: Long, offset: Int = 0): TableWriter.Task =
     new TableWriter.Task(this, partitionId, taskId, offset)
 
+  /** Driver side: delete files this writer wrote (best effort). */
+  private def delete(files: Iterator[DataFile]): Unit = {
+    val fs = new Path(dirName).getFileSystem(bundle.hadoopConf)
+    files.foreach(f =>
+      try fs.delete(new Path(dirName, f.path), false)
+      catch { case scala.util.control.NonFatal(_) => () })
+  }
+
   /** One zero-row file of an unpartitioned write, written by the caller:
     * a change-feed commit records a file even when it changed no row. */
   def emptyFile(): DataFile = {
@@ -66,12 +74,26 @@ final class TableWriter(
 object TableWriter {
 
   /** Write `df` as ONE Spark job inside a SQL execution (AQE and the
-    * listeners see it as any action); returns every task's files. */
+    * listeners see it as any action); returns every task's files in
+    * partition order. Each task's files are collected as the task
+    * finishes: if the job fails, the driver deletes the files of the
+    * tasks that did finish (a failing task deletes its own) and
+    * rethrows, so a failed write leaves nothing for `vacuum` to reap. */
   def run(df: DataFrame, writer: TableWriter): Seq[DataFile] = {
     val qe = df.queryExecution
-    SQLExecution.withNewExecutionId(qe, Some("graft write")) {
-      df.sparkSession.sparkContext.runJob(qe.toRdd, writeTask(writer) _)
-    }.toSeq.flatten
+    var done: Array[Seq[DataFile]] = Array.empty
+    try SQLExecution.withNewExecutionId(qe, Some("graft write")) {
+      val rdd = qe.toRdd
+      done = new Array[Seq[DataFile]](rdd.getNumPartitions)
+      df.sparkSession.sparkContext.runJob(rdd, writeTask(writer) _,
+        done.indices, (i: Int, files: Seq[DataFile]) =>
+          done.synchronized(done(i) = files))
+    } catch {
+      case e: Throwable =>
+        done.synchronized(writer.delete(done.iterator.filter(_ != null).flatten))
+        throw e
+    }
+    done.toSeq.flatten
   }
 
   private def writeTask(w: TableWriter)(ctx: TaskContext,

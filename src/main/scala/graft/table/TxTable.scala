@@ -142,10 +142,10 @@ class TxTable private (
   /** DataFrame of the current snapshot. Partition columns are restored
     * from the snapshot's partitionValues (no directory inference needed,
     * so file listing is exactly the snapshot's file list). */
-  def toDF: DataFrame = dfFor(snapshot)
+  def toDF: DataFrame = dfFor(snapshot, query = true)
 
   /** Time travel: read the table as of an older committed version. */
-  def asOf(version: Long): DataFrame = dfFor(snapshotAt(version))
+  def asOf(version: Long): DataFrame = dfFor(snapshotAt(version), query = true)
 
   /** Read with partition pruning applied on the driver against snapshot
     * metadata — at 100 TB this avoids even listing non-matching files. */
@@ -154,7 +154,7 @@ class TxTable private (
     val files = s.files.filter(f => partitionFilter.forall {
       case (k, v) => f.partitionValues.get(k).contains(v)
     })
-    dfFor(s.copy(files = files))
+    dfFor(s.copy(files = files), query = true)
   }
 
   /**
@@ -178,7 +178,7 @@ class TxTable private (
     val files = s.files.filter(f => ranges.forall { case (c, lo, hi) =>
       f.stats.forall(st => FileStats.mayContainRange(st, c, lo, hi))
     })
-    var df = dfFor(s.copy(files = files))
+    var df = dfFor(s.copy(files = files), query = true)
     ranges.foreach { case (c, lo, hi) =>
       lo.foreach(l => df = df.filter(col(c) >= lit(l)))
       hi.foreach(h => df = df.filter(col(c) <= lit(h)))
@@ -502,7 +502,7 @@ class TxTable private (
     // from the same version (a commit between two reads would pair
     // them inconsistently)
     val s = snapshot
-    dfFor(s.copy(files = candidateFiles(s, column, value)))
+    dfFor(s.copy(files = candidateFiles(s, column, value)), query = true)
       .filter(col(column) === lit(value))
   }
 
@@ -2048,8 +2048,14 @@ class TxTable private (
     * deletion vectors by the per-file [[dvDeletedCol]] predicate,
     * equality deletes by [[applyEqualityDeletes]]. `withRefs` keeps
     * each live row's `(__graft_file, __graft_pos)` scan refs — the
-    * positional-delete write scan; otherwise they are dropped. */
-  private def dfFor(s: Snapshot, withRefs: Boolean = false): DataFrame = {
+    * positional-delete write scan; otherwise they are dropped. `query`
+    * marks a user read through the methods above: only such a scan may
+    * run as one task under a shuffling query
+    * ([[org.apache.spark.sql.graft.SmallScan]]); the engine's own reads
+    * that feed writes keep their layout. */
+  private def dfFor(s: Snapshot, withRefs: Boolean = false,
+      query: Boolean = false): DataFrame = {
+    if (query) org.apache.spark.sql.graft.GraftPlanner.install(spark)
     val schema = schemaOf(s)
     // MOR bookkeeping columns come from the parquet _metadata struct,
     // NOT input_file_name(): the latter is non-deterministic, and a
@@ -2092,9 +2098,10 @@ class TxTable private (
     // through the V2 catalog, which shares layouts safely.
     val index = org.apache.spark.sql.graft.ScanBridge.snapshotIndex(
       spark, dataDir, fullSchema, s.partitionColumns,
-      s.files.map(f => (f.path, f.partitionValues, f.sizeBytes)),
+      s.files.map(f => (f.path, f.partitionValues, f.sizeBytes, f.rowCount)),
       s.files.flatMap(f => f.stats.map(f.path -> _)).toMap, spec,
-      priorSpec = s.previousSpecFields.filterNot(spec.contains))
+      priorSpec = s.previousSpecFields.filterNot(spec.contains),
+      queryScan = query)
     val metaCols =
       (if (needPos) Seq(col("_metadata.row_index").as("__graft_pos")) else Nil) ++
         (if (needFile) Seq(col("_metadata.file_name").as("__graft_file")) else Nil)

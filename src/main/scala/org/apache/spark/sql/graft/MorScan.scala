@@ -144,8 +144,10 @@ class MorScanBuilder(
 
   private def newGroupBuilder(g: MorGroup, withRowIndex: Boolean)
       : ParquetScanBuilder = {
+    // a group's rows are counted before its deletes apply: unknown
     val index = new SnapshotFileIndex(spark, dataDir, fullSchema,
-      partitionColumns, g.files, g.statsByPath, partSpec,
+      partitionColumns, g.files.map { case (rel, parts, size) =>
+        (rel, parts, size, -1L) }, g.statsByPath, partSpec,
       priorSpec = priorSpec)
     indexes += index
     val base =

@@ -533,8 +533,8 @@ class CatalogV2Spec extends SparkSpec {
         val splits = scans(all).map(_.inputRDD.getNumPartitions).sum
         assert(splits < dates, s"$splits splits for $dates dates")
 
-        // the aggregate keeps its shuffle, so the range sort behind
-        // ORDER BY samples shuffle output instead of re-running the scan
+        // a table this small runs as one task (SmallScan): no exchange,
+        // so ORDER BY needs no range sampling and the scan runs once
         val q = spark.sql("""SELECT region, date, count(*) AS n, sum(amount) AS total
             FROM graft.pk.t GROUP BY region, date ORDER BY total DESC, region, date""")
         var got: Seq[org.apache.spark.sql.Row] = Nil

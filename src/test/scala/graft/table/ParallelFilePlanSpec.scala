@@ -31,17 +31,17 @@ class ParallelFilePlanSpec extends SparkSpec {
     StructField("date", StringType)))
 
   private def mkFiles(nDirs: Int, perDir: Int,
-      big: Int => Boolean): Seq[(String, Map[String, String], Long)] =
+      big: Int => Boolean): Seq[(String, Map[String, String], Long, Long)] =
     (0 until nDirs).flatMap { d =>
       val date = f"2026-01-${d + 1}%02d"
       (0 until perDir).map { i =>
         val size = if (big(d * perDir + i)) 300L * 1024 * 1024 else 1024L * 1024
-        (f"date=$date/w$d%02d-$i%06d.parquet", Map("date" -> date), size)
+        (f"date=$date/w$d%02d-$i%06d.parquet", Map("date" -> date), size, -1L)
       }
     }
 
   private def buildScan(
-      files: Seq[(String, Map[String, String], Long)],
+      files: Seq[(String, Map[String, String], Long, Long)],
       partCols: Seq[String],
       requested: StructType,
       filters: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
@@ -132,7 +132,7 @@ class ParallelFilePlanSpec extends SparkSpec {
   test("unpartitioned single-directory table chunks within the directory") {
     val files = (0 until 7000).map(i =>
       (f"w$i%06d.parquet", Map.empty[String, String],
-        if (i % 1999 == 0) 400L * 1024 * 1024 else 512L * 1024))
+        if (i % 1999 == 0) 400L * 1024 * 1024 else 512L * 1024, -1L))
     val scan = buildScan(files, Nil, schema, Nil)
     val plan = checkBothPaths(scan, Nil)
     assert(plan.nonEmpty)

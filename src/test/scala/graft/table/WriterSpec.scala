@@ -132,6 +132,29 @@ class WriterSpec extends SparkSpec {
     }
   }
 
+  test("a failed write job deletes the files its finished tasks wrote") {
+    val root = new Path(freshDir("failed_write_job"))
+    val t = TxTable.create(spark, root, "t",
+      org.apache.spark.sql.types.StructType(Seq(org.apache.spark.sql.types
+        .StructField("id", org.apache.spark.sql.types.LongType))), Nil)
+    // the last of four tasks throws once the other three have written
+    // their files and finished
+    val lastThrows = udf { (id: Long) =>
+      if (id == 399L) {
+        Thread.sleep(1500)
+        throw new IllegalStateException("last task fails")
+      }
+      id
+    }
+    val e = intercept[Exception](t.append(
+      spark.range(0, 400, 1, 4).select(lastThrows(col("id")).as("id"))))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(x => String.valueOf(x.getMessage).contains("last task fails")), e)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    assert(parquetUnder(fs, new Path(root, "data")).isEmpty)
+    assert(t.snapshot.files.isEmpty && t.toDF.count() === 0)
+  }
+
   test("a change-feed commit that changed no row still replays") {
     val t = TxTable.create(spark, new Path(freshDir("empty_change_data")), "t",
       Schemas.transactions, Seq("date"),

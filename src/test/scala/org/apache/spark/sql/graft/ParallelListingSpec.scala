@@ -27,7 +27,7 @@ class ParallelListingSpec extends graft.SparkSpec {
       val date = f"2026-02-${d + 1}%02d"
       (0 until 800).map { i =>
         val size = if (i == 13) 300L * 1024 * 1024 else 700L * 1024
-        (f"date=$date/f$d%02d-$i%05d.parquet", Map("date" -> date), size)
+        (f"date=$date/f$d%02d-$i%05d.parquet", Map("date" -> date), size, -1L)
       }
     }
     def plan(): Array[(String, Long, Long, Seq[Any])] = {
