@@ -7,10 +7,11 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.execution.SQLExecution
-import org.apache.spark.sql.graft.{ParquetWriteBundle, RowSink}
+import org.apache.spark.sql.graft.{ParquetWriteBundle, RowSink, SmallScan}
 import org.apache.spark.sql.types.StructType
 
 import scala.collection.mutable
+import scala.util.control.NonFatal
 
 /**
  * The one writer behind every file a commit references (data files,
@@ -53,12 +54,12 @@ final class TableWriter(
   def task(partitionId: Int, taskId: Long, offset: Int = 0): TableWriter.Task =
     new TableWriter.Task(this, partitionId, taskId, offset)
 
-  /** Driver side: delete files this writer wrote (best effort). */
+  /** Driver side: delete files this writer wrote (best effort per file). */
   private def delete(files: Iterator[DataFile]): Unit = {
     val fs = new Path(dirName).getFileSystem(bundle.hadoopConf)
     files.foreach(f =>
       try fs.delete(new Path(dirName, f.path), false)
-      catch { case scala.util.control.NonFatal(_) => () })
+      catch { case NonFatal(_) => () })
   }
 
   /** One zero-row file of an unpartitioned write, written by the caller:
@@ -78,8 +79,10 @@ object TableWriter {
     * partition order. Each task's files are collected as the task
     * finishes: if the job fails, the driver deletes the files of the
     * tasks that did finish (a failing task deletes its own) and
-    * rethrows, so a failed write leaves nothing for `vacuum` to reap. */
-  def run(df: DataFrame, writer: TableWriter): Seq[DataFile] = {
+    * rethrows, so a failed write leaves nothing for `vacuum` to reap;
+    * a failed delete is attached to the job's failure. `df` is planned
+    * with [[SmallScan]] off, so the write keeps its tasks. */
+  def run(df: DataFrame, writer: TableWriter): Seq[DataFile] = SmallScan.disabled {
     val qe = df.queryExecution
     var done: Array[Seq[DataFile]] = Array.empty
     try SQLExecution.withNewExecutionId(qe, Some("graft write")) {
@@ -90,7 +93,8 @@ object TableWriter {
           done.synchronized(done(i) = files))
     } catch {
       case e: Throwable =>
-        done.synchronized(writer.delete(done.iterator.filter(_ != null).flatten))
+        try done.synchronized(writer.delete(done.iterator.filter(_ != null).flatten))
+        catch { case NonFatal(x) => e.addSuppressed(x) }
         throw e
     }
     done.toSeq.flatten

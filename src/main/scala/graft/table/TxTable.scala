@@ -142,10 +142,10 @@ class TxTable private (
   /** DataFrame of the current snapshot. Partition columns are restored
     * from the snapshot's partitionValues (no directory inference needed,
     * so file listing is exactly the snapshot's file list). */
-  def toDF: DataFrame = dfFor(snapshot, query = true)
+  def toDF: DataFrame = dfFor(snapshot)
 
   /** Time travel: read the table as of an older committed version. */
-  def asOf(version: Long): DataFrame = dfFor(snapshotAt(version), query = true)
+  def asOf(version: Long): DataFrame = dfFor(snapshotAt(version))
 
   /** Read with partition pruning applied on the driver against snapshot
     * metadata — at 100 TB this avoids even listing non-matching files. */
@@ -154,7 +154,7 @@ class TxTable private (
     val files = s.files.filter(f => partitionFilter.forall {
       case (k, v) => f.partitionValues.get(k).contains(v)
     })
-    dfFor(s.copy(files = files), query = true)
+    dfFor(s.copy(files = files))
   }
 
   /**
@@ -178,7 +178,7 @@ class TxTable private (
     val files = s.files.filter(f => ranges.forall { case (c, lo, hi) =>
       f.stats.forall(st => FileStats.mayContainRange(st, c, lo, hi))
     })
-    var df = dfFor(s.copy(files = files), query = true)
+    var df = dfFor(s.copy(files = files))
     ranges.foreach { case (c, lo, hi) =>
       lo.foreach(l => df = df.filter(col(c) >= lit(l)))
       hi.foreach(h => df = df.filter(col(c) <= lit(h)))
@@ -502,7 +502,7 @@ class TxTable private (
     // from the same version (a commit between two reads would pair
     // them inconsistently)
     val s = snapshot
-    dfFor(s.copy(files = candidateFiles(s, column, value)), query = true)
+    dfFor(s.copy(files = candidateFiles(s, column, value)))
       .filter(col(column) === lit(value))
   }
 
@@ -2048,14 +2048,9 @@ class TxTable private (
     * deletion vectors by the per-file [[dvDeletedCol]] predicate,
     * equality deletes by [[applyEqualityDeletes]]. `withRefs` keeps
     * each live row's `(__graft_file, __graft_pos)` scan refs — the
-    * positional-delete write scan; otherwise they are dropped. `query`
-    * marks a user read through the methods above: only such a scan may
-    * run as one task under a shuffling query
-    * ([[org.apache.spark.sql.graft.SmallScan]]); the engine's own reads
-    * that feed writes keep their layout. */
-  private def dfFor(s: Snapshot, withRefs: Boolean = false,
-      query: Boolean = false): DataFrame = {
-    if (query) org.apache.spark.sql.graft.GraftPlanner.install(spark)
+    * positional-delete write scan; otherwise they are dropped. */
+  private def dfFor(s: Snapshot, withRefs: Boolean = false): DataFrame = {
+    org.apache.spark.sql.graft.GraftPlanner.install(spark)
     val schema = schemaOf(s)
     // MOR bookkeeping columns come from the parquet _metadata struct,
     // NOT input_file_name(): the latter is non-deterministic, and a
@@ -2100,8 +2095,7 @@ class TxTable private (
       spark, dataDir, fullSchema, s.partitionColumns,
       s.files.map(f => (f.path, f.partitionValues, f.sizeBytes, f.rowCount)),
       s.files.flatMap(f => f.stats.map(f.path -> _)).toMap, spec,
-      priorSpec = s.previousSpecFields.filterNot(spec.contains),
-      queryScan = query)
+      priorSpec = s.previousSpecFields.filterNot(spec.contains))
     val metaCols =
       (if (needPos) Seq(col("_metadata.row_index").as("__graft_pos")) else Nil) ++
         (if (needFile) Seq(col("_metadata.file_name").as("__graft_file")) else Nil)
@@ -2726,7 +2720,8 @@ class TxTable private (
         // plan-level partition count: df.rdd would append a
         // Row-deserializer stage to the lineage just to read a number;
         // toRdd asks the physical plan directly (no job, no extra stage)
-        val n = math.max(1, df.queryExecution.toRdd.getNumPartitions)
+        val n = math.max(1, org.apache.spark.sql.graft.SmallScan.disabled(
+          df.queryExecution.toRdd.getNumPartitions))
         val keys = (partCols ++ sortCols).distinct.map(col)
         df.repartitionByRange(n, keys: _*).sortWithinPartitions(keys: _*)
       }

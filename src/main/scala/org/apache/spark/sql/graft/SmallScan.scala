@@ -6,7 +6,6 @@ import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Command, Filter, 
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
-import org.apache.spark.sql.internal.SQLConf
 
 /**
  * Plans a small graft scan under a shuffling query as one task.
@@ -26,7 +25,10 @@ import org.apache.spark.sql.internal.SQLConf
  * would only lose its parallel read. It leaves alone plans that write
  * (commands), plans that choose their own partitioning (repartition,
  * rebalance), vector searches, streaming plans, and scans that report
- * key-grouped partitioning for a storage-partitioned join.
+ * key-grouped partitioning for a storage-partitioned join. A write
+ * through [[_root_.graft.table.TableWriter]] plans its input with the
+ * rule off ([[disabled]]), so its tasks, and the files they write,
+ * stay as they were.
  *
  * The size of a scan is its pruned file list's bytes and exact rows
  * from commit metadata: the V2 scan's [[SnapshotScan.prunedSize]], or a
@@ -36,16 +38,38 @@ import org.apache.spark.sql.internal.SQLConf
  */
 object SmallScan extends Rule[LogicalPlan] with PredicateHelper {
 
-  /** A plan is small when its scans hold at most as many bytes as Spark
-    * charges for opening one file (`spark.sql.files.openCostInBytes`,
-    * 4 MB by default) and at most one row per 8 of those bytes. */
-  private def isSmall(bytes: Long, rows: Long, conf: SQLConf): Boolean = {
-    val bound = conf.filesOpenCostInBytes
-    bytes <= bound && rows <= bound / 8
+  /** A plan is small when its scans hold at most `MaxRows` rows in at
+    * most `MaxBytes` bytes. Both come from a size sweep on a 4-vCPU VM
+    * (`local[4]`, AQE on): the `lake_queries` table (30 dates, ~49
+    * bytes a row) at 30k to 500k rows, each of its risk, hourly and
+    * version templates run 15 times with and without a forced
+    * coalesce, interleaved. The risk query (the heaviest aggregate, a
+    * full scan) still won at 60k rows (209 vs 228 ms through
+    * `spark.sql`; 2.95 MB, which `MaxBytes` rounds up to 3 MiB), lost
+    * at 80k (258 vs 241 ms) and took half again as long at 250k (537
+    * vs 358 ms); the lighter aggregates won further out (version up to
+    * 125k scanned rows, hourly at every size swept). The bound is the
+    * largest size at which no template lost. */
+  val MaxRows: Long = 60000L
+  val MaxBytes: Long = 3L << 20
+
+  private def isSmall(bytes: Long, rows: Long): Boolean =
+    bytes <= MaxBytes && rows <= MaxRows
+
+  // a plain ThreadLocal: a pool thread started inside `disabled` must
+  // not inherit the switch for good
+  private val off = ThreadLocal.withInitial[java.lang.Boolean](() => false)
+
+  /** Runs `body` with this rule off on the calling thread: plans
+    * optimized inside keep their scans' partitioning. */
+  def disabled[T](body: => T): T = {
+    val was = off.get
+    off.set(true)
+    try body finally off.set(was)
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if (!plan.exists(isGraftLeaf) || plan.isStreaming ||
+    if (off.get || !plan.exists(isGraftLeaf) || plan.isStreaming ||
         !plan.exists(needsExchange) || plan.exists(keepsLayout)) plan
     else {
       val sizes = plan.collectLeaves().map(sizeOf(plan, _))
@@ -53,7 +77,7 @@ object SmallScan extends Rule[LogicalPlan] with PredicateHelper {
       else {
         val bytes = sizes.map(_.get._1).sum
         val rows = sizes.map(_.get._2).sum
-        if (isSmall(bytes, rows, conf)) coalesceScans(plan) else plan
+        if (isSmall(bytes, rows)) coalesceScans(plan) else plan
       }
     }
 
@@ -72,14 +96,14 @@ object SmallScan extends Rule[LogicalPlan] with PredicateHelper {
 
   private def isGraftLeaf(p: LogicalPlan): Boolean = p match {
     case r: DataSourceV2ScanRelation => r.scan.isInstanceOf[SnapshotScan]
-    case l: LogicalRelation => queryIndex(l).isDefined
+    case l: LogicalRelation => snapshotIndex(l).isDefined
     case _ => false
   }
 
-  private def queryIndex(l: LogicalRelation): Option[SnapshotFileIndex] =
+  private def snapshotIndex(l: LogicalRelation): Option[SnapshotFileIndex] =
     l.relation match {
       case h: HadoopFsRelation => h.location match {
-        case i: SnapshotFileIndex if i.queryScan => Some(i)
+        case i: SnapshotFileIndex => Some(i)
         case _ => None
       }
       case _ => None
@@ -115,7 +139,7 @@ object SmallScan extends Rule[LogicalPlan] with PredicateHelper {
           rows.map(bytes -> _)
         case _ => None
       }
-      case l: LogicalRelation => queryIndex(l).flatMap { index =>
+      case l: LogicalRelation => snapshotIndex(l).flatMap { index =>
         val resolver = conf.resolver
         val partCols = l.output.filter(a =>
           index.partitionSchema.fieldNames.exists(resolver(_, a.name)))

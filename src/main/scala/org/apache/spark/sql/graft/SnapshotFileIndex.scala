@@ -529,12 +529,7 @@ class SnapshotFileIndex(
       * file is pruned by whichever fields its own stored values
       * carry (missing → kept). Never part of the partition schema,
       * SPJ reporting, or listing geometry. */
-    priorSpec: Seq[_root_.graft.table.PartField] = Nil,
-    /** Whether this index backs a user query through the table API's
-      * read methods, not an engine-internal read that feeds a write:
-      * only such a V1 relation may be planned as one task by
-      * [[SmallScan]]. */
-    val queryScan: Boolean = false)
+    priorSpec: Seq[_root_.graft.table.PartField] = Nil)
   extends PartitioningAwareFileIndex(spark, Map.empty, Some(fullSchema), NoopCache) {
 
   // Fully qualify against the filesystem: `allFiles()` looks leaf dirs up
@@ -1250,12 +1245,10 @@ object ScanBridge {
       bloomByColumn: Map[String, (org.apache.spark.sql.types.DataType, Map[String, Array[Byte]])] = Map.empty,
       layoutKey: Option[(String, String)] = None,
       deferred: Option[DeferredFiles] = None,
-      priorSpec: Seq[_root_.graft.table.PartField] = Nil,
-      queryScan: Boolean = false)
+      priorSpec: Seq[_root_.graft.table.PartField] = Nil)
       : SnapshotFileIndex =
     new SnapshotFileIndex(spark, dataDir, fullSchema, partitionColumns, files,
-      statsByPath, partSpec, bloomByColumn, layoutKey, deferred, priorSpec,
-      queryScan)
+      statsByPath, partSpec, bloomByColumn, layoutKey, deferred, priorSpec)
 
   /** DataFrame over a snapshot-pinned index through Spark's V1 parquet
     * relation (`HadoopFsRelation` + `LogicalRelation`, both

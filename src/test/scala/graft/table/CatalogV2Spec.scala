@@ -535,6 +535,8 @@ class CatalogV2Spec extends SparkSpec {
 
         // a table this small runs as one task (SmallScan): no exchange,
         // so ORDER BY needs no range sampling and the scan runs once
+        // (SmallScanSpec pins the scan running once above the bound too,
+        // where the aggregate keeps its shuffle)
         val q = spark.sql("""SELECT region, date, count(*) AS n, sum(amount) AS total
             FROM graft.pk.t GROUP BY region, date ORDER BY total DESC, region, date""")
         var got: Seq[org.apache.spark.sql.Row] = Nil

@@ -8,6 +8,7 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.datasources.v2.{BatchScanExec, DataSourceV2ScanRelation}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SmallScan
 
 /**
  * [[org.apache.spark.sql.graft.SmallScan]] from both sides: a small
@@ -22,11 +23,11 @@ class SmallScanSpec extends SparkSpec {
   private val Days = 8
   private val Bucketing = "spark.sql.sources.v2.bucketing.enabled"
 
-  /** A date-partitioned graft table of 1 200 rows in two commits, and a
+  /** A date-partitioned graft table of `n` rows in two commits, and a
     * temp view `parquet_copy` over the same rows in plain parquet. The
     * session does not opt in to storage-partitioned join (an earlier
     * suite may have set the conf explicitly, even to its default). */
-  private def withTable[T](tag: String)(f: (String, TxTable) => T): T = {
+  private def withTable[T](tag: String, n: Long = 1200)(f: (String, TxTable) => T): T = {
     val conf = spark.sessionState.conf
     val prevBucketing =
       if (conf.contains(Bucketing)) Some(conf.getConfString(Bucketing)) else None
@@ -34,7 +35,7 @@ class SmallScanSpec extends SparkSpec {
     val wh = freshDir(s"smallscan_$tag")
     spark.conf.set("spark.sql.catalog.graft", "graft.catalog.GraftCatalog")
     spark.conf.set("spark.sql.catalog.graft.warehouse", wh)
-    val rows = spark.range(0, 1200).select(
+    val rows = spark.range(0, n).select(
       col("id").cast("string").as("id"),
       date_add(lit("2026-01-01").cast("date"), (col("id") % Days).cast("int")).as("date"),
       element_at(array(lit("EU"), lit("US"), lit("AP")),
@@ -47,7 +48,7 @@ class SmallScanSpec extends SparkSpec {
     spark.sql("""CREATE TABLE graft.ss.t (
         id STRING, date DATE, region STRING, amount BIGINT)
         PARTITIONED BY (date)""")
-    Seq("amount < 600", "amount >= 600").foreach(p =>
+    Seq(s"amount < ${n / 2}", s"amount >= ${n / 2}").foreach(p =>
       spark.sql(s"INSERT INTO graft.ss.t SELECT * FROM parquet_copy WHERE $p"))
     val t = new TableCatalog(spark, new Path(wh)).getTable("ss", "t")
     try f("graft.ss.t", t)
@@ -67,18 +68,24 @@ class SmallScanSpec extends SparkSpec {
       .agg(count(lit(1)).as("n"), sum("amount").as("total"))
       .orderBy(col("total").desc, col("region"), col("date"))
 
-  /** The rows `df` returns and the Spark jobs collecting them started. A
+  /** The rows `df` returns, the Spark jobs collecting them started and
+    * the stages among them that read input records (scan stages). A
     * marker job after the collect drains the listener bus. */
-  private def collectCountingJobs(df: DataFrame): (Seq[Row], Int) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+  private def collectCounting(df: DataFrame): (Seq[Row], Int, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
     val marker = "graft.test.drainListener"
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val scans = new java.util.concurrent.atomic.AtomicInteger(0)
     val drained = new java.util.concurrent.CountDownLatch(1)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (e.properties != null && e.properties.getProperty(marker) != null)
           drained.countDown()
         else jobs.incrementAndGet()
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        val m = e.stageInfo.taskMetrics
+        if (m != null && m.inputMetrics.recordsRead > 0) scans.incrementAndGet()
+      }
     }
     val sc = spark.sparkContext
     sc.addSparkListener(listener)
@@ -89,7 +96,7 @@ class SmallScanSpec extends SparkSpec {
       finally sc.setLocalProperty(marker, null)
       assert(drained.await(30, java.util.concurrent.TimeUnit.SECONDS),
         "listener bus did not drain")
-      (rows, jobs.get())
+      (rows, jobs.get(), scans.get())
     } finally sc.removeSparkListener(listener)
   }
 
@@ -116,7 +123,7 @@ class SmallScanSpec extends SparkSpec {
       val want = spark.sql(grouped("parquet_copy")).collect().toSeq
       assert(want.size == 3 * Days)
       for (df <- Seq(spark.sql(grouped(name)), groupedApi(t))) {
-        val (got, jobs) = collectCountingJobs(df)
+        val (got, jobs, _) = collectCounting(df)
         assert(got === want)
         assert(jobs === 1, s"$jobs jobs:\n${df.queryExecution.executedPlan}")
         assert(shuffles(df) === 0)
@@ -127,34 +134,29 @@ class SmallScanSpec extends SparkSpec {
       def hourly(from: String) = spark.sql(
         s"""SELECT region, count(*) AS n, count(DISTINCT id % 5) AS k
            |FROM $from WHERE $window GROUP BY region ORDER BY region""".stripMargin)
-      val (got, jobs) = collectCountingJobs(hourly(name))
+      val (got, jobs, _) = collectCounting(hourly(name))
       assert(got === hourly("parquet_copy").collect().toSeq)
       assert(jobs === 1)
     }
   }
 
   test("a table above the bound keeps its packed splits and its exchange") {
-    withTable("large") { (name, t) =>
+    withTable("large", n = SmallScan.MaxRows + 1000) { (name, t) =>
       val want = spark.sql(grouped("parquet_copy")).collect().toSeq
-      val key = "spark.sql.files.openCostInBytes"
-      val prev = spark.conf.getOption(key)
-      // the bound derives from the open cost: below the table's bytes
-      spark.conf.set(key, "1024")
-      try {
-        for (df <- Seq(spark.sql(grouped(name)), groupedApi(t))) {
-          assert(df.collect().toSeq === want)
-          val plan = df.queryExecution.executedPlan
-          assert(coalescedScans(plan) === 0, s"coalesced above the bound:\n$plan")
-          assert(shuffles(df) > 0)
-          val splits = Plans.collect(plan) {
-            case b: BatchScanExec => b.inputRDD.getNumPartitions
-            case f: FileSourceScanExec => f.inputRDD.getNumPartitions
-          }
-          assert(splits.sum > 1, s"$splits splits")
+      for (df <- Seq(spark.sql(grouped(name)), groupedApi(t))) {
+        // the aggregate keeps its shuffle, so the ORDER BY's range
+        // sampler reads shuffle output: the scan still runs once
+        val (got, _, scanStages) = collectCounting(df)
+        assert(got === want)
+        assert(scanStages === 1)
+        val plan = df.queryExecution.executedPlan
+        assert(coalescedScans(plan) === 0, s"coalesced above the bound:\n$plan")
+        assert(shuffles(df) > 0)
+        val splits = Plans.collect(plan) {
+          case b: BatchScanExec => b.inputRDD.getNumPartitions
+          case f: FileSourceScanExec => f.inputRDD.getNumPartitions
         }
-      } finally prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
+        assert(splits.sum > 1, s"$splits splits")
       }
     }
   }
@@ -208,22 +210,42 @@ class SmallScanSpec extends SparkSpec {
     import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.util.QueryExecutionListener
     withTable("writes") { (name, t) =>
-      // a marker query after the writes drains the listener: a
-      // listener gets events in order
-      val markerRows = 424242L
+      // an unpartitioned table and a sort-ordered one: no rebalance sits
+      // over their writes, so only the write's own planning keeps its
+      // tasks. Each appends an aggregate that already ran as a query,
+      // coalesced there.
+      val plain = Seq("plain" -> None, "ordered" -> Some("id")).map { case (tag, order) =>
+        val u = TxTable.create(spark, new Path(freshDir(s"smallscan_$tag"), "t"),
+          s"ss.$tag", t.schema, Nil)
+        order.foreach(c => u.setProperties(Map(TxTable.SortOrderProperty -> c)))
+        u.append(t.toDF)
+        val agg = u.read().groupBy("region", "date")
+          .agg(max("id").as("id"), sum("amount").as("amount"))
+        agg.collect()
+        assert(coalescedScans(agg.queryExecution.executedPlan) === 1)
+        (u, agg)
+      }
+      // marker queries before and after the writes bound what the
+      // listener keeps: a listener gets events in order, and one
+      // registered late still gets the queued end of an earlier query
+      val (startRows, endRows) = (424241L, 424242L)
+      @volatile var started = false
       val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
       val drained = new java.util.concurrent.CountDownLatch(1)
       val listener = new QueryExecutionListener {
         override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
           qe.logical match {
             case r: org.apache.spark.sql.catalyst.plans.logical.Range
-                if r.end == markerRows => drained.countDown()
-            case _ => plans.add(qe.executedPlan)
+                if r.end == startRows => started = true
+            case r: org.apache.spark.sql.catalyst.plans.logical.Range
+                if r.end == endRows => drained.countDown()
+            case _ => if (started) plans.add(qe.executedPlan)
           }
         override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
       }
       spark.listenerManager.register(listener)
       try {
+        spark.range(startRows).collect()
         // a CDC-shaped batch from outside the table
         val batch = spark.table("parquet_copy").filter(col("date") === "2026-01-02")
           .withColumn("amount", col("amount") + 1)
@@ -232,12 +254,17 @@ class SmallScanSpec extends SparkSpec {
           .agg(max("id").as("id"), sum("amount").as("amount")))
         t.overwrite(t.toDF.groupBy("id", "date", "region")
           .agg(max("amount").as("amount")))
+        plain.foreach { case (u, agg) =>
+          u.append(agg)
+          u.overwrite(u.toDF.groupBy("id", "date", "region")
+            .agg(max("amount").as("amount")))
+        }
         spark.sql(s"MERGE INTO $name AS d USING (SELECT * FROM $name " +
           "WHERE date = DATE'2026-01-05') AS s ON d.id = s.id " +
           "WHEN MATCHED THEN UPDATE SET amount = s.amount + 1")
         spark.sql(s"INSERT INTO $name SELECT max(id), date, region, sum(amount) " +
           s"FROM $name GROUP BY date, region")
-        spark.range(markerRows).collect()
+        spark.range(endRows).collect()
         assert(drained.await(30, java.util.concurrent.TimeUnit.SECONDS),
           "listener did not drain")
       } finally spark.listenerManager.unregister(listener)
