@@ -116,9 +116,9 @@ final case class BloomIndex(
   * remains for observability and as the coverage rule for LEGACY metas
   * (both fields absent).
   * `codesDir` names the codes GENERATION: a rebuild/compaction writes
-  * a fresh directory and publishes this meta atomically (temp +
-  * rename), so a concurrent search always reads a complete old-or-new
-  * index, never a half-deleted one. */
+  * a fresh directory and publishes this meta as the next meta slot, so
+  * a concurrent search always reads a complete old-or-new index, never
+  * a half-deleted one. */
 final case class VectorIndexMeta(
     column: String,
     idColumn: String,
@@ -887,10 +887,8 @@ object TxLog {
     val p = new Path(marker)
     val f = p.getFileSystem(conf)
     f.mkdirs(p.getParent)
-    val scheme = Option(p.toUri.getScheme).getOrElse(
-      Option(f.getUri).map(_.getScheme).getOrElse("file"))
     try {
-      protocolFor(scheme).putIfAbsent(f, p,
+      protocolFor(f, p).putIfAbsent(f, p,
         decision.getBytes(StandardCharsets.UTF_8), -1L, None)
       txnStateCache.put(marker, decision)
       decision
@@ -1830,9 +1828,7 @@ object TxLog {
       try layout(logDir, expected, snapshot, conf, appendOf)
       finally pendingCarried.remove()
     val json = Serialization.write(laid)
-    val scheme = Option(target.toUri.getScheme).getOrElse(
-      Option(f.getUri).map(_.getScheme).getOrElse("file"))
-    def put(): Unit = protocolFor(scheme).putIfAbsent(f, target,
+    def put(): Unit = protocolFor(f, target).putIfAbsent(f, target,
       json.getBytes(StandardCharsets.UTF_8), next, expected)
     // self-heal the skipped mkdirs: a log dir deleted EXTERNALLY (not
     // through the catalog, which purges the caches) leaves a stale
@@ -1966,9 +1962,7 @@ object TxLog {
       manifestList = None, added = Nil, minReader = 1)
     val target = new Path(logDir, snapshotName(snapshot.version))
     val json = Serialization.write(laid)
-    val scheme = Option(target.toUri.getScheme).getOrElse(
-      Option(f.getUri).map(_.getScheme).getOrElse("file"))
-    protocolFor(scheme).putIfAbsent(f, target,
+    protocolFor(f, target).putIfAbsent(f, target,
       json.getBytes(StandardCharsets.UTF_8), snapshot.version, None)
     // chain start: a dropped-and-recreated branch reuses version paths
     purgeRawCache(logDir)
@@ -2614,9 +2608,14 @@ object TxLog {
     * this protocol instead of the scheme-selected default. */
   @volatile private[graft] var protocolOverride: Option[CommitProtocol] = None
 
-  private[graft] def protocolFor(scheme: String): CommitProtocol =
-    protocolOverride.getOrElse(
-      if (scheme == "file") LocalAtomicRenameProtocol else FsCreateProtocol)
+  /** The protocol that publishes `p` on `f`: chosen by the path's
+    * scheme, else the file system's. */
+  private[graft] def protocolFor(f: FileSystem, p: Path): CommitProtocol =
+    protocolOverride.getOrElse {
+      val scheme = Option(p.toUri.getScheme)
+        .getOrElse(Option(f.getUri).map(_.getScheme).getOrElse("file"))
+      if (scheme == "file") LocalAtomicRenameProtocol else FsCreateProtocol
+    }
 }
 
 /**

@@ -27,4 +27,20 @@ abstract class SparkSpec extends AnyFunSuite {
     org.apache.commons.io.FileUtils.deleteQuietly(p.toFile)
     p.toFile.getAbsolutePath
   }
+
+  /** Run `body` with the session confs `kv` set, then put each key back
+    * as it was, unsetting the ones that were unset. (`conf.getOption`
+    * reads Spark's default for an unset key; restoring that would leave
+    * the key set for every later suite in the shared session.) */
+  def withConfs[T](kv: (String, String)*)(body: => T): T = {
+    val conf = spark.sessionState.conf
+    val prior = kv.map { case (k, _) =>
+      k -> (if (conf.contains(k)) Some(conf.getConfString(k)) else None) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prior.reverse.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
+  }
 }

@@ -125,11 +125,9 @@ class StreamingSpec extends SparkSpec {
 
   test("transformWithState (Spark 4 state API): per-key running stats on RocksDB") {
     implicit val sqlCtx = spark.sqlContext
-    val prior = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
     // transformWithState requires the RocksDB state store provider
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConfs("spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
       val in = MemoryStream[Ev]
       val out = in.toDS()
         .groupByKey(_.user)
@@ -148,11 +146,6 @@ class StreamingSpec extends SparkSpec {
         assert(last(1L) === ((3L, 12.0)))
         assert(last(2L) === ((1L, 10.0)))
       } finally q.stop()
-    } finally {
-      prior match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 

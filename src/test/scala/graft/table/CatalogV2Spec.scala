@@ -308,14 +308,10 @@ class CatalogV2Spec extends SparkSpec {
 
   test("V2 scan: dynamic partition pruning prunes the fact scan at runtime") {
     withCatalog("dpp") { _ =>
-      val prev = spark.conf.getOption(
-        "spark.sql.optimizer.dynamicPartitionPruning.reuseBroadcastOnly")
-      val prevAqe = spark.conf.getOption("spark.sql.adaptive.enabled")
-      spark.conf.set(
-        "spark.sql.optimizer.dynamicPartitionPruning.reuseBroadcastOnly", "false")
       // plain (non-AQE) plan so the scan node is reachable via collect
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      try {
+      withConfs(
+          "spark.sql.optimizer.dynamicPartitionPruning.reuseBroadcastOnly" -> "false",
+          "spark.sql.adaptive.enabled" -> "false") {
         spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.dp")
         spark.sql("""CREATE TABLE graft.dp.fact (id STRING, date DATE, v INT)
             PARTITIONED BY (date)""")
@@ -348,17 +344,6 @@ class CatalogV2Spec extends SparkSpec {
         }
         assert(scanRows.nonEmpty && scanRows.head === 100L,
           s"fact scan output $scanRows rows — DPP did not prune")
-      } finally {
-        prev match {
-          case Some(v) => spark.conf.set(
-            "spark.sql.optimizer.dynamicPartitionPruning.reuseBroadcastOnly", v)
-          case None => spark.conf.unset(
-            "spark.sql.optimizer.dynamicPartitionPruning.reuseBroadcastOnly")
-        }
-        prevAqe match {
-          case Some(v) => spark.conf.set("spark.sql.adaptive.enabled", v)
-          case None    => spark.conf.unset("spark.sql.adaptive.enabled")
-        }
       }
     }
   }
@@ -424,16 +409,11 @@ class CatalogV2Spec extends SparkSpec {
 
   test("storage-partitioned join: co-partitioned graft tables join with zero shuffles") {
     withCatalog("spj") { _ =>
-      val prevConfs = Seq(
-        "spark.sql.sources.v2.bucketing.enabled",
-        "spark.sql.sources.v2.bucketing.pushPartValues.enabled",
-        "spark.sql.autoBroadcastJoinThreshold",
-        "spark.sql.adaptive.enabled").map(k => k -> spark.conf.getOption(k))
-      spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-      spark.conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      try {
+      withConfs(
+          "spark.sql.sources.v2.bucketing.enabled" -> "true",
+          "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
+          "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+          "spark.sql.adaptive.enabled" -> "false") {
         spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.sj")
         spark.sql("""CREATE TABLE graft.sj.a (id STRING, date DATE, v INT)
             PARTITIONED BY (date)""")
@@ -458,9 +438,6 @@ class CatalogV2Spec extends SparkSpec {
         assert(!plan.contains("Exchange"),
           s"expected a shuffle-free storage-partitioned join plan:\n$plan")
         assert(plan.contains("SortMergeJoin"), s"expected SMJ:\n$plan")
-      } finally prevConfs.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None)    => spark.conf.unset(k)
       }
     }
   }
@@ -502,65 +479,58 @@ class CatalogV2Spec extends SparkSpec {
     import org.apache.spark.sql.functions.{count, lit, sum}
     object Plans extends AdaptiveSparkPlanHelper
     val bucketing = "spark.sql.sources.v2.bucketing.enabled"
-    val prev = spark.conf.getOption(bucketing)
-    spark.conf.unset(bucketing)
     withCatalog("sizesplits") { wh =>
-      try {
-        // more dates than cores, in two commits: one split per date
-        // would plan more tasks than the machine runs at once
-        val dates = spark.sparkContext.defaultParallelism * 3
-        spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.pk")
-        spark.sql("""CREATE TABLE graft.pk.t (
-            id STRING, date DATE, region STRING, amount BIGINT)
-            PARTITIONED BY (date)""")
-        Seq(0 -> 600, 600 -> 1200).foreach { case (lo, hi) =>
-          spark.sql(s"""INSERT INTO graft.pk.t
-              SELECT CAST(id AS STRING),
-                     date_add(DATE'2026-01-01', CAST(id % $dates AS INT)),
-                     element_at(array('EU', 'US', 'AP'), CAST(id % 7 % 3 AS INT) + 1),
-                     id
-              FROM range($lo, $hi)""")
-        }
-        def scans(df: org.apache.spark.sql.DataFrame): Seq[BatchScanExec] =
-          Plans.collect(df.queryExecution.executedPlan) { case b: BatchScanExec => b }
-        def keyGrouped(df: org.apache.spark.sql.DataFrame): Boolean =
-          scans(df).exists(_.outputPartitioning.isInstanceOf[KeyGroupedPartitioning])
-        def all = spark.sql("SELECT * FROM graft.pk.t")
+      // more dates than cores, in two commits: one split per date
+      // would plan more tasks than the machine runs at once
+      val dates = spark.sparkContext.defaultParallelism * 3
+      spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.pk")
+      spark.sql("""CREATE TABLE graft.pk.t (
+          id STRING, date DATE, region STRING, amount BIGINT)
+          PARTITIONED BY (date)""")
+      Seq(0 -> 600, 600 -> 1200).foreach { case (lo, hi) =>
+        spark.sql(s"""INSERT INTO graft.pk.t
+            SELECT CAST(id AS STRING),
+                   date_add(DATE'2026-01-01', CAST(id % $dates AS INT)),
+                   element_at(array('EU', 'US', 'AP'), CAST(id % 7 % 3 AS INT) + 1),
+                   id
+            FROM range($lo, $hi)""")
+      }
+      def scans(df: org.apache.spark.sql.DataFrame): Seq[BatchScanExec] =
+        Plans.collect(df.queryExecution.executedPlan) { case b: BatchScanExec => b }
+      def keyGrouped(df: org.apache.spark.sql.DataFrame): Boolean =
+        scans(df).exists(_.outputPartitioning.isInstanceOf[KeyGroupedPartitioning])
+      def all = spark.sql("SELECT * FROM graft.pk.t")
 
-        // Spark's default (`true`) alone does not opt in: size-packed
-        // splits, fewer tasks than dates
-        assert(!keyGrouped(all), s"unasked key-grouped scan:\n${all.queryExecution.executedPlan}")
-        val splits = scans(all).map(_.inputRDD.getNumPartitions).sum
-        assert(splits < dates, s"$splits splits for $dates dates")
+      // Spark's default (`true`) alone does not opt in: size-packed
+      // splits, fewer tasks than dates
+      assert(!keyGrouped(all), s"unasked key-grouped scan:\n${all.queryExecution.executedPlan}")
+      val splits = scans(all).map(_.inputRDD.getNumPartitions).sum
+      assert(splits < dates, s"$splits splits for $dates dates")
 
-        // a table this small runs as one task (SmallScan): no exchange,
-        // so ORDER BY needs no range sampling and the scan runs once
-        // (SmallScanSpec pins the scan running once above the bound too,
-        // where the aggregate keeps its shuffle)
-        val q = spark.sql("""SELECT region, date, count(*) AS n, sum(amount) AS total
-            FROM graft.pk.t GROUP BY region, date ORDER BY total DESC, region, date""")
-        var got: Seq[org.apache.spark.sql.Row] = Nil
-        assert(scanStages { got = q.collect().toSeq } === 1)
-        assert(!keyGrouped(q))
-        val cat = new TableCatalog(spark, new Path(wh))
-        val want = cat.getTable("pk", "t").read()
-          .groupBy("region", "date")
-          .agg(count(lit(1)).as("n"), sum("amount").as("total"))
-          .orderBy(col("total").desc, col("region"), col("date"))
-          .collect().toSeq
-        assert(got.nonEmpty && got === want)
+      // a table this small runs as one task (SmallScan): no exchange,
+      // so ORDER BY needs no range sampling and the scan runs once
+      // (SmallScanSpec pins the scan running once above the bound too,
+      // where the aggregate keeps its shuffle)
+      val q = spark.sql("""SELECT region, date, count(*) AS n, sum(amount) AS total
+          FROM graft.pk.t GROUP BY region, date ORDER BY total DESC, region, date""")
+      var got: Seq[org.apache.spark.sql.Row] = Nil
+      assert(scanStages { got = q.collect().toSeq } === 1)
+      assert(!keyGrouped(q))
+      val cat = new TableCatalog(spark, new Path(wh))
+      val want = cat.getTable("pk", "t").read()
+        .groupBy("region", "date")
+        .agg(count(lit(1)).as("n"), sum("amount").as("total"))
+        .orderBy(col("total").desc, col("region"), col("date"))
+        .collect().toSeq
+      assert(got.nonEmpty && got === want)
 
-        // an explicit session setting opts in: one split per date ...
-        spark.conf.set(bucketing, "true")
+      // an explicit session setting opts in: one split per date ...
+      withConfs(bucketing -> "true") {
         assert(keyGrouped(all), "explicit opt-in must report key-grouped partitioning")
         assert(scans(all).map(_.inputRDD.getNumPartitions).sum === dates)
-        // ... and unsetting it opts out again on the same table version
-        spark.conf.unset(bucketing)
-        assert(!keyGrouped(all), "no layout cache may keep the opt-in")
-      } finally prev match {
-        case Some(v) => spark.conf.set(bucketing, v)
-        case None    => spark.conf.unset(bucketing)
       }
+      // ... and with the key unset again, the same table version opts out
+      assert(!keyGrouped(all), "no layout cache may keep the opt-in")
     }
   }
 

@@ -222,16 +222,11 @@ class HiddenPartitionSpec extends SparkSpec {
 
   test("storage-partitioned join over bucket transforms: zero shuffles") {
     withCatalog("spj") { _ =>
-      val prevConfs = Seq(
-        "spark.sql.sources.v2.bucketing.enabled",
-        "spark.sql.sources.v2.bucketing.pushPartValues.enabled",
-        "spark.sql.autoBroadcastJoinThreshold",
-        "spark.sql.adaptive.enabled").map(k => k -> spark.conf.getOption(k))
-      spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-      spark.conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      try {
+      withConfs(
+          "spark.sql.sources.v2.bucketing.enabled" -> "true",
+          "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
+          "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+          "spark.sql.adaptive.enabled" -> "false") {
         spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.bj")
         spark.sql("""CREATE TABLE graft.bj.a (id BIGINT, v INT)
             PARTITIONED BY (bucket(4, id))""")
@@ -254,9 +249,6 @@ class HiddenPartitionSpec extends SparkSpec {
         assert(plan.contains("SortMergeJoin"), s"expected SMJ:\n$plan")
         assert(!plan.contains("Exchange hashpartitioning"),
           s"expected a shuffle-free bucket-transform join:\n$plan")
-      } finally prevConfs.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None)    => spark.conf.unset(k)
       }
     }
   }

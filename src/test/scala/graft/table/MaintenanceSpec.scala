@@ -193,22 +193,11 @@ class MaintenanceSpec extends SparkSpec {
     // process CLAIMS the successor slot between our listing and our
     // CAS — only the protocol can refuse, and the loser must skip,
     // not duplicate the sweep
-    class ConditionalPutMock extends CommitProtocol {
-      val claimed = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-      override def putIfAbsent(f: org.apache.hadoop.fs.FileSystem,
-          target: Path, content: Array[Byte],
-          next: Long, expected: Option[Long]): Unit = {
-        if (f.exists(target) || !claimed.add(target.toString))
-          throw new CommitConflictException(s"slot $target taken")
-        val out = f.create(target, true)
-        try out.write(content) finally out.close()
-      }
-    }
     val mock = new ConditionalPutMock
     TxLog.protocolOverride = Some(mock)
     try {
       val maintDir = new Path(t.root, "_maintenance")
-      mock.claimed.add(new Path(maintDir, "lease-000000000.json").toString)
+      mock.slots.add(new Path(maintDir, "lease-000000000.json").toString)
       assert(t.maintainTable(orphanGraceMs = 0) ===
         Seq("skipped" -> "maintenance lease held by another process"))
     } finally TxLog.protocolOverride = None

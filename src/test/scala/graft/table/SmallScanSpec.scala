@@ -24,14 +24,8 @@ class SmallScanSpec extends SparkSpec {
   private val Bucketing = "spark.sql.sources.v2.bucketing.enabled"
 
   /** A date-partitioned graft table of `n` rows in two commits, and a
-    * temp view `parquet_copy` over the same rows in plain parquet. The
-    * session does not opt in to storage-partitioned join (an earlier
-    * suite may have set the conf explicitly, even to its default). */
+    * temp view `parquet_copy` over the same rows in plain parquet. */
   private def withTable[T](tag: String, n: Long = 1200)(f: (String, TxTable) => T): T = {
-    val conf = spark.sessionState.conf
-    val prevBucketing =
-      if (conf.contains(Bucketing)) Some(conf.getConfString(Bucketing)) else None
-    spark.conf.unset(Bucketing)
     val wh = freshDir(s"smallscan_$tag")
     spark.conf.set("spark.sql.catalog.graft", "graft.catalog.GraftCatalog")
     spark.conf.set("spark.sql.catalog.graft.warehouse", wh)
@@ -52,10 +46,7 @@ class SmallScanSpec extends SparkSpec {
       spark.sql(s"INSERT INTO graft.ss.t SELECT * FROM parquet_copy WHERE $p"))
     val t = new TableCatalog(spark, new Path(wh)).getTable("ss", "t")
     try f("graft.ss.t", t)
-    finally {
-      spark.sql("DROP TABLE IF EXISTS graft.ss.t")
-      prevBucketing.foreach(spark.conf.set(Bucketing, _))
-    }
+    finally spark.sql("DROP TABLE IF EXISTS graft.ss.t")
   }
 
   private def grouped(from: String): String =
@@ -176,8 +167,7 @@ class SmallScanSpec extends SparkSpec {
   test("a session that opts in to storage-partitioned join keeps its key-grouped scan") {
     import org.apache.spark.sql.catalyst.plans.physical.KeyGroupedPartitioning
     withTable("spj") { (name, _) =>
-      spark.conf.set(Bucketing, "true")
-      try {
+      withConfs(Bucketing -> "true") {
         val q = "SELECT date, count(*) AS n, sum(amount) AS total FROM %s " +
           "GROUP BY date ORDER BY date"
         val df = spark.sql(q.format(name))
@@ -186,7 +176,7 @@ class SmallScanSpec extends SparkSpec {
         assert(coalescedScans(plan) === 0)
         assert(Plans.collect(plan) { case b: BatchScanExec => b }
           .exists(_.outputPartitioning.isInstanceOf[KeyGroupedPartitioning]))
-      } finally spark.conf.unset(Bucketing)
+      }
     }
   }
 

@@ -2218,20 +2218,6 @@ class TxTableSpec extends SparkSpec {
     // registry decides winners, storage is a plain NON-atomic overwrite
     // like an object-store PUT. Proves the log's conflict semantics come
     // entirely from the protocol seam, not from local-rename atomicity.
-    class ConditionalPutMock extends CommitProtocol {
-      val slots = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-      val puts = new java.util.concurrent.atomic.AtomicInteger(0)
-      override def putIfAbsent(f: org.apache.hadoop.fs.FileSystem,
-          target: Path, content: Array[Byte],
-          next: Long, expected: Option[Long]): Unit = {
-        if (f.exists(target) || !slots.add(target.toString))
-          throw new CommitConflictException(
-            s"slot $target taken (stale expected=$expected)")
-        val out = f.create(target, true)
-        try out.write(content) finally out.close()
-        puts.incrementAndGet()
-      }
-    }
     val mock = new ConditionalPutMock
     TxLog.protocolOverride = Some(mock)
     try {

@@ -1128,20 +1128,6 @@ class VectorIndexSpec extends SparkSpec {
     // kfs/scripts/update_metadata.py:135-141) arbitrates slot winners
     // even when nothing is readable yet — the window rename stores
     // cannot close.
-    class ConditionalPutMock extends CommitProtocol {
-      val slots = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-      val puts = new java.util.concurrent.atomic.AtomicInteger(0)
-      override def putIfAbsent(f: org.apache.hadoop.fs.FileSystem,
-          target: Path, content: Array[Byte],
-          next: Long, expected: Option[Long]): Unit = {
-        if (f.exists(target) || !slots.add(target.toString))
-          throw new CommitConflictException(
-            s"slot $target taken (stale expected=$expected)")
-        val out = f.create(target, true)
-        try out.write(content) finally out.close()
-        puts.incrementAndGet()
-      }
-    }
     val t = embTable("vecidx_proto")
     t.buildVectorIndex("vec_id", "embedding", dim = 64)
     val mock = new ConditionalPutMock

@@ -54,9 +54,14 @@ class WriterSpec extends SparkSpec {
     "overwrite" -> (_.overwrite(SampleData.transactions(spark, 9, seed = 305L))),
     "compact" -> (_.compact()))
 
-  test("crash-point sweep: append, COW merge with change feed, overwrite, compact") {
-    val tpl = freshDir("crash_template")
-    template(tpl)
+  /** Run each op on a crashfs copy of the warehouse `tpl` (table
+    * `c.<table>`): once to count its mutating calls and take `state`
+    * before and after, then crashed at 5 points spread over those
+    * calls. `check` gets each crash point's label, a way to reopen the
+    * crashed copy through a fresh catalog, and the dry run's states. */
+  private def crashSweep[S](tpl: String, table: String,
+      ops: Seq[(String, TxTable => Unit)], state: TxTable => S)(
+      check: (String, () => TxTable, S, S) => Unit): Unit =
     ops.foreach { case (name, op) =>
       var run = 0
       // a copy of the template on crashfs, opened through a fresh catalog
@@ -67,13 +72,13 @@ class WriterSpec extends SparkSpec {
           new java.io.File(tpl), new java.io.File(dir))
         new Path(s"crashfs://$dir")
       }
-      def open(wh: Path) = new TableCatalog(spark, wh).getTable("c", "t")
+      def open(wh: Path) = new TableCatalog(spark, wh).getTable("c", table)
       val dry = copy()
-      val before = rowsOf(open(dry).toDF)
+      val before = state(open(dry))
       CrashFs.reset()
       op(open(dry))
       val calls = CrashFs.count
-      val after = rowsOf(open(dry).toDF)
+      val after = state(open(dry))
       assert(calls > 0, s"$name: the dry run wrote nothing")
       val points = (0 until 5).map(i => 1 + i * (calls - 1) / 4).distinct
       info(s"$name: $calls mutating calls, crashed at ${points.mkString(", ")}")
@@ -83,31 +88,79 @@ class WriterSpec extends SparkSpec {
         CrashFs.reset(n)
         try op(t0) catch { case scala.util.control.NonFatal(_) => () }
         finally CrashFs.reset()
-        val label = s"$name crashed at call $n of $calls"
         // the crashed process is gone, and its in-flight registrations
         // with it: from here on only the log says what is live
         TxLog.inFlightNames.clear()
-        val t = open(wh)
-        val rows = rowsOf(t.toDF)
-        assert(rows == before || rows == after, s"$label: partial state")
-        val fs = t.root.getFileSystem(spark.sessionState.newHadoopConf())
-        val head = t.snapshot
-        head.files.foreach(f => assert(
-          fs.exists(new Path(t.root, s"data/${f.path}")),
-          s"$label: live data file ${f.path} was deleted"))
-        head.changeFiles.foreach(c => assert(
-          fs.exists(new Path(t.root, s"_change_data/$c")),
-          s"$label: live change file $c was deleted"))
-        t.vacuum(retainVersions = 1, graceMillis = 0)
-        assert(parquetUnder(fs, new Path(t.root, "data")) ===
-          t.snapshot.files.map(_.path).toSet, s"$label: orphans survive vacuum")
-        assert(parquetUnder(fs, new Path(t.root, "_change_data"))
-          .subsetOf(t.snapshot.changeFiles.toSet),
-          s"$label: orphan change files survive vacuum")
-        assert(parquetUnder(fs, new Path(t.root, "_staging")).isEmpty,
-          s"$label: staging leftovers survive vacuum")
-        assert(rowsOf(open(wh).toDF) === rows, s"$label: vacuum changed rows")
+        check(s"$name crashed at call $n of $calls", () => open(wh), before, after)
       }
+    }
+
+  test("crash-point sweep: append, COW merge with change feed, overwrite, compact") {
+    val tpl = freshDir("crash_template")
+    template(tpl)
+    crashSweep(tpl, "t", ops, t => rowsOf(t.toDF)) { (label, open, before, after) =>
+      val t = open()
+      val rows = rowsOf(t.toDF)
+      assert(rows == before || rows == after, s"$label: partial state")
+      val fs = t.root.getFileSystem(spark.sessionState.newHadoopConf())
+      val head = t.snapshot
+      head.files.foreach(f => assert(
+        fs.exists(new Path(t.root, s"data/${f.path}")),
+        s"$label: live data file ${f.path} was deleted"))
+      head.changeFiles.foreach(c => assert(
+        fs.exists(new Path(t.root, s"_change_data/$c")),
+        s"$label: live change file $c was deleted"))
+      t.vacuum(retainVersions = 1, graceMillis = 0)
+      assert(parquetUnder(fs, new Path(t.root, "data")) ===
+        t.snapshot.files.map(_.path).toSet, s"$label: orphans survive vacuum")
+      assert(parquetUnder(fs, new Path(t.root, "_change_data"))
+        .subsetOf(t.snapshot.changeFiles.toSet),
+        s"$label: orphan change files survive vacuum")
+      assert(parquetUnder(fs, new Path(t.root, "_staging")).isEmpty,
+        s"$label: staging leftovers survive vacuum")
+      assert(rowsOf(open().toDF) === rows, s"$label: vacuum changed rows")
+    }
+  }
+
+  /** Tags, the vector index's published coverage and the Bloom
+    * entries, as a fresh handle reads them. */
+  private def sidecars(t: TxTable) = {
+    val fs = t.root.getFileSystem(spark.sessionState.newHadoopConf())
+    val vecDir = new Path(t.root, "_index/vector_embedding")
+    val vector = t.vectorIndexMeta("embedding").map { m =>
+      val covered = (m.coveredFilesFile.toSeq ++ m.coveredDeltaFiles).flatMap { n =>
+        val in = fs.open(new Path(vecDir, n))
+        try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
+        finally in.close()
+      }
+      (m.builtAtVersion, m.codesDir, covered.toSet, m.codeRows)
+    }
+    (t.tags, vector, t.bloomEntries("vec_id").map { case (k, v) => k -> v.toSeq })
+  }
+
+  test("crash-point sweep: tag, vector and Bloom refresh publish all or nothing") {
+    val tpl = freshDir("crash_sidecar_template")
+    val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
+    val t = new TableCatalog(spark, new Path(tpl)).createTable("c", "v",
+      emb.schema, Nil)
+    t.append(emb.filter(col("vec_id") >= 8))
+    t.buildVectorIndex("vec_id", "embedding", dim = 64, sampleQueries = 8,
+      nCells = 8, iters = 1)
+    t.buildBloomIndex("vec_id")
+    t.tag("built")
+    // rows neither index covers yet
+    t.append(emb.filter(col("vec_id") < 8))
+    val sidecarOps: Seq[(String, TxTable => Unit)] = Seq(
+      "tag" -> (_.tag("refreshed")),
+      "vector refresh" -> (_.refreshVectorIndex("embedding")),
+      "bloom refresh" -> (_.refreshBloomIndex("vec_id")))
+    crashSweep(tpl, "v", sidecarOps, sidecars) { (label, open, before, after) =>
+      val got = sidecars(open())
+      assert(got == before || got == after, s"$label: partial sidecar state")
+      // nothing the crash left wedges the next attempt
+      val op = sidecarOps.find(o => label.startsWith(o._1 + " ")).get._2
+      op(open())
+      assert(sidecars(open()) == after, s"$label: the retry did not land")
     }
   }
 
