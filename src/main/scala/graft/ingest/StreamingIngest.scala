@@ -3,6 +3,7 @@ package graft.ingest
 import graft.model.Schemas
 import graft.table.TxTable
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /**
@@ -53,7 +54,7 @@ object StreamingIngest {
     // separate jobs per micro-batch when the cap is never reached (the
     // common case: live matches are batch-bounded). Scanning everything
     // in the FIRST take job collapses that to one job per probe.
-    ss.conf.set("spark.sql.limit.initialScanPartitionNum", "4096")
+    ss.conf.set(SQLConf.LIMIT_INITIAL_NUM_PARTITIONS.key, "4096")
     ss.conf.getOption("spark.graft.stream.shufflePartitions") match {
       case Some("keep") => ()                     // deployment-tuned session
       case Some(pinned) => ss.conf.set("spark.sql.shuffle.partitions", pinned)
@@ -229,7 +230,7 @@ object StreamingIngest {
       deleteCol: Option[String] = None): Unit = {
     // no isEmpty pre-check: that costs a limit-1 job through the whole
     // decode pipeline per micro-batch; merge() itself detects an empty
-    // batch from its (cached) partition-count job and commits nothing
+    // batch from its dedup job and commits nothing
     try table.merge(batch, key = "transaction_id",
       orderCol = "processing_timestamp",
       txn = streamAppId.map(app => (app, batchId)),

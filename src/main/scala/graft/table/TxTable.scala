@@ -3,6 +3,7 @@ package graft.table
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SmallScan
 import org.apache.spark.sql.types.StructType
 
 import java.util.UUID
@@ -2182,7 +2183,7 @@ class TxTable private (
       val newFiles = writeFiles(
         sizedForWrite(
           withDerivedParts(align(post, schema, constraints = s.constraints), s),
-          rewriteBytes = 0L, batchRows = refs.length.toLong, bytesPerRow(s),
+          rewrite = Nil, batchRows = refs.length.toLong, bytesPerRow(s),
           s.partitionColumns,
           splitCol = defaultSplitCol(schema, s.partitionColumns)),
         s.partitionColumns)
@@ -2254,7 +2255,7 @@ class TxTable private (
       .select(schema.map(f => col(f.name)): _*)
     val newFiles = writeFiles(
       sizedForWrite(withDerivedParts(rewritten, s),
-        affected.map(_.sizeBytes).sum, batchRows = 0L, bytesPerRow(s),
+        affected, batchRows = 0L, bytesPerRow(s),
         s.partitionColumns,
         splitCol = defaultSplitCol(schema, s.partitionColumns),
         targetFileBytes = targetFileBytes),
@@ -2567,7 +2568,7 @@ class TxTable private (
         // plan-level partition count: df.rdd would append a
         // Row-deserializer stage to the lineage just to read a number;
         // toRdd asks the physical plan directly (no job, no extra stage)
-        val n = math.max(1, org.apache.spark.sql.graft.SmallScan.disabled(
+        val n = math.max(1, SmallScan.disabled(
           df.queryExecution.toRdd.getNumPartitions))
         val keys = (partCols ++ sortCols).distinct.map(col)
         df.repartitionByRange(n, keys: _*).sortWithinPartitions(keys: _*)
@@ -2644,24 +2645,51 @@ class TxTable private (
   private[graft] def deleteDataFiles(rels: Seq[String]): Unit =
     rels.foreach(rel => fs.delete(new Path(dataDir, rel), false))
 
+  /** `df`'s rows as a local relation, collected in ONE job (each task
+    * returns at most `cap` + 1 rows), or None when there are more than
+    * `cap`. */
+  private def collectLocal(df: DataFrame, cap: Int): Option[DataFrame] = {
+    val qe = df.queryExecution
+    val schema = df.schema
+    val taken = org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(
+        qe, Some("merge batch")) {
+      df.sparkSession.sparkContext.runJob(qe.toRdd,
+        (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => {
+          val unsafe = org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+            .create(schema)
+          it.take(cap + 1).map(unsafe(_).copy()).toArray
+        })
+    }
+    val rows = taken.flatten
+    if (rows.length > cap) None
+    else Some(org.apache.spark.sql.graft.ColumnBridge.ofRows(df.sparkSession,
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
+        qe.analyzed.output.map(_.newInstance()), rows.toSeq)))
+  }
+
   /** Output-file sizing for partition rewrites: aim at `targetFileBytes`
-    * per file given the bytes being rewritten plus the incoming batch.
+    * per file given the files being rewritten plus the incoming batch.
     * Without this, every merge writes (shuffle.partitions × touched
     * partitions) files — tiny-file debris locally, and a metadata storm
     * at lake scale. Partitioned tables are RANGE-partitioned on
     * (partition columns, `splitCol`): ranges split a large partition
     * across tasks (a hash on the partition value alone would funnel an
     * entire partition through one task — no parallelism, unbounded file
-    * size) while keeping each task's rows on few partition values. */
-  private def sizedForWrite(df: DataFrame, rewriteBytes: Long,
+    * size) while keeping each task's rows on few partition values.
+    * A rewrite that makes one file and fits [[SmallScan]]'s bound is
+    * coalesced instead: the same single writer task, and so the same
+    * one file per partition value, without the exchange. */
+  private def sizedForWrite(df: DataFrame, rewrite: Seq[DataFile],
       batchRows: Long, bytesPerRowHint: Double,
       partitionColumns: Seq[String], splitCol: Option[String],
       targetFileBytes: Long = 128L * 1024 * 1024): DataFrame = {
-    val estBytes = rewriteBytes + (batchRows * bytesPerRowHint).toLong
+    val estBytes = rewrite.map(_.sizeBytes).sum + (batchRows * bytesPerRowHint).toLong
     val numFiles = math.max(1L, (estBytes + targetFileBytes - 1) / targetFileBytes).toInt
     val rangeCols = partitionColumns.map(col) ++
       splitCol.filterNot(partitionColumns.contains).map(col)
-    if (rangeCols.nonEmpty) df.repartitionByRange(numFiles, rangeCols: _*)
+    if (numFiles == 1 && SmallScan.isSmall(estBytes, rewrite.map(_.rowCount).sum + batchRows))
+      df.coalesce(1)
+    else if (rangeCols.nonEmpty) df.repartitionByRange(numFiles, rangeCols: _*)
     else df.repartition(numFiles)
   }
 
@@ -3419,268 +3447,297 @@ class TxTable private (
     // max_by DROP the row (nulls are ignored aggregate inputs), while
     // the null-member struct just compares smallest — matching the
     // window's NULLS LAST
-    val deduped = aligned
+    def dedup(in: DataFrame): DataFrame = in
       .groupBy(col(keyName))
       .agg(max_by(struct(dataCols.map(col): _*),
         struct(col(orderCol))).as("__w"))
       .select(col(keyName) +: dataCols.map(c => col(s"__w.`$c`").as(c)): _*)
-      .cache()
-
-    // affected partition values (small: one per touched date) and the
-    // batch size from ONE job — per-partition counts materialize the
-    // cache and give both, saving a count() job per micro-batch on the
-    // streaming ingest path. Hidden-partitioning specs derive the
-    // partition values from the batch's source columns first.
-    // the batch KEY SET rides the same job (capped `collect_list` per
-    // group — what reaches the driver is ≤ cap+1 per touched
-    // partition): a micro-batch-sized key set then becomes an InSet
-    // FILTER on the target scan instead of a broadcast anti-join,
-    // deleting the per-batch broadcast-build job (and its planning
-    // gap) from the streaming hot path. `collect_list` skips nulls, so
-    // a size mismatch vs the count (nulls or cap overflow) falls back
-    // to the join path — never a silently partial key set.
     val keyCap = TxTable.MergeInlineMaxKeys
-    val keyList = slice(collect_list(col(keyName)), 1, keyCap + 1)
-    val (touched: Set[Map[String, String]], batchRows: Long,
-        collectedKeys: Seq[Any]) =
-      if (parts.isEmpty) {
-        val r = deduped.agg(
-          org.apache.spark.sql.functions.count(lit(1)), keyList).collect()(0)
-        (Set(Map.empty[String, String]), r.getLong(0), r.getSeq[Any](1))
-      } else {
-        val perPart = withDerivedParts(deduped, s)
-          .groupBy(parts.map(col): _*)
-          .agg(org.apache.spark.sql.functions.count(lit(1)).as("__n"),
-            keyList.as("__k")).collect()
-        (perPart.map(partitionValuesOf(_, parts)).toSet,
-          perPart.map(r => r.getLong(parts.size)).sum,
-          perPart.toSeq.flatMap(_.getSeq[Any](parts.size + 1)))
-      }
-    // full, null-free key set within the cap — safe to inline
-    val inlineKeys: Option[Seq[Any]] =
-      Some(collectedKeys).filter(ks =>
-        batchRows <= keyCap && ks.size == batchRows)
-    // empty batch: nothing to upsert, nothing to delete — no commit
-    // (lets the streaming path skip its own isEmpty pre-job)
-    if (batchRows == 0L) { deduped.unpersist(); return _ => s.version }
-
-    val affectedFiles =
-      if (parts.isEmpty || !keyStablePartitions) s.files
-      else s.files.filter(f => touched.contains(f.partitionValues))
-    val keptFiles = s.files.diff(affectedFiles)
-
-    val existingAffected = dfFor(s.copy(files = affectedFiles))
-    // ALL batch keys (upserts and deletes) evict their existing rows;
-    // only the non-delete winners are re-inserted. Inline key set →
-    // InSet filter (codegen hash probe, no join, no broadcast job);
-    // NULL-keyed target rows can never match a batch key, so they
-    // survive explicitly (the anti-join's null semantics).
-    val keyType = schema.find(_.name.equalsIgnoreCase(keyName))
-      .map(_.dataType)
-      .getOrElse(org.apache.spark.sql.types.StringType)
-    def inKeys(c: org.apache.spark.sql.Column, ks: Seq[Any]) =
-      org.apache.spark.sql.graft.ColumnBridge.inKeySet(c, ks, keyType)
-    val survivors = inlineKeys match {
-      case Some(ks) => existingAffected.filter(
-        col(keyName).isNull || !inKeys(col(keyName), ks))
-      case None => TxTable.antiJoinSurvivors(existingAffected,
-        deduped.select(col(key)), key, batchRows)
-    }
-    val upserts = deduped.filter(!col("__del"))
-    // stored CDF, classified by two joins shaped like the merge's own
-    // survivors gate:
-    //  - matched rows: INNER join of the pruned target against the
-    //    (cached) deduped batch, batch side broadcast below the key
-    //    gate — a CDC-sized batch classifies with ZERO shuffle of the
-    //    touched partitions; past the gate it degrades to the same
-    //    keyed SMJ as the rewrite itself. Upserts emit update pre/post
-    //    images, delete-flagged winners a delete pre-image.
-    //  - inserts: batch anti-join against the target's KEY COLUMN only
-    //    (never full rows), so the big side's shuffle is one column.
-    //    Unmatched deletes are no-ops by construction.
-    val cdfFiles =
-      if (!cdfEnabled(s)) Nil
-      else {
-        val tPrefixed = existingAffected.select(
-          schema.map(f => col(f.name).as(s"__t_${f.name}")): _*)
-        val batchSide =
-          if (batchRows <= TxTable.MergeBroadcastMaxKeys) broadcast(deduped)
-          else deduped
-        val pre = struct(schema.map(f => col(s"__t_${f.name}").as(f.name)): _*)
-        val post = struct(schema.map(f => col(f.name).as(f.name)): _*)
-        val matchedEntries = when(col("__del"), array(
-            struct(lit("delete").as("_ct"), pre.as("_row"))))
-          .otherwise(array(
-            struct(lit("update_preimage").as("_ct"), pre.as("_row")),
-            struct(lit("update_postimage").as("_ct"), post.as("_row"))))
-        val matchedChanges = tPrefixed
-          .join(batchSide, col(s"__t_$key") === col(key), "inner")
-          .select(explode(matchedEntries).as("e"))
-          .select(schema.map(f => col(s"e._row.${f.name}").as(f.name)) :+
-            col("e._ct").as("_change_type"): _*)
-        val insertChanges = upserts
-          .join(existingAffected.select(col(key)), Seq(key), "left_anti")
-          .select(schema.map(f => col(f.name)) :+
-            lit("insert").as("_change_type"): _*)
-        writeChangeData(matchedChanges.unionByName(insertChanges))
-      }
-    val txns = mergedTxns(s, txn)
-    // graft.merge.mode=merge-on-read: instead of rewriting the touched
-    // partitions, mark every matched key's OLD row deleted in per-file
-    // vectors and append only the winners — commit cost O(batch +
-    // matched positions), never O(touched-partition bytes). The CDC
-    // fast path for huge hot partitions; the batch-sized contract of
-    // the other MOR writes applies (positions collect on the driver).
-    if (TxTable.morMode(s, TxTable.MergeModeProperty)) {
-      // inline key set → InSet filter on the ref scan (no broadcast
-      // build job per micro-batch — the same fusion as the survivors
-      // gate); a semi join's null-key scan rows drop, and so do InSet's
-      def matchedRefs(scan: DataFrame): DataFrame = inlineKeys match {
-        case Some(ks) => scan.filter(inKeys(col(keyName), ks))
+    // A batch whose input fits SmallScan's bound is collected once, in
+    // one job, as a local relation of at most keyCap rows. Its touched
+    // partitions, row count and inline key set come from those rows on
+    // the driver, and the dedup runs over it as one coalesced task
+    // inside the write: no exchange, no cache, no second batch job.
+    // The estimate is the optimizer's (a driver-side stat, no job; the
+    // number the stream session sizes its shuffles by): a plan Spark
+    // cannot size estimates as huge and never counts as small.
+    val est = batch.queryExecution.optimizedPlan.stats
+    val local: Option[DataFrame] =
+      if (est.sizeInBytes <= SmallScan.MaxBytes && est.rowCount.forall(_ <= SmallScan.MaxRows))
+        collectLocal(aligned, keyCap)
+      else None
+    val deduped = local.map(l => dedup(l.coalesce(1)))
+      .getOrElse(dedup(aligned).cache())
+    // released however the merge ends: a CHECK or NOT NULL raise_error
+    // or a failed write must not leave the entry in the CacheManager
+    try {
+      val (touched: Set[Map[String, String]], batchRows: Long,
+          inlineKeys: Option[Seq[Any]]) = local match {
+        case Some(l) =>
+          // projections of the local relation fold into it: no job, also
+          // for hidden-partition transforms. The partitions of every
+          // batch row cover the winners' partitions, and the batch row
+          // count bounds the deduped one.
+          val touched: Set[Map[String, String]] =
+            if (parts.isEmpty) Set(Map.empty)
+            else withDerivedParts(l, s).select(parts.map(col): _*).collect()
+              .distinct.map(partitionValuesOf(_, parts)).toSet
+          val keys = l.select(col(keyName)).collect().map(_.get(0))
+          // a NULL batch key matches no target row (the anti-join's null
+          // semantics), so the non-null keys are the whole key set
+          (touched, keys.length.toLong, Some(keys.filter(_ != null).distinct.toSeq))
         case None =>
-          val keySide =
-            if (batchRows <= TxTable.MergeBroadcastMaxKeys)
-              broadcast(deduped.select(col(key)))
-            else deduped.select(col(key))
-          scan.join(keySide, Seq(key), "left_semi")
-      }
-      // same driver-memory guardrail as deletePos/updateMor: the
-      // matched refs collect on the driver (≤1 live row per batch key,
-      // so batch-bounded), but a huge CDC batch in merge-on-read mode
-      // must not materialize millions of (file, pos) pairs — past
-      // `spark.graft.morMaxPositions` the LIMIT cap+1 probe trips and
-      // the merge degrades to the copy-on-write rewrite below, which
-      // never collects rows
-      val maxPos = morMaxPositions
-      val capped = matchedRefs(dfFor(s.copy(files = affectedFiles), withRefs = true))
-        .select(col("__graft_file"), col("__graft_pos"))
-        .limit(math.min(maxPos, Int.MaxValue - 1L).toInt + 1)
-        .collect()
-      if (capped.length <= maxPos) {
-        val refs = capped.map(r => (r.getString(0), r.getLong(1)))
-        val newFiles = writeFiles(
-          sizedForWrite(withDerivedParts(
-              upserts.select(schema.map(f => col(f.name)): _*), s),
-            rewriteBytes = 0L, batchRows, bytesPerRow(s), parts,
-            splitCol = Some(key)),
-          parts)
-        deduped.unpersist()
-        val refsByName = refs.groupBy(_._1)
-        val sPaths = s.files.map(_.path).toSet
-        // Per-BASE DV merge: sidecars are independent per file, so they
-        // write concurrently (driver-local I/O; the per-file work is a
-        // sort + one small write). Re-run against the CURRENT snapshot
-        // on a rebase attempt, so a concurrently-grown vector's
-        // positions survive the union (delete∘delete commutes — the
-        // same argument as deletePos's retry) and a concurrently
-        // REWRITTEN file surfaces as a conflict instead of silently
-        // resurrecting its matched rows.
-        def morOutput(base: Snapshot): (Seq[DataFile], Seq[DeletionVector]) = {
-          val relByName = base.files.map(f => new Path(f.path).getName -> f.path).toMap
-          val existing = base.deletionVectors.map(d => d.dataFile -> d).toMap
-          val updated: Map[String, DeletionVector] = refsByName.toSeq
-            .par.map { case (name, rs) =>
-              val rel = relByName.getOrElse(name,
-                throw new java.util.ConcurrentModificationException(
-                  s"merge-on-read MERGE positions reference data file " +
-                    s"'$name', which a concurrent commit rewrote or " +
-                    "removed; re-run the merge"))
-              val mergedPos = (existing.get(rel)
-                .map(d => readDvPositions(d.path)).getOrElse(Array.empty[Long]) ++
-                rs.map(_._2)).distinct.sorted
-              rel -> DeletionVector(rel, writeDvFile(mergedPos), mergedPos.length)
-            }.seq.toMap
-          val files = base.files ++ newFiles
-          val live = files.map(_.path).toSet
-          (files, (base.deletionVectors.filterNot(d => updated.contains(d.dataFile))
-            ++ updated.values).filter(d => live.contains(d.dataFile)))
-        }
-        return {
-          case pt @ Some(_) =>
-            // inside a multi-table txn: CAS against the staged
-            // snapshot only — any concurrent commit aborts the txn
-            val (files, dvs) = morOutput(s)
-            commit(Some(s.version), "MERGE_MOR", schema,
-              parts, files, appTxns = txns, deletionVectors = dvs,
-              changeFiles = cdfFiles, pendingTxn = pt)
-          case None if !keyStablePartitions =>
-            // without key-stable partitions the ref scan spanned ALL
-            // partitions, so the touched-set rebase guard below cannot
-            // certify a concurrent commit didn't add this batch's keys
-            // elsewhere — CAS against the scanned snapshot only, like
-            // the COW branch in the same mode
-            val (files0, dvs0) = morOutput(s)
-            val v = commit(Some(s.version), "MERGE_MOR", schema,
-              parts, files0, appTxns = txns,
-              deletionVectors = dvs0, changeFiles = cdfFiles)
-            maybeAutoCompact(touched)
-            maybeAutoMaintain()
-            v
-          case None =>
-            // standalone: REBASE across concurrent commits that left
-            // the merge's inputs untouched, like the COW MERGE —
-            // disjoint-partition MOR merges (multi-stream CDC ingest)
-            // compose. Guards per attempt: the idempotent fence
-            // re-checks, and no files may have been ADDED in the
-            // touched partitions since the ref scan (they could carry
-            // the batch's keys — rebasing past them would duplicate).
-            val v = retryingCommit("MERGE_MOR") { expected =>
-              val cur = if (expected == s.version) s else snapshotAt(expected)
-              if (txn.exists { case (a, tv) =>
-                  cur.appTxns.get(a).exists(_ >= tv) }) {
-                deleteDataFiles(newFiles.map(_.path))
-                cur.version
-              } else {
-                if (expected != s.version &&
-                    cur.files.exists(f => !sPaths.contains(f.path) &&
-                      touched.contains(f.partitionValues)))
-                  throw new java.util.ConcurrentModificationException(
-                    s"merge-on-read MERGE of $name rebased onto " +
-                      s"v$expected, but a concurrent commit added files " +
-                      "in a merged partition (they could carry the " +
-                      "batch's keys); re-run the merge")
-                val (files, dvs) = morOutput(cur)
-                commit(Some(expected), "MERGE_MOR", schemaOf(cur),
-                  cur.partitionColumns, files, appTxns = mergedTxns(cur, txn),
-                  deletionVectors = dvs, changeFiles = cdfFiles)
-              }
+          // affected partition values (small: one per touched date) and
+          // the batch size from ONE job — per-partition counts
+          // materialize the cache and give both. Hidden-partitioning
+          // specs derive the partition values from the batch's source
+          // columns first. The batch KEY SET rides the same job (capped
+          // `collect_list` per group — what reaches the driver is ≤ cap+1
+          // per touched partition): a key set within the cap becomes an
+          // InSet FILTER on the target scan instead of a broadcast
+          // anti-join. `collect_list` skips nulls, so a size mismatch vs
+          // the count (nulls or cap overflow) falls back to the join path
+          // — never a silently partial key set.
+          val keyList = slice(collect_list(col(keyName)), 1, keyCap + 1)
+          val (touched: Set[Map[String, String]], batchRows: Long,
+              collectedKeys: Seq[Any]) =
+            if (parts.isEmpty) {
+              val r = deduped.agg(
+                org.apache.spark.sql.functions.count(lit(1)), keyList).collect()(0)
+              (Set(Map.empty[String, String]), r.getLong(0), r.getSeq[Any](1))
+            } else {
+              val perPart = withDerivedParts(deduped, s)
+                .groupBy(parts.map(col): _*)
+                .agg(org.apache.spark.sql.functions.count(lit(1)).as("__n"),
+                  keyList.as("__k")).collect()
+              (perPart.map(partitionValuesOf(_, parts)).toSet,
+                perPart.map(r => r.getLong(parts.size)).sum,
+                perPart.toSeq.flatMap(_.getSeq[Any](parts.size + 1)))
             }
-            maybeAutoCompact(touched)
-            maybeAutoMaintain()
-            v
-        }
+          // full, null-free key set within the cap — safe to inline
+          (touched, batchRows, Some(collectedKeys).filter(ks =>
+            batchRows <= keyCap && ks.size == batchRows))
       }
-      // over the cap: fall through to the copy-on-write merge below
-    }
-    val merged = survivors.select(schema.map(f => col(f.name)): _*)
-      .unionByName(upserts.select(schema.map(f => col(f.name)): _*))
-    val newFiles = writeFiles(
-      sizedForWrite(withDerivedParts(merged, s),
-        affectedFiles.map(_.sizeBytes).sum, batchRows,
-        bytesPerRow(s), parts, splitCol = Some(key)),
-      parts)
-    deduped.unpersist()
-    // No blind retry: the rewritten files were derived from THIS
-    // snapshot; a concurrent commit invalidates them (retrying would
-    // silently drop its rows). Conflicts surface to the caller, who
-    // re-reads and re-merges — serializable upsert semantics. The
-    // streaming ingest path is single-writer, so this never fires there.
-    // With key-stable partitions the rewrite REBASES like DELETE/UPDATE
-    // (commitRewrite), with one extra guard: no concurrent files in the
-    // touched partitions (they could carry the batch's keys). Disjoint
-    // concurrent merges — the multi-stream ingest shape — then compose.
-    pendingTxn => {
-      val v =
-        if (keyStablePartitions)
-          commitRewrite(s, "MERGE", affectedFiles, newFiles,
-            changeFiles = cdfFiles, pendingTxn = pendingTxn,
-            noNewFilesIn = Some(touched), txn = txn)
-        else commit(Some(s.version), "MERGE", schema, parts,
-          keptFiles ++ newFiles, appTxns = txns, changeFiles = cdfFiles,
-          pendingTxn = pendingTxn)
-      if (pendingTxn.isEmpty) { maybeAutoCompact(touched); maybeAutoMaintain() }
-      v
-    }
+      // empty batch: nothing to upsert, nothing to delete — no commit
+      // (lets the streaming path skip its own isEmpty pre-job)
+      if (batchRows == 0L) return _ => s.version
+
+      val affectedFiles =
+        if (parts.isEmpty || !keyStablePartitions) s.files
+        else s.files.filter(f => touched.contains(f.partitionValues))
+      val keptFiles = s.files.diff(affectedFiles)
+
+      val existingAffected = dfFor(s.copy(files = affectedFiles))
+      // ALL batch keys (upserts and deletes) evict their existing rows;
+      // only the non-delete winners are re-inserted. Inline key set →
+      // InSet filter (codegen hash probe, no join, no broadcast job);
+      // NULL-keyed target rows can never match a batch key, so they
+      // survive explicitly (the anti-join's null semantics).
+      val keyType = schema.find(_.name.equalsIgnoreCase(keyName))
+        .map(_.dataType)
+        .getOrElse(org.apache.spark.sql.types.StringType)
+      def inKeys(c: org.apache.spark.sql.Column, ks: Seq[Any]) =
+        org.apache.spark.sql.graft.ColumnBridge.inKeySet(c, ks, keyType)
+      val survivors = inlineKeys match {
+        case Some(ks) => existingAffected.filter(
+          col(keyName).isNull || !inKeys(col(keyName), ks))
+        case None => TxTable.antiJoinSurvivors(existingAffected,
+          deduped.select(col(key)), key, batchRows)
+      }
+      val upserts = deduped.filter(!col("__del"))
+      // stored CDF, classified by two joins shaped like the merge's own
+      // survivors gate:
+      //  - matched rows: INNER join of the pruned target against the
+      //    deduped batch (local or cached), batch side broadcast below
+      //    the key gate — a CDC-sized batch classifies with ZERO shuffle of the
+      //    touched partitions; past the gate it degrades to the same
+      //    keyed SMJ as the rewrite itself. Upserts emit update pre/post
+      //    images, delete-flagged winners a delete pre-image.
+      //  - inserts: batch anti-join against the target's KEY COLUMN only
+      //    (never full rows), so the big side's shuffle is one column.
+      //    Unmatched deletes are no-ops by construction.
+      val cdfFiles =
+        if (!cdfEnabled(s)) Nil
+        else {
+          val tPrefixed = existingAffected.select(
+            schema.map(f => col(f.name).as(s"__t_${f.name}")): _*)
+          val batchSide =
+            if (batchRows <= TxTable.MergeBroadcastMaxKeys) broadcast(deduped)
+            else deduped
+          val pre = struct(schema.map(f => col(s"__t_${f.name}").as(f.name)): _*)
+          val post = struct(schema.map(f => col(f.name).as(f.name)): _*)
+          val matchedEntries = when(col("__del"), array(
+              struct(lit("delete").as("_ct"), pre.as("_row"))))
+            .otherwise(array(
+              struct(lit("update_preimage").as("_ct"), pre.as("_row")),
+              struct(lit("update_postimage").as("_ct"), post.as("_row"))))
+          val matchedChanges = tPrefixed
+            .join(batchSide, col(s"__t_$key") === col(key), "inner")
+            .select(explode(matchedEntries).as("e"))
+            .select(schema.map(f => col(s"e._row.${f.name}").as(f.name)) :+
+              col("e._ct").as("_change_type"): _*)
+          val insertChanges = upserts
+            .join(existingAffected.select(col(key)), Seq(key), "left_anti")
+            .select(schema.map(f => col(f.name)) :+
+              lit("insert").as("_change_type"): _*)
+          writeChangeData(matchedChanges.unionByName(insertChanges))
+        }
+      val txns = mergedTxns(s, txn)
+      // graft.merge.mode=merge-on-read: instead of rewriting the touched
+      // partitions, mark every matched key's OLD row deleted in per-file
+      // vectors and append only the winners — commit cost O(batch +
+      // matched positions), never O(touched-partition bytes). The CDC
+      // fast path for huge hot partitions; the batch-sized contract of
+      // the other MOR writes applies (positions collect on the driver).
+      if (TxTable.morMode(s, TxTable.MergeModeProperty)) {
+        // inline key set → InSet filter on the ref scan (no broadcast
+        // build job per micro-batch — the same fusion as the survivors
+        // gate); a semi join's null-key scan rows drop, and so do InSet's
+        def matchedRefs(scan: DataFrame): DataFrame = inlineKeys match {
+          case Some(ks) => scan.filter(inKeys(col(keyName), ks))
+          case None =>
+            val keySide =
+              if (batchRows <= TxTable.MergeBroadcastMaxKeys)
+                broadcast(deduped.select(col(key)))
+              else deduped.select(col(key))
+            scan.join(keySide, Seq(key), "left_semi")
+        }
+        // same driver-memory guardrail as deletePos/updateMor: the
+        // matched refs collect on the driver (≤1 live row per batch key,
+        // so batch-bounded), but a huge CDC batch in merge-on-read mode
+        // must not materialize millions of (file, pos) pairs — past
+        // `spark.graft.morMaxPositions` the LIMIT cap+1 probe trips and
+        // the merge degrades to the copy-on-write rewrite below, which
+        // never collects rows
+        val maxPos = morMaxPositions
+        val capped = matchedRefs(dfFor(s.copy(files = affectedFiles), withRefs = true))
+          .select(col("__graft_file"), col("__graft_pos"))
+          .limit(math.min(maxPos, Int.MaxValue - 1L).toInt + 1)
+          .collect()
+        if (capped.length <= maxPos) {
+          val refs = capped.map(r => (r.getString(0), r.getLong(1)))
+          val newFiles = writeFiles(
+            sizedForWrite(withDerivedParts(
+                upserts.select(schema.map(f => col(f.name)): _*), s),
+              rewrite = Nil, batchRows, bytesPerRow(s), parts,
+              splitCol = Some(key)),
+            parts)
+          val refsByName = refs.groupBy(_._1)
+          val sPaths = s.files.map(_.path).toSet
+          // Per-BASE DV merge: sidecars are independent per file, so they
+          // write concurrently (driver-local I/O; the per-file work is a
+          // sort + one small write). Re-run against the CURRENT snapshot
+          // on a rebase attempt, so a concurrently-grown vector's
+          // positions survive the union (delete∘delete commutes — the
+          // same argument as deletePos's retry) and a concurrently
+          // REWRITTEN file surfaces as a conflict instead of silently
+          // resurrecting its matched rows.
+          def morOutput(base: Snapshot): (Seq[DataFile], Seq[DeletionVector]) = {
+            val relByName = base.files.map(f => new Path(f.path).getName -> f.path).toMap
+            val existing = base.deletionVectors.map(d => d.dataFile -> d).toMap
+            val updated: Map[String, DeletionVector] = refsByName.toSeq
+              .par.map { case (name, rs) =>
+                val rel = relByName.getOrElse(name,
+                  throw new java.util.ConcurrentModificationException(
+                    s"merge-on-read MERGE positions reference data file " +
+                      s"'$name', which a concurrent commit rewrote or " +
+                      "removed; re-run the merge"))
+                val mergedPos = (existing.get(rel)
+                  .map(d => readDvPositions(d.path)).getOrElse(Array.empty[Long]) ++
+                  rs.map(_._2)).distinct.sorted
+                rel -> DeletionVector(rel, writeDvFile(mergedPos), mergedPos.length)
+              }.seq.toMap
+            val files = base.files ++ newFiles
+            val live = files.map(_.path).toSet
+            (files, (base.deletionVectors.filterNot(d => updated.contains(d.dataFile))
+              ++ updated.values).filter(d => live.contains(d.dataFile)))
+          }
+          return {
+            case pt @ Some(_) =>
+              // inside a multi-table txn: CAS against the staged
+              // snapshot only — any concurrent commit aborts the txn
+              val (files, dvs) = morOutput(s)
+              commit(Some(s.version), "MERGE_MOR", schema,
+                parts, files, appTxns = txns, deletionVectors = dvs,
+                changeFiles = cdfFiles, pendingTxn = pt)
+            case None if !keyStablePartitions =>
+              // without key-stable partitions the ref scan spanned ALL
+              // partitions, so the touched-set rebase guard below cannot
+              // certify a concurrent commit didn't add this batch's keys
+              // elsewhere — CAS against the scanned snapshot only, like
+              // the COW branch in the same mode
+              val (files0, dvs0) = morOutput(s)
+              val v = commit(Some(s.version), "MERGE_MOR", schema,
+                parts, files0, appTxns = txns,
+                deletionVectors = dvs0, changeFiles = cdfFiles)
+              maybeAutoCompact(touched)
+              maybeAutoMaintain()
+              v
+            case None =>
+              // standalone: REBASE across concurrent commits that left
+              // the merge's inputs untouched, like the COW MERGE —
+              // disjoint-partition MOR merges (multi-stream CDC ingest)
+              // compose. Guards per attempt: the idempotent fence
+              // re-checks, and no files may have been ADDED in the
+              // touched partitions since the ref scan (they could carry
+              // the batch's keys — rebasing past them would duplicate).
+              val v = retryingCommit("MERGE_MOR") { expected =>
+                val cur = if (expected == s.version) s else snapshotAt(expected)
+                if (txn.exists { case (a, tv) =>
+                    cur.appTxns.get(a).exists(_ >= tv) }) {
+                  deleteDataFiles(newFiles.map(_.path))
+                  cur.version
+                } else {
+                  if (expected != s.version &&
+                      cur.files.exists(f => !sPaths.contains(f.path) &&
+                        touched.contains(f.partitionValues)))
+                    throw new java.util.ConcurrentModificationException(
+                      s"merge-on-read MERGE of $name rebased onto " +
+                        s"v$expected, but a concurrent commit added files " +
+                        "in a merged partition (they could carry the " +
+                        "batch's keys); re-run the merge")
+                  val (files, dvs) = morOutput(cur)
+                  commit(Some(expected), "MERGE_MOR", schemaOf(cur),
+                    cur.partitionColumns, files, appTxns = mergedTxns(cur, txn),
+                    deletionVectors = dvs, changeFiles = cdfFiles)
+                }
+              }
+              maybeAutoCompact(touched)
+              maybeAutoMaintain()
+              v
+          }
+        }
+        // over the cap: fall through to the copy-on-write merge below
+      }
+      val merged = survivors.select(schema.map(f => col(f.name)): _*)
+        .unionByName(upserts.select(schema.map(f => col(f.name)): _*))
+      val newFiles = writeFiles(
+        sizedForWrite(withDerivedParts(merged, s),
+          affectedFiles, batchRows,
+          bytesPerRow(s), parts, splitCol = Some(key)),
+        parts)
+      // No blind retry: the rewritten files were derived from THIS
+      // snapshot; a concurrent commit invalidates them (retrying would
+      // silently drop its rows). Conflicts surface to the caller, who
+      // re-reads and re-merges — serializable upsert semantics. The
+      // streaming ingest path is single-writer, so this never fires there.
+      // With key-stable partitions the rewrite REBASES like DELETE/UPDATE
+      // (commitRewrite), with one extra guard: no concurrent files in the
+      // touched partitions (they could carry the batch's keys). Disjoint
+      // concurrent merges — the multi-stream ingest shape — then compose.
+      pendingTxn => {
+        val v =
+          if (keyStablePartitions)
+            commitRewrite(s, "MERGE", affectedFiles, newFiles,
+              changeFiles = cdfFiles, pendingTxn = pendingTxn,
+              noNewFilesIn = Some(touched), txn = txn)
+          else commit(Some(s.version), "MERGE", schema, parts,
+            keptFiles ++ newFiles, appTxns = txns, changeFiles = cdfFiles,
+            pendingTxn = pendingTxn)
+        if (pendingTxn.isEmpty) { maybeAutoCompact(touched); maybeAutoMaintain() }
+        v
+      }
+    } finally if (local.isEmpty) deduped.unpersist()
   }
 
   /**
@@ -3868,7 +3925,7 @@ class TxTable private (
       val newFiles = writeFiles(
         sizedForWrite(
           withDerivedParts(align(content, schema, constraints = s.constraints), s),
-          affected.map(_.sizeBytes).sum, srcRows, bytesPerRow(s), parts,
+          affected, srcRows, bytesPerRow(s), parts,
           splitCol = defaultSplitCol(schema, parts)),
         parts)
       commit(Some(s.version), "MERGE", schema, parts, kept ++ newFiles,
@@ -3919,8 +3976,7 @@ class TxTable private (
         .select(schema.map(f => col(f.name)) :+
           lit("delete").as("_change_type"): _*))
     val newFiles = writeFiles(
-      sizedForWrite(withDerivedParts(rewritten, s),
-        affected.map(_.sizeBytes).sum,
+      sizedForWrite(withDerivedParts(rewritten, s), affected,
         batchRows = 0L, bytesPerRow(s), s.partitionColumns,
         splitCol = defaultSplitCol(schema, s.partitionColumns)),
       s.partitionColumns)
@@ -3979,8 +4035,7 @@ class TxTable private (
             col("e._ct").as("_change_type"): _*))
       }
     val newFiles = writeFiles(
-      sizedForWrite(withDerivedParts(rewritten, s),
-        affected.map(_.sizeBytes).sum,
+      sizedForWrite(withDerivedParts(rewritten, s), affected,
         batchRows = 0L, bytesPerRow(s), s.partitionColumns,
         splitCol = defaultSplitCol(schema, s.partitionColumns)),
       s.partitionColumns)
@@ -5751,7 +5806,8 @@ object TxTable {
 
   /** Batch key sets up to this many inline into the merge plan as an
     * InSet filter (collected inside the SAME job as the touched-
-    * partition counts) — one fewer Spark job per streaming micro-batch
+    * partition counts, or with the batch itself when the merge collects
+    * it as a local relation) — one fewer Spark job per streaming micro-batch
     * than the broadcast anti-join, at ~bytes-of-keys driver cost.
     * Sized for MICRO-batches (the fixed-cost-dominated shape the
     * fusion wins on, measured +10% batch rate at 10k keys); large

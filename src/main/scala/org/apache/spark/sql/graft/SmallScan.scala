@@ -49,11 +49,13 @@ object SmallScan extends Rule[LogicalPlan] with PredicateHelper {
     * at 80k (258 vs 241 ms) and took half again as long at 250k (537
     * vs 358 ms); the lighter aggregates won further out (version up to
     * 125k scanned rows, hourly at every size swept). The bound is the
-    * largest size at which no template lost. */
+    * largest size at which no template lost. The keyed merge and the
+    * copy-on-write rewrites of [[_root_.graft.table.TxTable]] use the
+    * same bound to dedup a batch and write a rewrite in one task. */
   val MaxRows: Long = 60000L
   val MaxBytes: Long = 3L << 20
 
-  private def isSmall(bytes: Long, rows: Long): Boolean =
+  def isSmall(bytes: Long, rows: Long): Boolean =
     bytes <= MaxBytes && rows <= MaxRows
 
   // a plain ThreadLocal: a pool thread started inside `disabled` must

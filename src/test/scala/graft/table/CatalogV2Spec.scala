@@ -442,37 +442,6 @@ class CatalogV2Spec extends SparkSpec {
     }
   }
 
-  /** Stages run by `body` that read input records (scan stages),
-    * counted by a SparkListener. A marker job after `body` drains the
-    * listener bus: a listener gets events in order, so once the
-    * marker's JobStart arrives every stage of `body` has arrived too. */
-  private def scanStages(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-    val marker = "graft.test.drainListener"
-    val scans = new java.util.concurrent.atomic.AtomicInteger(0)
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-        val m = e.stageInfo.taskMetrics
-        if (m != null && m.inputMetrics.recordsRead > 0) scans.incrementAndGet()
-      }
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty(marker) != null)
-          drained.countDown()
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      body
-      sc.setLocalProperty(marker, "1")
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setLocalProperty(marker, null)
-      assert(drained.await(30, java.util.concurrent.TimeUnit.SECONDS),
-        "listener bus did not drain")
-    } finally sc.removeSparkListener(listener)
-    scans.get()
-  }
-
   test("V2 scan packs splits by size unless the session opts in to storage-partitioned join") {
     import org.apache.spark.sql.catalyst.plans.physical.KeyGroupedPartitioning
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -513,8 +482,8 @@ class CatalogV2Spec extends SparkSpec {
       // where the aggregate keeps its shuffle)
       val q = spark.sql("""SELECT region, date, count(*) AS n, sum(amount) AS total
           FROM graft.pk.t GROUP BY region, date ORDER BY total DESC, region, date""")
-      var got: Seq[org.apache.spark.sql.Row] = Nil
-      assert(scanStages { got = q.collect().toSeq } === 1)
+      val (got, run) = countingJobs(q.collect().toSeq)
+      assert(run.scanStages === 1)
       assert(!keyGrouped(q))
       val cat = new TableCatalog(spark, new Path(wh))
       val want = cat.getTable("pk", "t").read()

@@ -59,38 +59,6 @@ class SmallScanSpec extends SparkSpec {
       .agg(count(lit(1)).as("n"), sum("amount").as("total"))
       .orderBy(col("total").desc, col("region"), col("date"))
 
-  /** The rows `df` returns, the Spark jobs collecting them started and
-    * the stages among them that read input records (scan stages). A
-    * marker job after the collect drains the listener bus. */
-  private def collectCounting(df: DataFrame): (Seq[Row], Int, Int) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-    val marker = "graft.test.drainListener"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val scans = new java.util.concurrent.atomic.AtomicInteger(0)
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty(marker) != null)
-          drained.countDown()
-        else jobs.incrementAndGet()
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-        val m = e.stageInfo.taskMetrics
-        if (m != null && m.inputMetrics.recordsRead > 0) scans.incrementAndGet()
-      }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      val rows = df.collect().toSeq
-      sc.setLocalProperty(marker, "1")
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setLocalProperty(marker, null)
-      assert(drained.await(30, java.util.concurrent.TimeUnit.SECONDS),
-        "listener bus did not drain")
-      (rows, jobs.get(), scans.get())
-    } finally sc.removeSparkListener(listener)
-  }
-
   private def shuffles(df: DataFrame): Int =
     Plans.collect(df.queryExecution.executedPlan) { case s: ShuffleExchangeExec => s }.size
 
@@ -114,9 +82,9 @@ class SmallScanSpec extends SparkSpec {
       val want = spark.sql(grouped("parquet_copy")).collect().toSeq
       assert(want.size == 3 * Days)
       for (df <- Seq(spark.sql(grouped(name)), groupedApi(t))) {
-        val (got, jobs, _) = collectCounting(df)
+        val (got, run) = countingJobs(df.collect().toSeq)
         assert(got === want)
-        assert(jobs === 1, s"$jobs jobs:\n${df.queryExecution.executedPlan}")
+        assert(run.jobs === 1, s"${run.jobs} jobs:\n${df.queryExecution.executedPlan}")
         assert(shuffles(df) === 0)
         assert(coalescedScans(df.queryExecution.executedPlan) === 1)
       }
@@ -125,9 +93,9 @@ class SmallScanSpec extends SparkSpec {
       def hourly(from: String) = spark.sql(
         s"""SELECT region, count(*) AS n, count(DISTINCT id % 5) AS k
            |FROM $from WHERE $window GROUP BY region ORDER BY region""".stripMargin)
-      val (got, jobs, _) = collectCounting(hourly(name))
+      val (got, run) = countingJobs(hourly(name).collect().toSeq)
       assert(got === hourly("parquet_copy").collect().toSeq)
-      assert(jobs === 1)
+      assert(run.jobs === 1)
     }
   }
 
@@ -137,9 +105,9 @@ class SmallScanSpec extends SparkSpec {
       for (df <- Seq(spark.sql(grouped(name)), groupedApi(t))) {
         // the aggregate keeps its shuffle, so the ORDER BY's range
         // sampler reads shuffle output: the scan still runs once
-        val (got, _, scanStages) = collectCounting(df)
+        val (got, run) = countingJobs(df.collect().toSeq)
         assert(got === want)
-        assert(scanStages === 1)
+        assert(run.scanStages === 1)
         val plan = df.queryExecution.executedPlan
         assert(coalescedScans(plan) === 0, s"coalesced above the bound:\n$plan")
         assert(shuffles(df) > 0)

@@ -2764,21 +2764,10 @@ class TxTableSpec extends SparkSpec {
     // O(sidecar) contract: the compaction launches NO Spark job (the
     // kept filters are copied as opaque strings — a rebuild would scan
     // the table to re-encode them)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val dropped = try {
-      val d = t.compactBloomIndex("transaction_id")
-      Thread.sleep(1000)   // listener events post asynchronously
-      d
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (dropped, run) = countingJobs(t.compactBloomIndex("transaction_id"))
     assert(dropped.toLong === dead, s"dropped=$dropped dead=$dead")
-    assert(jobs.get() === 0,
-      s"bloom compaction ran ${jobs.get()} Spark jobs — it must not read data")
+    assert(run.jobs === 0,
+      s"bloom compaction ran ${run.jobs} Spark jobs — it must not read data")
     assert(deadEntries === 0L)
     // live filters survive BYTE-identical and keep pruning
     val liveAfter = t.bloomEntries("transaction_id")

@@ -37,34 +37,6 @@ class VectorIndexSpec extends SparkSpec {
     (exact & got).size.toDouble / exact.size
   }
 
-  /** `body`'s result and the Spark jobs it started, counted by a
-    * SparkListener. A marker job after `body` drains the listener bus:
-    * a listener gets events in order, so once the marker's JobStart
-    * arrives every job of `body` has arrived too. */
-  private def withJobCount[A](body: => A): (A, Int) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val marker = "graft.test.drainListener"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty(marker) != null)
-          drained.countDown()
-        else jobs.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      val out = body
-      sc.setLocalProperty(marker, "1")
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setLocalProperty(marker, null)
-      assert(drained.await(30, java.util.concurrent.TimeUnit.SECONDS),
-        "listener bus did not drain")
-      (out, jobs.get())
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("build + search: calibrated persisted index meets the recall target") {
     val t = embTable("vecidx_recall")
     val np = t.buildVectorIndex("vec_id", "embedding", dim = 64)
@@ -216,21 +188,24 @@ class VectorIndexSpec extends SparkSpec {
     val queries = spark.createDataFrame(
       java.util.Arrays.asList(q0.collect(): _*), q0.schema)
     assert(queries.count() === 16L)
-    val (df, planJobs) = withJobCount(t.vectorSearch(queries, k = 10))
-    val (rows, runJobs) = withJobCount(df.collect())
+    val (df, planning) = countingJobs(t.vectorSearch(queries, k = 10))
+    val planJobs = planning.jobs
+    val (rows, run) = countingJobs(df.collect())
+    val runJobs = run.jobs
     info(s"jobs: $planJobs planning, $runJobs collect")
     assert(planJobs === 0, "vectorSearch ran a Spark job before returning")
     assert(runJobs <= 2, s"vectorSearch ran $runJobs jobs")
     assert(rows.map(r => (r.getLong(0), r.getLong(1))).toSet.size === 160)
     // a projection of the result still collects in the operator's jobs
-    val (_, selectJobs) = withJobCount(
-      t.vectorSearch(queries, k = 10).select("query_id", "vec_id").collect())
+    val selectJobs = countingJobs(
+      t.vectorSearch(queries, k = 10).select("query_id", "vec_id").collect())._2.jobs
     assert(selectJobs <= 2, s"select over vectorSearch ran $selectJobs jobs")
     // rows appended after the build are exact-scored in the corpus pass
     t.append(t.toDF.filter(col("vec_id") === 3L)
       .withColumn("vec_id", lit(900003L)))
-    val (withDelta, deltaPlanJobs) = withJobCount(t.vectorSearch(queries, k = 10))
-    val (_, deltaJobs) = withJobCount(withDelta.collect())
+    val (withDelta, deltaPlanning) = countingJobs(t.vectorSearch(queries, k = 10))
+    val deltaPlanJobs = deltaPlanning.jobs
+    val deltaJobs = countingJobs(withDelta.collect())._2.jobs
     info(s"with an uncovered delta: $deltaPlanJobs planning, $deltaJobs collect")
     assert(deltaPlanJobs === 0 && deltaJobs <= 3, s"delta search ran $deltaJobs jobs")
   }

@@ -42,15 +42,18 @@ class WriterSpec extends SparkSpec {
     t.append(SampleData.transactions(spark, 10, seed = 302L))
   }
 
+  /** A keyed upsert over the template: 8 of its rows updated, 4 new. */
+  private def upsert(t: TxTable): Unit = {
+    val batch = SampleData.transactions(spark, 30, seed = 301L)
+      .orderBy("transaction_id").limit(8)
+      .withColumn("processing_timestamp", col("processing_timestamp") + 1L)
+      .unionByName(SampleData.transactions(spark, 4, seed = 304L))
+    t.merge(batch, "transaction_id", "processing_timestamp")
+  }
+
   private val ops: Seq[(String, TxTable => Unit)] = Seq(
     "append" -> (_.append(SampleData.transactions(spark, 12, seed = 303L))),
-    "cow merge" -> { t =>
-      val batch = SampleData.transactions(spark, 30, seed = 301L)
-        .orderBy("transaction_id").limit(8)
-        .withColumn("processing_timestamp", col("processing_timestamp") + 1L)
-        .unionByName(SampleData.transactions(spark, 4, seed = 304L))
-      t.merge(batch, "transaction_id", "processing_timestamp")
-    },
+    "cow merge" -> upsert,
     "overwrite" -> (_.overwrite(SampleData.transactions(spark, 9, seed = 305L))),
     "compact" -> (_.compact()))
 
@@ -119,6 +122,34 @@ class WriterSpec extends SparkSpec {
       assert(parquetUnder(fs, new Path(t.root, "_staging")).isEmpty,
         s"$label: staging leftovers survive vacuum")
       assert(rowsOf(open().toDF) === rows, s"$label: vacuum changed rows")
+    }
+  }
+
+  test("crash-point sweep: merge-on-read MERGE lands all or nothing, and a retry lands") {
+    val tpl = freshDir("crash_mor_template")
+    val t = new TableCatalog(spark, new Path(tpl)).createTable("c", "m",
+      Schemas.transactions, Seq("date"),
+      properties = Map(TxTable.MergeModeProperty -> "merge-on-read"))
+    t.append(SampleData.transactions(spark, 30, seed = 301L))
+    t.append(SampleData.transactions(spark, 10, seed = 302L))
+    crashSweep(tpl, "m", Seq("mor merge" -> upsert), t => rowsOf(t.toDF)) {
+        (label, open, before, after) =>
+      val t = open()
+      val rows = rowsOf(t.toDF)
+      assert(rows == before || rows == after, s"$label: partial state")
+      val fs = t.root.getFileSystem(spark.sessionState.newHadoopConf())
+      val head = t.snapshot
+      head.files.foreach(f => assert(
+        fs.exists(new Path(t.root, s"data/${f.path}")),
+        s"$label: live data file ${f.path} was deleted"))
+      head.deletionVectors.foreach(d => assert(
+        fs.exists(new Path(t.root, s"deletes/${d.path}")),
+        s"$label: live deletion vector ${d.path} was deleted"))
+      // the merge is idempotent, so a retry from either state lands on
+      // the state after it
+      upsert(open())
+      assert(rowsOf(open().toDF) == after, s"$label: the retry did not land")
+      assert(open().snapshot.deletionVectors.nonEmpty, s"$label: no deletion vector after the retry")
     }
   }
 

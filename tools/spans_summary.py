@@ -19,7 +19,10 @@ and under `exec.collect` (`collect_jobs`), and each job's time (ms). A
 job belongs to the innermost span containing its start. For a streaming
 trigger (`ingest.trigger`) it also prints the time before its first job
 (`pre_ms`: the offsets and write-ahead log, planning the batch, and the
-merge's driver work up to its first job) and after its last job
+merge's driver work up to its first job), the driver time between its
+jobs (`gap_ms`: the part of the span from the first job's start to the
+last job's end that no job covers: the merge's driver work between
+collecting its batch and writing) and the time after its last job
 (`post_ms`: the merge's commit and the stream's commit log). A closing
 table gives the median of each column per op name.
 """
@@ -63,10 +66,19 @@ def summarize(spans):
             return False
         return sum(1 for j in jobs if under(j))
 
-    pre_ms = post_ms = None
+    pre_ms = gap_ms = post_ms = None
     if root["op_name"] == "ingest.trigger" and jobs:
         pre_ms = (jobs[0]["start_ns"] - root["start_ns"]) / 1e6
-        post_ms = (root["end_ns"] - max(j["end_ns"] for j in jobs)) / 1e6
+        last_end = max(j["end_ns"] for j in jobs)
+        post_ms = (root["end_ns"] - last_end) / 1e6
+        # union of the job intervals (sorted by start), subtracted from
+        # the span they lie in
+        covered, reach = 0, jobs[0]["start_ns"]
+        for j in jobs:
+            if j["end_ns"] > reach:
+                covered += j["end_ns"] - max(j["start_ns"], reach)
+                reach = j["end_ns"]
+        gap_ms = (last_end - jobs[0]["start_ns"] - covered) / 1e6
 
     return {
         "name": root["op_name"],
@@ -77,6 +89,7 @@ def summarize(spans):
         "front_jobs": jobs_under("plan.front_door"),
         "collect_jobs": jobs_under("exec.collect"),
         "pre_ms": pre_ms,
+        "gap_ms": gap_ms,
         "post_ms": post_ms,
         "job_ms": [ms(j) for j in jobs],
     }
@@ -94,21 +107,21 @@ def main(argv):
     rows = [(op, summarize(spans)) for op, spans in sorted(ops.items())]
     print(f"{'op':>10}  {'name':<22} {'total_ms':>9} {'front_ms':>9} "
           f"{'collect_ms':>10} {'jobs':>4} {'front_jobs':>10} "
-          f"{'collect_jobs':>12} {'pre_ms':>7} {'post_ms':>7}  job_ms")
+          f"{'collect_jobs':>12} {'pre_ms':>7} {'gap_ms':>7} {'post_ms':>7}  job_ms")
     for op, r in rows:
         jobs = " ".join(f"{x:.0f}" for x in r["job_ms"])
         print(f"{op:>10}  {r['name']:<22} {r['total_ms']:>9.1f} "
               f"{r['front_door_ms']:>9.1f} {r['collect_ms']:>10.1f} "
               f"{r['jobs']:>4} {r['front_jobs']:>10} "
               f"{r['collect_jobs']:>12} {cell(r['pre_ms']):>7} "
-              f"{cell(r['post_ms']):>7}  {jobs}")
+              f"{cell(r['gap_ms']):>7} {cell(r['post_ms']):>7}  {jobs}")
     by_name = defaultdict(list)
     for _, r in rows:
         by_name[r["name"]].append(r)
     print()
     print(f"{'median by name':<22} {'ops':>4} {'total_ms':>9} {'front_ms':>9} "
           f"{'collect_ms':>10} {'jobs':>5} {'front_jobs':>10} "
-          f"{'collect_jobs':>12} {'pre_ms':>7} {'post_ms':>7}")
+          f"{'collect_jobs':>12} {'pre_ms':>7} {'gap_ms':>7} {'post_ms':>7}")
     for name, rs in sorted(by_name.items()):
         def med(key):
             xs = [r[key] for r in rs if r[key] is not None]
@@ -117,7 +130,7 @@ def main(argv):
               f"{med('front_door_ms'):>9.1f} {med('collect_ms'):>10.1f} "
               f"{med('jobs'):>5g} {med('front_jobs'):>10g} "
               f"{med('collect_jobs'):>12g} {cell(med('pre_ms')):>7} "
-              f"{cell(med('post_ms')):>7}")
+              f"{cell(med('gap_ms')):>7} {cell(med('post_ms')):>7}")
     return 0
 
 
