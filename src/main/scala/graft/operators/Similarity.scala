@@ -7,15 +7,19 @@ import org.apache.spark.sql.functions._
 /**
  * Approximate-nearest-neighbor search over an embedding column.
  *
- * Two paths:
+ * Three families:
  *  - [[bruteForceTopK]]: exact cosine top-k, query side broadcast —
  *    one full corpus pass, no corpus shuffle. The correctness baseline
- *    and the right plan whenever |queries| is small (the common "search
- *    the lake for these N probes" shape).
+ *    (tests and calibration measure recall against it) and the right
+ *    plan whenever |queries| is small (the common "search the lake for
+ *    these N probes" shape).
  *  - [[lshTopK]]: sign-LSH (random hyperplane) bucketing with multiprobe
  *    (flip each single bit) — corpus is hashed once into buckets; each
- *    query only scans its probe buckets, the IVF-style scale path where
- *    the corpus is too large for a full pass per query batch.
+ *    query only scans its probe buckets.
+ *  - quantized indexes ([[ivfTopK]], [[pqTopK]], [[ivfPqTopK]] and the
+ *    persisted index): this object trains the quantizers and encodes
+ *    the corpus; every search, calibration included, runs as one
+ *    [[VectorSearch]] operator over the codes.
  */
 object Similarity {
 
@@ -34,37 +38,10 @@ object Similarity {
     topKByScore(scored, k, queryId, corpusId)
   }
 
-  /**
-   * IVF (inverted-file) ANN: a coarse k-means quantizer partitions the
-   * corpus into `k` cells; each query scans only its `nprobe` nearest
-   * cells. This is the classic billion-scale layout (Jégou et al.,
-   * "Product Quantization for Nearest Neighbor Search", PAMI'11 — the
-   * IVF part, without PQ compression).
-   *
-   * Training is `iters` Lloyd rounds as pure DataFrame ops:
-   *  - centroids seed deterministically from the `k` smallest
-   *    portable-hash(id) rows (a uniform hash-min sample — no RNG
-   *    state; md5-derived, so a SQL oracle can re-derive the same
-   *    seeds);
-   *  - assignment inlines the k centroids as array literals and argmaxes
-   *    with the native cosine kernel — a NARROW map stage, one corpus
-   *    pass per round with zero shuffle (see [[assign]]);
-   *  - update averages member vectors per cell (posexplode → groupBy
-   *    (cell, dim) → avg → collect k×dim to the driver; k·dim is tiny;
-   *    only partial sums shuffle, never vectors).
-   *
-   * With `iters = 0` the quantizer is exactly the hash-min sample —
-   * fully deterministic AND engine-portable, which is what the
-   * oracle-checked `ann_ivf` query uses (float averaging order makes
-   * Lloyd-refined centroids impossible to replay bit-exactly in SQL).
-   *
-   * At 100 TB the corpus pass is the only large stage and it is
-   * embarrassingly parallel; centroids always fit on the driver.
-   */
   /** Above this many inlined centroid components (nCells×dim) the
     * argmax expression would blow past JVM codegen method limits
-    * (~64KB) and bloat the driver plan, so [[ivfTopK]] switches to the
-    * broadcast-join assignment path. */
+    * (~64KB) and bloat the driver plan, so [[cellAssigned]] switches to
+    * the broadcast-join assignment path. */
   val AssignInlineMaxComponents = 65536
 
   /** Data-derived IVF cell count — the classic `√n` rule (Jégou et al.
@@ -91,20 +68,22 @@ object Similarity {
 
   // ---- shared PQ/IVF building blocks -----------------------------------
 
+  /** A portable 60-bit hash of the id (md5 hex prefix): a SQL oracle
+    * derives the same sample order with the same expression. */
+  private def idHash(idCol: String): org.apache.spark.sql.Column =
+    conv(substring(md5(col(idCol).cast(org.apache.spark.sql.types.StringType)),
+      1, 15), 16, 10).cast(org.apache.spark.sql.types.LongType)
+
   /** The `n` rows with the smallest portable md5 hash of their id — the
     * deterministic, engine-portable "random" sample both quantizers
     * seed from (a SQL oracle re-derives it with the same expression). */
   private def hashMinSample(corpus: DataFrame, n: Int,
-      idCol: String, vecCol: String): Array[Array[Double]] = {
-    val seedHash = conv(substring(md5(col(idCol).cast(
-        org.apache.spark.sql.types.StringType)), 1, 15), 16, 10)
-      .cast(org.apache.spark.sql.types.LongType)
+      idCol: String, vecCol: String): Array[Array[Double]] =
     corpus.select(col(idCol), col(vecCol))
-      .withColumn("__h", seedHash)
-      .orderBy(col("__h"), col(idCol)).limit(n)
+      .orderBy(idHash(idCol), col(idCol)).limit(n)
       .collect()
+      // the element type may be float or double
       .map(r => r.getSeq[Any](1).map(_.asInstanceOf[Number].doubleValue()).toArray)
-  }
 
   /** The full `array<int>` code vector in ONE native kernel
     * ([[graft.functions.expressions.PqCodes]]): argmin L2 per subspace
@@ -129,50 +108,14 @@ object Similarity {
 
   /** Reconstruction of a `codes` array via the broadcast codebook
     * literal — a per-row lookup, no join. Used by
-    * [[pqQuantizationError]]; search scores via [[adcScore]] instead. */
+    * [[pqQuantizationError]]; search scores codes against per-query
+    * lookup tables instead (see [[pqTopK]]). */
   private def pqRecon(codebooks: Seq[Seq[Seq[Double]]]): org.apache.spark.sql.Column = {
     val cb = typedlit(codebooks)
     flatten(zip_with(col("codes"),
       sequence(lit(0), lit(codebooks.size - 1)),
       (code, mi) => element_at(element_at(cb, mi + 1), code + 1)))
   }
-
-  /** Per-query asymmetric-distance lookup table (Jégou et al., PAMI'11
-    * §IV-A): lut[mi][j] = dot(query subvector mi, codeword j of
-    * subspace mi) — m×kCodes doubles computed ONCE per query row (a
-    * narrow map over the tiny query side), after which scoring a
-    * corpus row is m table lookups instead of dim multiplies: the 8×
-    * compute win per (query, corpus) pair at corpus scale. ONE native
-    * kernel ([[graft.functions.expressions.AdcLut]], bit-identical
-    * index-order arithmetic): the former composed
-    * `array(array(dot(slice…, lit(cw))))` tree carried m·kCodes dot
-    * nodes + literal arrays — 2,048 nodes at the PQ-256 default,
-    * SECONDS of optimizer/janino work per plan (the r13 bench's
-    * 27-37 s "query" cost on a 20k corpus was plan compilation). */
-  private def adcLut(codebooks: Seq[Seq[Seq[Double]]], queryVec: String,
-      dSub: Int): org.apache.spark.sql.Column = {
-    val m = codebooks.size
-    val kCodes = codebooks.head.size
-    val flat = codebooks.flatten.flatten.toArray
-    org.apache.spark.sql.graft.ColumnBridge.column(
-      graft.functions.expressions.AdcLut(
-        org.apache.spark.sql.graft.ColumnBridge.expression(col(queryVec)),
-        flat, m, kCodes, dSub))
-  }
-
-  /** ADC score of a corpus row: Σ_mi lut[mi][codes[mi]], accumulated in
-    * subspace order (deterministic association; equals
-    * dot(query, reconstruction) up to float re-association, which the
-    * 6-decimal output rounding absorbs). Native
-    * [[graft.functions.expressions.AdcScore]] kernel — the former
-    * `aggregate(zip_with(...))` form was CodegenFallback (interpreted
-    * lambdas) on the scored-PAIR path, the hottest loop in the search. */
-  private def adcScore(lut: org.apache.spark.sql.Column,
-      m: Int): org.apache.spark.sql.Column =
-    org.apache.spark.sql.graft.ColumnBridge.column(
-      graft.functions.expressions.AdcScore(
-        org.apache.spark.sql.graft.ColumnBridge.expression(col("codes")),
-        org.apache.spark.sql.graft.ColumnBridge.expression(lut)))
 
   /**
    * Per-query top-k of scored (queryId, corpusId, score) rows.
@@ -193,13 +136,7 @@ object Similarity {
    * ANN query are byte-equal.
    */
   private def topKByScore(scored: DataFrame, k: Int,
-      queryId: String, corpusId: String): DataFrame =
-    topKByScoreGrouped(scored, k, Seq(queryId), corpusId)
-
-  /** [[topKByScore]] generalized to a composite group key — the fused
-    * calibration sweep ranks per (candidate nprobe, query). */
-  private def topKByScoreGrouped(scored: DataFrame, k: Int,
-      groupCols: Seq[String], corpusId: String): DataFrame = {
+      queryId: String, corpusId: String): DataFrame = {
     import org.apache.spark.sql.graft.ColumnBridge
     // The engine OWNS the ObjectHashAggregate fallback threshold on its
     // own query path (r19 VERDICT "what's wrong" #1: the conf lived only
@@ -218,13 +155,12 @@ object Similarity {
       graft.functions.expressions.ScoreTopK(
         ColumnBridge.expression(col("score")),
         ColumnBridge.expression(col(corpusId)), k).toAggregateExpression())
-    val keys = groupCols.map(col)
-    scored.groupBy(keys: _*).agg(agg.as("__tk"))
-      .select(keys :+ posexplode(col("__tk")).as(Seq("__pos", "__e")): _*)
-      .select(keys ++ Seq(col("__e.id").as(corpusId),
+    scored.groupBy(col(queryId)).agg(agg.as("__tk"))
+      .select(col(queryId), posexplode(col("__tk")).as(Seq("__pos", "__e")))
+      .select(col(queryId), col("__e.id").as(corpusId),
         col("__e.score").as("score"),
         (col("__pos") + 1).cast(org.apache.spark.sql.types.IntegerType)
-          .as("rank")): _*)
+          .as("rank"))
   }
 
   /** One-or-more Lloyd rounds per subspace: re-encode (narrow pass),
@@ -276,34 +212,38 @@ object Similarity {
    * argmins L2 per subspace with the codebook INLINED into a narrow
    * codegen'd map — one corpus pass, zero shuffle. Search is the
    * paper's asymmetric-distance computation: each query precomputes an
-   * m×kCodes lookup table ([[adcLut]]) and a corpus row scores as m
-   * table lookups ([[adcScore]]) — no reconstruction column ever
-   * materializes, so scoring reads codes and nothing else (the 8×
-   * per-pair compute win on top of the 64× storage/shuffle win).
-   * Returned: (query_id, rank, id, approximate score).
+   * m×kCodes lookup table and a corpus row scores as m table lookups —
+   * no reconstruction column ever materializes, so scoring reads codes
+   * and nothing else (the 8× per-pair compute win on top of the 64×
+   * storage/shuffle win). It runs as the [[VectorSearch]] operator's
+   * ADC-final pass over an index of ONE coarse cell that every query
+   * probes. Returned: (query_id, id, approximate score, rank).
    */
   def pqTopK(corpus: DataFrame, queries: DataFrame, k: Int, dim: Int,
       m: Int = 8, kCodes: Int = 16, iters: Int = 0,
       corpusId: String = "vec_id", corpusVec: String = "embedding",
       queryId: String = "query_id", queryVec: String = "query_vec"): DataFrame = {
+    val codebooks = pqCodebooks(corpus, dim, m, kCodes, iters, corpusId, corpusVec)
+    val model = VectorIndexModel(dim, Seq(Seq.fill(dim)(0.0)), codebooks,
+      nprobe = 1, rerankTo = 0)
+    val codes = corpus.select(col(corpusId), lit(0).as("cell"),
+      pqCodesKernel(codebooks, corpusVec).as("codes"))
+    VectorSearch.plan(queries, codes, corpus, None, model, k, nprobe = 1,
+      depth = 0, corpusId, corpusVec, queryId, queryVec, pruneCells = false)
+  }
+
+  /** The codebooks of [[pqTopK]]: codebooks(mi)(j) is hash-min sample
+    * j's mi-th subvector; iters = 0 keeps them — the engine-portable
+    * regime the SQL oracle replays; iters > 0 Lloyd-refines them. */
+  private def pqCodebooks(corpus: DataFrame, dim: Int, m: Int, kCodes: Int,
+      iters: Int, corpusId: String, corpusVec: String): Seq[Seq[Seq[Double]]] = {
     require(dim % m == 0, s"dim $dim must divide into $m subvectors")
     val dSub = dim / m
     val sample = hashMinSample(corpus, kCodes, corpusId, corpusVec)
-    // codebooks(mi)(j) = sample j's mi-th subvector
-    // iters = 0 keeps the hash-min codebooks — the engine-portable
-    // regime the SQL oracle replays; iters > 0 Lloyd-refines them
-    val codebooks = refineCodebooks(corpus, corpusVec,
+    refineCodebooks(corpus, corpusVec,
       (0 until m).map(mi =>
         sample.toSeq.map(v => v.slice(mi * dSub, mi * dSub + dSub).toSeq)),
       dSub, iters)
-    val encoded = corpus.select(col(corpusId),
-      pqCodesKernel(codebooks, corpusVec).as("codes"))
-    val withLut = queries.select(col(queryId),
-      adcLut(codebooks, queryVec, dSub).as("__lut"))
-    val scored = encoded.join(broadcast(withLut))
-      .select(col(queryId), col(corpusId),
-        adcScore(col("__lut"), m).as("score"))
-    topKByScore(scored, k, queryId, corpusId)
   }
 
   /** Mean L2 distance between vectors and their PQ reconstructions —
@@ -312,12 +252,7 @@ object Similarity {
   def pqQuantizationError(corpus: DataFrame, dim: Int, m: Int, kCodes: Int,
       iters: Int,
       corpusId: String = "vec_id", corpusVec: String = "embedding"): Double = {
-    val dSub = dim / m
-    val sample = hashMinSample(corpus, kCodes, corpusId, corpusVec)
-    val codebooks = refineCodebooks(corpus, corpusVec,
-      (0 until m).map(mi =>
-        sample.toSeq.map(v => v.slice(mi * dSub, mi * dSub + dSub).toSeq)),
-      dSub, iters)
+    val codebooks = pqCodebooks(corpus, dim, m, kCodes, iters, corpusId, corpusVec)
     corpus.select(col(corpusVec).as("__v"),
         pqCodesKernel(codebooks, corpusVec).as("codes"))
       .withColumn("__recon", pqRecon(codebooks))
@@ -542,24 +477,6 @@ object Similarity {
        else Nil))
   }
 
-  /** Per-query probe list with the probe RANK kept (`__pr` = 1-based
-    * position of the cell in the query's sim-desc/cell-asc order, the
-    * order of [[graft.functions.expressions.TopCosineCells]]) — the fused
-    * calibration sweep derives every candidate nprobe's probe set from
-    * one ranked list (`__pr <= candidate`). One narrow map: each query
-    * row explodes its own probe list, so no join, window or shuffle. */
-  private def probeCellsRanked(queries: DataFrame, model: VectorIndexModel,
-      nprobe: Int, queryId: String, queryVec: String): DataFrame = {
-    val cells = org.apache.spark.sql.graft.ColumnBridge.column(
-      graft.functions.expressions.TopCosineCells(
-        org.apache.spark.sql.graft.ColumnBridge.expression(col(queryVec)),
-        model.centroids.flatten.toArray, model.nCells, nprobe))
-    queries.select(col(queryId), col(queryVec),
-        posexplode(cells).as(Seq("__pos", "cell")))
-      .select(col(queryId), col(queryVec), col("cell"),
-        (col("__pos") + 1).as("__pr"))
-  }
-
   /**
    * Search an ENCODED corpus (from [[encodeIvfPq]], possibly read back
    * from a persisted sidecar): probe `nprobe` cells per query, score
@@ -587,30 +504,47 @@ object Similarity {
   private[graft] def shortlistDepth(rerank: Int, k: Int): Int =
     if (rerank > 0) math.max(rerank, k) else 0
 
-  /** Deterministic held-out query sample for calibration: reverse hash
-    * order — disjoint from the hash-MIN centroid seeds, so recall is
-    * never measured on the quantizer's own training anchors. */
-  private[graft] def calibrationQueries(corpus: DataFrame, sampleQueries: Int,
-      corpusId: String, corpusVec: String): DataFrame = {
-    val seedHash = conv(substring(md5(col(corpusId).cast(
-      org.apache.spark.sql.types.StringType)), 1, 15), 16, 10)
-      .cast(org.apache.spark.sql.types.LongType)
-    corpus.select(col(corpusId), col(corpusVec))
-      .withColumn("__h", seedHash)
-      .orderBy(col("__h").desc, col(corpusId).desc).limit(sampleQueries)
-      .select(col(corpusId).as("query_id"), col(corpusVec).as("query_vec"))
+  /** A held-out query sample (`query_id`, `query_vec`) collected into a
+    * local batch, so a search over it runs no batch job, and `ground`,
+    * the exact top-k (query id, id) rows of its queries. */
+  private[graft] final case class RecallSample(queries: DataFrame,
+      ground: Seq[(Any, Any)]) {
+    /** The share of `ground` rows that `found` (a search over
+      * `queries`) returned. */
+    def recallOf(found: DataFrame, corpusId: String): Double = {
+      val hits = found.select(col("query_id"), col(corpusId)).collect()
+        .map(r => (r.get(0), r.get(1))).toSet
+      ground.count(hits).toDouble / ground.size
+    }
+  }
+
+  /** The deterministic held-out sample calibration and the recall
+    * monitor measure on: the `sampleQueries` corpus rows in REVERSE
+    * hash order — disjoint from the hash-MIN centroid seeds, so recall
+    * is never measured on the quantizer's own training anchors — and
+    * their brute-force top-k, both on the driver. */
+  private[graft] def recallSample(corpus: DataFrame, sampleQueries: Int, k: Int,
+      corpusId: String, corpusVec: String): RecallSample = {
+    val drawn = corpus.select(col(corpusId).as("query_id"), col(corpusVec).as("query_vec"))
+      .orderBy(idHash("query_id").desc, col("query_id").desc).limit(sampleQueries)
+    val queries = corpus.sparkSession.createDataFrame(
+      java.util.Arrays.asList(drawn.collect(): _*), drawn.schema)
+    val ground = bruteForceTopK(corpus, queries, k, corpusId, corpusVec)
+      .select(col("query_id"), col(corpusId)).collect()
+      .map(r => (r.get(0), r.get(1))).toSeq
+    RecallSample(queries, ground)
   }
 
   /**
    * Measured probe selection over an ALREADY-ENCODED corpus: the
    * smallest `nprobe` whose recall@k on a held-out sample meets
-   * `recallTarget` — probe counts double from the √nCells heuristic;
-   * ground truth is one exact brute-force pass over the sample. The
-   * index trains and encodes ONCE; each sweep point re-scores the
-   * cached encoding (O(log nCells) cheap evaluations — the r12 shape
-   * re-trained the full index per point). Returns nCells when even
-   * full probing misses the target (PQ error bound — raise `rerankTo`
-   * or `kCodes`).
+   * `recallTarget` — probe counts double from the √nCells heuristic,
+   * each one an ordinary [[searchIndexed]] of the local sample (one
+   * pass over the codes, one over the corpus at the model's re-rank
+   * depth), stopping at the first that passes; ground truth is one
+   * exact brute-force pass over the sample. The index trains and
+   * encodes ONCE. Returns nCells when even the largest candidate misses
+   * the target (PQ error bound — raise `rerankTo` or `kCodes`).
    *
    * The returned count carries a 1.25× SAFETY FACTOR (capped at
    * nCells): the sample estimate is binomially noisy (σ ≈ 1.7% at
@@ -625,120 +559,18 @@ object Similarity {
       model: VectorIndexModel, k: Int = 10, recallTarget: Double = 0.9,
       sampleQueries: Int = 32, corpusId: String = "vec_id",
       corpusVec: String = "embedding"): Int = {
-    val queries = calibrationQueries(corpus, sampleQueries,
-      corpusId, corpusVec).cache()
-    val ground = bruteForceTopK(corpus, queries, k, corpusId, corpusVec)
-      .select(col("query_id"), col(corpusId)).cache()
-    val nGround = ground.count().toDouble
-    try {
-      // The former per-point loop (recallAt(np0), recallAt(2·np0), …)
-      // re-ran the FULL search pipeline per sweep point: a complete
-      // pass over the encoded corpus, a fresh probe window, a fresh
-      // plan — measured warm at ~0.7 s/point on the bench corpus with
-      // the per-point cost independent of nprobe (fixed plan/stage
-      // overhead dominates at sample sizes, and at scale each point
-      // re-scanned the codes). Two-stage evaluation instead:
-      //  1. the FIRST candidate alone — on clustered corpora the
-      //     heuristic point already meets the target and calibration
-      //     stays exactly one cheap evaluation (evaluating the whole
-      //     ladder up-front cost 16× the probed pairs there);
-      //  2. on a miss, [[sweepRecalls]] evaluates every REMAINING
-      //     doubling candidate in ONE plan/pass: pairs join once at
-      //     the largest candidate, carry their probe rank, and fan out
-      //     only to the candidates that include them — one codes pass
-      //     instead of one per point.
-      // Selection per candidate is bit-identical to the per-point
-      // pipeline (same probe ranking, same ADC scores, same top-k
-      // comparator, same rerank), so the chosen operating point is
-      // unchanged.
-      val cands = Iterator.iterate(autoProbes(model.nCells))(_ * 2)
-        .takeWhile(_ < model.nCells).toSeq
-      def recallsOf(cs: Seq[Int]): Map[Int, Double] =
-        sweepRecalls(indexed, corpus, queries, ground, nGround, model,
-          k, cs, corpusId, corpusVec)
-      val np =
-        if (cands.isEmpty) autoProbes(model.nCells)
-        else if (recallsOf(cands.take(1))
-            .getOrElse(cands.head, 0.0) >= recallTarget) cands.head
-        else if (cands.size == 1) math.min(model.nCells, cands.head * 2)
-        else {
-          val rest = cands.drop(1)
-          val recalls = recallsOf(rest)
-          rest.find(c => recalls.getOrElse(c, 0.0) >= recallTarget)
-            .getOrElse(math.min(model.nCells, cands.last * 2))
-        }
-      math.min(model.nCells, math.ceil(np * 1.25).toInt)
-    } finally { queries.unpersist(); ground.unpersist() }
-  }
-
-  /** Recall@k for EVERY candidate probe count in one plan — see the
-    * calibrateIndexed comment. Returns candidate → recall; a candidate
-    * with zero ground-truth hits is simply absent. */
-  private def sweepRecalls(indexed: DataFrame, corpus: DataFrame,
-      queries: DataFrame, ground: DataFrame, nGround: Double,
-      model: VectorIndexModel, k: Int, cands: Seq[Int],
-      corpusId: String, corpusVec: String): Map[Int, Double] = {
-    def countsOf(top: DataFrame): Map[Int, Double] =
-      top.join(ground, Seq("query_id", corpusId), "left_semi")
-        .groupBy(col("__np")).agg(count(lit(1)).as("n")).collect()
-        .map(r => r.getInt(0) -> r.getLong(1) / nGround).toMap
-    val probed = probeCellsRanked(queries, model, cands.max,
-      "query_id", "query_vec")
-    // a pair probed at rank __pr belongs to every candidate >= __pr
-    val candCol = explode(filter(typedlit(cands.sorted),
-      c => c >= col("__pr"))).as("__np")
-    if (model.codebooks.isEmpty) {
-      // plain IVF: exact cosine within probed cells, per candidate
-      val cells =
-        if (indexed.columns.contains(corpusVec)) indexed
-        else indexed.join(corpus.select(col(corpusId), col(corpusVec)),
-          Seq(corpusId))
-      val scored = cells
-        .join(broadcast(
-          probed.select(col("cell"), col("query_id"), col("__pr"))),
-          Seq("cell"))
-        .join(broadcast(queries.select(col("query_id"), col("query_vec"))),
-          Seq("query_id"))
-        .select(col("query_id"), col(corpusId),
-          cosine(col(corpusVec), col("query_vec")).as("score"), col("__pr"))
-        .select(col("query_id"), col(corpusId), col("score"), candCol)
-      countsOf(topKByScoreGrouped(scored, k, Seq("__np", "query_id"),
-        corpusId))
-    } else {
-      // bare probe tuples broadcast, LUTs attached by query id from
-      // their own |q|-row broadcast (never duplicated nprobe× inside a
-      // broadcast relation)
-      val luts = queries.select(col("query_id"),
-        adcLut(model.codebooks, "query_vec", model.dSub).as("__lut"))
-      val scored = indexed
-        .join(broadcast(
-          probed.select(col("cell"), col("query_id"), col("__pr"))),
-          Seq("cell"))
-        .join(broadcast(luts), Seq("query_id"))
-        .select(col("query_id"), col(corpusId),
-          adcScore(col("__lut"), model.m).as("score"), col("__pr"))
-        .select(col("query_id"), col(corpusId), col("score"), candCol)
-      if (model.rerankTo <= 0)
-        countsOf(topKByScoreGrouped(scored, k, Seq("__np", "query_id"),
-          corpusId))
+    val cands = Iterator.iterate(autoProbes(model.nCells))(_ * 2)
+      .takeWhile(_ < model.nCells).toSeq
+    val np =
+      if (cands.isEmpty) autoProbes(model.nCells)
       else {
-        // exact re-rank of each candidate's ADC short list — the
-        // search's IVFADC+R step, per candidate
-        val shortList = topKByScoreGrouped(scored, model.rerankTo,
-            Seq("__np", "query_id"), corpusId)
-          .select(col("__np"), col("query_id"), col(corpusId))
-        // the shortlist broadcasts: never shuffle the corpus by id to
-        // fetch |shortlist| vectors
-        val exact = corpus.select(col(corpusId), col(corpusVec))
-          .join(broadcast(shortList), Seq(corpusId))
-          .join(broadcast(queries.select(col("query_id"), col("query_vec"))),
-            Seq("query_id"))
-          .select(col("__np"), col("query_id"), col(corpusId),
-            cosine(col(corpusVec), col("query_vec")).as("score"))
-        countsOf(topKByScoreGrouped(exact, k, Seq("__np", "query_id"),
-          corpusId))
+        val sample = recallSample(corpus, sampleQueries, k, corpusId, corpusVec)
+        cands.find(c => sample.ground.nonEmpty && sample.recallOf(
+            searchIndexed(indexed, corpus, sample.queries, model, k, nprobe = c,
+              corpusId = corpusId, corpusVec = corpusVec), corpusId) >= recallTarget)
+          .getOrElse(math.min(model.nCells, cands.last * 2))
       }
-    }
+    math.min(model.nCells, math.ceil(np * 1.25).toInt)
   }
 
   /** Train + encode + calibrate in one pass: the model that comes back
@@ -796,22 +628,29 @@ object Similarity {
       corpusId: String = "vec_id", corpusVec: String = "embedding",
       queryId: String = "query_id", queryVec: String = "query_vec",
       /** held-out recall@k the calibrated default must meet */
-      recallTarget: Double = 0.9): DataFrame = {
-    val model = trainIvfPqModel(corpus, dim, nCells, m, kCodes, iters,
-      rerankTo, corpusId, corpusVec)
+      recallTarget: Double = 0.9): DataFrame =
+    searchTrained(trainIvfPqModel(corpus, dim, nCells, m, kCodes, iters,
+        rerankTo, corpusId, corpusVec), corpus, queries, k, nprobe,
+      recallTarget, corpusId, corpusVec, queryId, queryVec)
+
+  /** Encode `corpus` under `model` and search it at `nprobe` probes or,
+    * for `nprobe <= 0`, at the probe count [[calibrateIndexed]]
+    * measures for `recallTarget` over the cached encoding — at the
+    * model's own re-rank depth, so the count is valid for exactly the
+    * output configuration. */
+  private def searchTrained(model: VectorIndexModel, corpus: DataFrame,
+      queries: DataFrame, k: Int, nprobe: Int, recallTarget: Double,
+      corpusId: String, corpusVec: String, queryId: String,
+      queryVec: String): DataFrame = {
     val indexed = encodeIvfPq(corpus, model, corpusId, corpusVec)
-    if (nprobe > 0)
-      searchIndexed(indexed, corpus, queries, model, k, nprobe, rerankTo,
-        corpusId, corpusVec, queryId, queryVec)
+    def search(codes: DataFrame, np: Int): DataFrame =
+      searchIndexed(codes, corpus, queries, model, k, np, corpusId = corpusId,
+        corpusVec = corpusVec, queryId = queryId, queryVec = queryVec)
+    if (nprobe > 0) search(indexed, nprobe)
     else {
       val cached = indexed.cache()
-      val np = calibrateIndexed(cached, corpus, model, k, recallTarget,
-        sampleQueries = 32, corpusId, corpusVec)
-      val result = searchIndexed(cached, corpus, queries, model, k, np,
-        // calibration measured recall at the caller's own rerank
-        // setting (model.rerankTo == rerankTo), so the calibrated
-        // probe count is valid for exactly the output configuration
-        rerankTo, corpusId, corpusVec, queryId, queryVec)
+      val result = search(cached, calibrateIndexed(cached, corpus, model, k,
+        recallTarget, sampleQueries = 32, corpusId, corpusVec))
       // the RETURNED plan still reads the cached encoding (it is lazy —
       // an unpersist here would drop the cache before the caller's
       // action and force a full re-encode); the listener drops it after
@@ -846,171 +685,55 @@ object Similarity {
     * [[ivfTopK]] also uses): centroids are the md5-hash-ordered first
     * `nCells` corpus vectors — engine-portable, so a SQL oracle derives
     * the IDENTICAL sample — and every row gets its argmax-cosine `cell`
-    * from one inlined, codegen'd greatest() over (sim, -cell) structs:
-    * a narrow map stage, ZERO shuffle, ties to the lowest cell. Shared
-    * by SemDeDup ([[Dedup.semDedup]]) as its cluster step. */
+    * ([[cellAssigned]]): a narrow map stage, ZERO shuffle, ties to the
+    * lowest cell. `nCells <= 0` sizes from the data ([[autoCells]]).
+    * Shared by SemDeDup ([[Dedup.semDedup]]) as its cluster step. */
   def coarseCells(df: DataFrame, idCol: String, vecCol: String,
       nCells: Int = -1): DataFrame = {
-    import org.apache.spark.sql.types._
-    // nCells <= 0 → size from the data ([[autoCells]]): one cheap
-    // count (metadata-only on a parquet scan) buys bounded cell
-    // population at any corpus size
-    val k = if (nCells > 0) nCells else autoCells(df.count())
-    val seedHash = conv(substring(md5(col(idCol).cast(StringType)), 1, 15),
-      16, 10).cast(LongType)
-    val centroids = df.select(col(idCol), col(vecCol))
-      .withColumn("__h", seedHash)
-      .orderBy(col("__h"), col(idCol)).limit(k)
-      .collect().zipWithIndex
-      .map { case (r, i) =>
-        (i, r.getSeq[Any](1).map(_.asInstanceOf[Number].doubleValue()).toArray)
-      }
-    val dim = if (centroids.isEmpty) 0 else centroids.head._2.length
-    if (centroids.length.toLong * dim <= AssignInlineMaxComponents) {
-      // ONE native argmax kernel over the centroid matrix (bit-equal to
-      // the former greatest()-of-structs, whose expression tree grew
-      // linearly in the cell count and re-derived the vector norm per
-      // centroid)
-      val flat = centroids.flatMap(_._2)
-      df.withColumn("cell", org.apache.spark.sql.graft.ColumnBridge.column(
-        graft.functions.expressions.ArgMaxCosineCell(
-          org.apache.spark.sql.graft.ColumnBridge.expression(col(vecCol)),
-          flat, centroids.length)))
-    } else {
-      // derived cell counts grow with the corpus — past the codegen
-      // limit, assign via the same broadcast-join + max_by path as
-      // [[ivfTopK]]: vector-free (id, cell, sim) rows, vectors cross
-      // one exchange on the assignment join-back
-      val schema = StructType(Seq(StructField("cell", IntegerType),
-        StructField("__cvec", ArrayType(DoubleType))))
-      val centDf = df.sparkSession.createDataFrame(
-        java.util.Arrays.asList(centroids.map(c =>
-          org.apache.spark.sql.Row(c._1, c._2.toSeq)): _*), schema)
-      val best = df.select(col(idCol), col(vecCol))
-        .join(broadcast(centDf))
-        .select(col(idCol), col("cell"),
-          cosine(col(vecCol), col("__cvec")).as("__sim"))
-        .groupBy(col(idCol))
-        .agg(max_by(col("cell"), struct(col("__sim"), -col("cell")))
-          .cast(IntegerType).as("cell"))
-      df.join(best, idCol)
-    }
+    val cents = hashMinSample(df,
+      if (nCells > 0) nCells else autoCells(df.count()), idCol, vecCol)
+    cellAssigned(df, vecCol, idCol, cents.toSeq, cents.headOption.fold(0)(_.length))
   }
 
+  /**
+   * IVF (inverted-file) ANN: a coarse k-means quantizer partitions the
+   * corpus into `k` cells; each query scans only its `nprobe` nearest
+   * cells. This is the classic billion-scale layout (Jégou et al.,
+   * "Product Quantization for Nearest Neighbor Search", PAMI'11 — the
+   * IVF part, without PQ compression).
+   *
+   * Training is [[trainIvfModel]]: `iters` Lloyd rounds as pure
+   * DataFrame ops ([[refineCentroids]]):
+   *  - centroids seed deterministically from the `k` smallest
+   *    portable-hash(id) rows (a uniform hash-min sample — no RNG
+   *    state; md5-derived, so a SQL oracle can re-derive the same
+   *    seeds);
+   *  - assignment argmaxes cosine against the centroids in one narrow
+   *    map stage, one corpus pass per round with zero shuffle (see
+   *    [[cellAssigned]]);
+   *  - update averages member vectors per cell (posexplode → groupBy
+   *    (cell, dim) → avg → collect k×dim to the driver; only partial
+   *    sums shuffle, never vectors).
+   * The search is [[searchIndexed]] over the (id, cell) encoding:
+   * exact cosine within each query's `nprobe` nearest cells.
+   * `nprobe <= 0` means the probe count calibrated to 0.9 held-out
+   * recall@k (see [[ivfPqTopK]]).
+   *
+   * With `iters = 0` the quantizer is exactly the hash-min sample —
+   * fully deterministic AND engine-portable, which is what the
+   * oracle-checked `ann_ivf` query uses (float averaging order makes
+   * Lloyd-refined centroids impossible to replay bit-exactly in SQL).
+   *
+   * At 100 TB the corpus pass is the only large stage and it is
+   * embarrassingly parallel; centroids always fit on the driver.
+   */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int, dim: Int,
       nCells: Int = -1, nprobe: Int = -1, iters: Int = 3,
       corpusId: String = "vec_id", corpusVec: String = "embedding",
-      queryId: String = "query_id", queryVec: String = "query_vec",
-      assignInlineMax: Int = AssignInlineMaxComponents): DataFrame = {
-    val spark = corpus.sparkSession
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
-    // nCells <= 0 → the √n rule ([[autoCells]]) from a cheap count;
-    // nprobe <= 0 → the MEASURED operating point (calibrated below,
-    // after the quantizer trains — r12 VERDICT: the √nCells heuristic
-    // shipped 0.3-0.5 recall silently as a default)
-    val cellCount = if (nCells > 0) nCells else autoCells(corpus.count())
-
-    // --- train the coarse quantizer ---------------------------------
-    // portable 60-bit hash (md5 hex prefix): the DuckDB oracle derives
-    // the identical seed sample with the same expression in SQL
-    val seedHash = conv(substring(md5(col(corpusId).cast(StringType)), 1, 15),
-      16, 10).cast(LongType)
-    var centroids: Array[(Int, Array[Double])] = corpus
-      .select(col(corpusId), col(corpusVec))
-      .withColumn("__h", seedHash)
-      .orderBy(col("__h"), col(corpusId)).limit(cellCount)
-      .collect().zipWithIndex
-      .map { case (r, i) =>
-        // element type may be float or double — go through Number
-        (i, r.getSeq[Any](1).map(_.asInstanceOf[Number].doubleValue()).toArray)
-      }
-
-    def centroidDf(cs: Array[(Int, Array[Double])]): DataFrame = {
-      val schema = StructType(Seq(StructField("cell", IntegerType),
-        StructField("cvec", ArrayType(DoubleType))))
-      spark.createDataFrame(
-        java.util.Arrays.asList(cs.map(c => Row(c._1, c._2.toSeq)): _*), schema)
-    }
-
-    // Argmax-cosine cell per row. Small quantizers (nCells×dim within
-    // codegen limits): centroids inlined as array literals, argmax as
-    // one greatest() over (sim, -cell) structs — a narrow, codegen'd
-    // map stage with ZERO shuffle. (The r2 form window-partitioned over
-    // every column, shuffling n×k scored rows INCLUDING the embedding
-    // arrays once per Lloyd round.) Ties break to the lowest cell:
-    // max struct = max sim, then max(-cell).
-    // Large quantizers (thousands of cells at 100 TB): broadcast-join
-    // the centroid table instead — score on vector-free (id, cell, sim)
-    // rows, argmax via max_by, join the assignment back by id. Vectors
-    // cross one exchange (the join-back), never the n×k scored rows.
-    def assign(df: DataFrame, vecCol: String): DataFrame = {
-      if (centroids.length.toLong * dim <= assignInlineMax) {
-        // native argmax kernel (see coarseCells) — constant codegen
-        // footprint however many cells inline
-        val flat = centroids.flatMap(_._2)
-        df.withColumn("cell", org.apache.spark.sql.graft.ColumnBridge.column(
-          graft.functions.expressions.ArgMaxCosineCell(
-            org.apache.spark.sql.graft.ColumnBridge.expression(col(vecCol)),
-            flat, centroids.length)))
-      } else {
-        val idCols = df.columns.filterNot(_ == vecCol).map(col).toSeq
-        val best = df.join(broadcast(centroidDf(centroids)))
-          .select((idCols :+ col("cell") :+
-            cosine(col(vecCol), col("cvec")).as("__sim")): _*)
-          .groupBy(idCols: _*)
-          .agg(max_by(col("cell"), struct(col("__sim"), -col("cell"))).as("cell"))
-        df.join(best, df.columns.filterNot(_ == vecCol).toSeq)
-      }
-    }
-
-    (0 until iters).foreach { _ =>
-      val assigned = assign(corpus.select(col(corpusId), col(corpusVec)), corpusVec)
-      val updated = assigned
-        .select(col("cell"), posexplode(col(corpusVec)).as(Seq("dim", "v")))
-        .groupBy(col("cell"), col("dim"))
-        .agg(avg(col("v")).as("m"))
-        .collect()
-        .groupBy(_.getInt(0))
-        .map { case (cell, rows) =>
-          val vec = new Array[Double](dim)
-          rows.foreach(r => vec(r.getInt(1)) = r.getDouble(2))
-          (cell, vec)
-        }.toArray
-      // keep empty cells at their previous position
-      val updatedMap = updated.toMap
-      centroids = centroids.map { case (c, v) => (c, updatedMap.getOrElse(c, v)) }
-    }
-
-    // --- search ------------------------------------------------------
-    val cells = assign(corpus.select(col(corpusId), col(corpusVec)), corpusVec)
-    val probeCount =
-      if (nprobe > 0) nprobe
-      else {
-        // calibrate on the assigned cells (cached for the sweep AND
-        // the search below — the returned lazy plan reads it, so the
-        // listener drops the cache after the caller's first action):
-        // smallest probe count whose held-out recall@k clears 0.9 —
-        // the shipped default delivers the contract; callers wanting
-        // the raw heuristic pass autoProbes(nCells) explicitly
-        val model = VectorIndexModel(dim,
-          centroids.map(_._2.toSeq).toSeq, Nil, autoProbes(cellCount), 0)
-        val cached = cells.cache()
-        val np = calibrateIndexed(cached, corpus, model, k = k,
-          recallTarget = 0.9, sampleQueries = 32, corpusId, corpusVec)
-        org.apache.spark.sql.graft.ColumnBridge.unpersistAfterFirstUse(cached)
-        np
-      }
-    val probes = probeCellsRanked(queries, VectorIndexModel(dim,
-        centroids.map(_._2.toSeq).toSeq, Nil, probeCount, 0),
-      probeCount, queryId, queryVec).drop("__pr")
-    // probe set is |queries|×nprobe — broadcast it so the bucketed
-    // corpus never shuffles (cells is a narrow projection of the scan)
-    val scored = cells.join(broadcast(probes), "cell")
-      .select(col(queryId), col(corpusId),
-        cosine(col(corpusVec), col(queryVec)).as("score"))
-    topKByScore(scored, k, queryId, corpusId)
-  }
+      queryId: String = "query_id", queryVec: String = "query_vec"): DataFrame =
+    searchTrained(trainIvfModel(corpus, dim, nCells, iters, corpusId, corpusVec),
+      corpus, queries, k, nprobe, recallTarget = 0.9, corpusId, corpusVec,
+      queryId, queryVec)
 
   /**
    * LSH-bucketed ANN: corpus bucketed once by `nBits` hyperplane signs;

@@ -1181,19 +1181,10 @@ class TxTable private (
     val kk = if (k > 0) k else meta.buildK.getOrElse(10)
     val idCol = meta.idColumn
     val s = snapshot
-    val current = dfFor(s)
-    val queries = Similarity.calibrationQueries(current, sampleQueries,
-      idCol, vecCol).cache()
-    val recall = try {
-      val ground = Similarity.bruteForceTopK(current, queries, kk,
-        idCol, vecCol).select(col("query_id"), col(idCol))
-      val nGround = ground.count().toDouble
-      if (nGround == 0) 1.0
-      else ground.join(
-          vectorSearch(queries, kk, vecCol).select(col("query_id"), col(idCol)),
-          Seq("query_id", idCol), "left_semi")
-        .count() / nGround
-    } finally queries.unpersist()
+    val sample = Similarity.recallSample(dfFor(s), sampleQueries, kk, idCol, vecCol)
+    val recall =
+      if (sample.ground.isEmpty) 1.0
+      else sample.recallOf(vectorSearch(sample.queries, kk, vecCol), idCol)
     // record (snapshot version, recall, operating point) in the meta
     // (r15 VERDICT task 5): the O(sample × corpus) pass was recomputed
     // and DISCARDED per call — now a monitor reads last-measured recall
@@ -2647,20 +2638,26 @@ class TxTable private (
 
   /** `df`'s rows as a local relation, collected in ONE job (each task
     * returns at most `cap` + 1 rows), or None when there are more than
-    * `cap`. */
+    * `cap`. A `df` that optimizes to a local relation is read off its
+    * plan, with no job. */
   private def collectLocal(df: DataFrame, cap: Int): Option[DataFrame] = {
+    import org.apache.spark.sql.catalyst.InternalRow
     val qe = df.queryExecution
     val schema = df.schema
-    val taken = org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(
-        qe, Some("merge batch")) {
-      df.sparkSession.sparkContext.runJob(qe.toRdd,
-        (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => {
-          val unsafe = org.apache.spark.sql.catalyst.expressions.UnsafeProjection
-            .create(schema)
-          it.take(cap + 1).map(unsafe(_).copy()).toArray
-        })
+    val rows: Array[InternalRow] = qe.optimizedPlan match {
+      case local: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        local.data.take(cap + 1).map(_.copy()).toArray
+      case _ =>
+        org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(
+            qe, Some("merge batch")) {
+          df.sparkSession.sparkContext.runJob(qe.toRdd,
+            (it: Iterator[InternalRow]) => {
+              val unsafe = org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+                .create(schema)
+              it.take(cap + 1).map(unsafe(_).copy()).toArray
+            })
+        }.flatten
     }
-    val rows = taken.flatten
     if (rows.length > cap) None
     else Some(org.apache.spark.sql.graft.ColumnBridge.ofRows(df.sparkSession,
       org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
@@ -3474,15 +3471,17 @@ class TxTable private (
       val (touched: Set[Map[String, String]], batchRows: Long,
           inlineKeys: Option[Seq[Any]]) = local match {
         case Some(l) =>
-          // projections of the local relation fold into it: no job, also
-          // for hidden-partition transforms. The partitions of every
-          // batch row cover the winners' partitions, and the batch row
-          // count bounds the deduped one.
+          // one projection of the local relation gives the partition
+          // values and the key of every batch row; it folds into the
+          // relation: no job, also for hidden-partition transforms. The
+          // partitions of every batch row cover the winners' partitions,
+          // and the batch row count bounds the deduped one.
+          val rows = withDerivedParts(l, s).select((parts :+ keyName).map(col): _*)
+            .collect()
           val touched: Set[Map[String, String]] =
             if (parts.isEmpty) Set(Map.empty)
-            else withDerivedParts(l, s).select(parts.map(col): _*).collect()
-              .distinct.map(partitionValuesOf(_, parts)).toSet
-          val keys = l.select(col(keyName)).collect().map(_.get(0))
+            else rows.map(partitionValuesOf(_, parts)).toSet
+          val keys = rows.map(_.get(parts.size))
           // a NULL batch key matches no target row (the anti-join's null
           // semantics), so the non-null keys are the whole key set
           (touched, keys.length.toLong, Some(keys.filter(_ != null).distinct.toSeq))

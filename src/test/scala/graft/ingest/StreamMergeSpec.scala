@@ -35,8 +35,9 @@ class StreamMergeSpec extends SparkSpec {
     val errors = s"$dir/errors"
     val (_, run) = countingJobs(
       StreamingIngest.mergeBatch(t.withSession(tuned), batch, 0L, errors))
-    // the batch's dedup, the probe, the upserts' write
-    assert(run.jobs === 3, s"$run")
+    // the probe and the upserts' write: the local batch is read off
+    // its plan, with no collect job
+    assert(run.jobs === 2, s"$run")
     assert(!new java.io.File(errors).exists(), "the batch went to the DLQ")
     assert(t.snapshot.deletionVectors.nonEmpty)
     val got = t.toDF.groupBy("v").count().orderBy("v").collect()

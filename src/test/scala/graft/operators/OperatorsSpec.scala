@@ -15,6 +15,25 @@ class OperatorsSpec extends SparkSpec {
     (4L, "")
   ).toDF("doc_id", "text")
 
+  /** The portable id hash the quantizers' hash-min samples order by. */
+  private def md5h(id: Long): Long = {
+    val hex = java.security.MessageDigest.getInstance("MD5")
+      .digest(id.toString.getBytes("UTF-8"))
+      .map(b => f"$b%02x").mkString.substring(0, 15)
+    java.lang.Long.parseLong(hex, 16)
+  }
+
+  private def cos(a: Array[Double], b: Array[Double]): Double = {
+    var d = 0.0; var na = 0.0; var nb = 0.0
+    var i = 0
+    while (i < a.length) { d += a(i)*b(i); na += a(i)*a(i); nb += b(i)*b(i); i += 1 }
+    d / math.sqrt(na * nb)
+  }
+
+  /** The argmax-cosine cell of `v`, ties to the lowest cell. */
+  private def cellOf(v: Array[Double], cents: Seq[Array[Double]]): Int =
+    -cents.zipWithIndex.map { case (c, i) => (cos(v, c), -i) }.max._2
+
   test("exact dedup groups identical documents") {
     val d = Dedup.exact(docs)
     assert(d.filter(col("n_dups") === 2).count() === 1)
@@ -222,6 +241,27 @@ class OperatorsSpec extends SparkSpec {
     assert(ivfRecall >= 0.9, s"ivf shipped-default recall@10 = $ivfRecall")
   }
 
+  test("calibration takes the first doubling probe count that meets the target, else nCells") {
+    // the counts the DataFrame calibration sweep chose on these corpora
+    // before calibration became a loop of searches
+    val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
+      .select("vec_id", "embedding").cache()
+    try {
+      def calibrated(model: Similarity.VectorIndexModel, target: Double): Int =
+        Similarity.calibrateIndexed(Similarity.encodeIvfPq(emb, model), emb, model,
+          k = 10, recallTarget = target)
+      // 32 cells try 6, 12 and 24 probes: 6 and 12 miss 0.9, 24 meets
+      // it, and ⌈24 × 1.25⌉ = 30
+      assert(calibrated(Similarity.trainIvfModel(emb, dim = 64, nCells = 32,
+        iters = 0), 0.9) === 30)
+      // 16 cells try 4 and 8: with a 40-deep ADC shortlist over 16
+      // codes neither meets 0.99, so the count falls back to
+      // min(16, 8 × 2) = 16
+      assert(calibrated(Similarity.trainIvfPqModel(emb, dim = 64, nCells = 16,
+        m = 8, kCodes = 16, iters = 0, rerankTo = 40), 0.99) === 16)
+    } finally emb.unpersist()
+  }
+
   test("calibrateProbes finds a probe count meeting the recall target") {
     // measurement-driven probe selection: a recall SLO instead of the
     // √nCells speed heuristic — the calibrated count must actually
@@ -377,17 +417,37 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("ivf assign: broadcast-join fallback path matches the inlined-centroid path") {
-    val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
-    val queries = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
-    def run(inlineMax: Int) =
-      Similarity.ivfTopK(emb, queries, k = 5, dim = 64,
-          nCells = 8, nprobe = 3, iters = 1, assignInlineMax = inlineMax)
-        .select("query_id", "vec_id", "rank")
-        .as[(Long, Long, Int)].collect().toSet
-    // inlineMax=0 forces the large-quantizer broadcast-join assignment;
-    // results must be identical (same centroids, same argmax tie-break)
-    assert(run(Similarity.AssignInlineMaxComponents) === run(0))
+    // 1500 distinct vectors: the corpus, its negation and its reversal
+    val base = spark.read.parquet(s"$sf0001/embeddings.parquet")
+      .select("vec_id", "embedding")
+    val emb = base
+      .unionByName(base.select((col("vec_id") + 100000L).as("vec_id"),
+        transform(col("embedding"), x => -x).as("embedding")))
+      .unionByName(base.select((col("vec_id") + 200000L).as("vec_id"),
+        reverse(col("embedding")).as("embedding")))
+      .cache()
+    try {
+      // 1100 cells × 64 dims is past the inline cap: the Lloyd round and
+      // the encoding both assign through the broadcast join
+      assert(1100L * 64 > Similarity.AssignInlineMaxComponents)
+      val model = Similarity.trainIvfModel(emb, dim = 64, nCells = 1100, iters = 1)
+      // the inlined kernel's spec, replayed on the driver: md5-ordered
+      // seeds, argmax cosine with ties to the lowest cell, member means
+      val rows = emb.collect().map(r => (r.getLong(0),
+        r.getSeq[Float](1).map(_.toDouble).toArray))
+      val seeds = rows.sortBy { case (id, _) => (md5h(id), id) }.take(1100).map(_._2).toSeq
+      val members = rows.groupBy { case (_, v) => cellOf(v, seeds) }
+      val lloyd = seeds.indices.map(c => members.get(c).fold(seeds(c)) { ms =>
+        Array.tabulate(64)(p => ms.map(_._2(p)).sum / ms.length)
+      })
+      assert(model.centroids.size === 1100 && members.size > 1)
+      model.centroids.zip(lloyd).foreach { case (got, want) =>
+        got.zip(want).foreach { case (g, w) => assert(math.abs(g - w) <= 1e-12, s"$g vs $w") }
+      }
+      val cents = model.centroids.map(_.toArray)
+      assert(Similarity.encodeIvfPq(emb, model).as[(Long, Int)].collect().toMap ===
+        rows.map { case (id, v) => id -> cellOf(v, cents) }.toMap)
+    } finally emb.unpersist()
   }
 
   test("as-of join picks the latest earlier right row per key") {
@@ -501,20 +561,8 @@ class OperatorsSpec extends SparkSpec {
     val rows = emb.select("vec_id", "embedding").collect()
       .map(r => (r.getLong(0),
         r.getSeq[Float](1).map(_.toDouble).toArray))
-    def md5h(id: Long): Long = {
-      val hex = java.security.MessageDigest.getInstance("MD5")
-        .digest(id.toString.getBytes("UTF-8"))
-        .map(b => f"$b%02x").mkString.substring(0, 15)
-      java.lang.Long.parseLong(hex, 16)
-    }
     val centroids = rows.sortBy { case (id, _) => (md5h(id), id) }
       .map(_._2)   // k=1100 > n=500 → the sample is the whole corpus
-    def cos(a: Array[Double], b: Array[Double]): Double = {
-      var d = 0.0; var na = 0.0; var nb = 0.0
-      var i = 0
-      while (i < a.length) { d += a(i)*b(i); na += a(i)*a(i); nb += b(i)*b(i); i += 1 }
-      d / math.sqrt(na * nb)
-    }
     val expected = rows.map { case (id, v) =>
       val best = centroids.zipWithIndex
         .map { case (c, i) => (cos(v, c), -i) }.max

@@ -137,6 +137,8 @@ class PlanSpec extends SparkSpec {
       assert(!e.output.exists(_.dataType.isInstanceOf[ArrayType]),
         s"embedding array shuffled: ${e.output.map(_.name)}")
     }
+    assert(df.queryExecution.executedPlan.exists(
+      _.isInstanceOf[graft.operators.VectorSearchExec]), planOf(df))
   }
 
   test("ivf-pq: shuffles carry codes and scores, never full vectors") {
@@ -188,6 +190,8 @@ class PlanSpec extends SparkSpec {
         }
       }
     }
+    assert(df.queryExecution.executedPlan.exists(
+      _.isInstanceOf[graft.operators.VectorSearchExec]), plan)
   }
 
   test("lsh: probes broadcast even without the auto-threshold") {

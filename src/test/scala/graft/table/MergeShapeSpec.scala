@@ -93,6 +93,17 @@ class MergeShapeSpec extends SparkSpec {
     assert(hp.snapshot.files.groupBy(_.partitionValues("ts_day")).values.forall(_.size == 1))
   }
 
+  test("a merge of a local batch runs one job: the rewrite") {
+    val n = 800L
+    val t = table("local", n)
+    val batch = rows(0L until 24L, 5L, _ * 10) ++ rows(n until n + 8L, 5L)
+    // the batch optimizes to a local relation: read off the plan, no
+    // collect job
+    val (_, run) = countingJobs(t.merge(frame(batch), "k", "ts"))
+    assert(run.jobs === 1, s"$run")
+    assert(tableRows(t) === model(n, batch))
+  }
+
   test("a merge past the size bound still shuffles and keeps one file per touched date") {
     val n = SmallScan.MaxRows + 1000
     val t = table("large", n)

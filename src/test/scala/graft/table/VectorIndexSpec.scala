@@ -371,6 +371,43 @@ class VectorIndexSpec extends SparkSpec {
     } finally emb.unpersist()
   }
 
+  test("ivfTopK and pqTopK equal the join-and-window oracle") {
+    val emb0 = spark.read.parquet(s"$sf0001/embeddings.parquet")
+      .select("vec_id", "embedding")
+    val zero = Seq.fill(64)(0.0f)
+    // tied scores (copies of five rows under new ids), a zero vector
+    // and a null vector
+    val emb = emb0.unionByName(emb0.filter(col("vec_id") < 5)
+        .withColumn("vec_id", col("vec_id") + 100000L))
+      .unionByName(spark.createDataFrame(java.util.Arrays.asList(
+        org.apache.spark.sql.Row(900001L, zero),
+        org.apache.spark.sql.Row(900002L, null)), emb0.schema))
+      .cache()
+    val q = emb.filter(col("vec_id") % 7 === 3).limit(5)
+      .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
+    val queries = spark.createDataFrame(java.util.Arrays.asList((q.collect() ++ Seq(
+      org.apache.spark.sql.Row(999998L, zero),
+      org.apache.spark.sql.Row(999999L, null))): _*), q.schema)
+    try {
+      val ivf = Similarity.trainIvfModel(emb, dim = 64, nCells = 16, iters = 1)
+      val gotIvf = resultOf(Similarity.ivfTopK(emb, queries, k = 10, dim = 64,
+        nCells = 16, nprobe = 3, iters = 1))
+      assert(gotIvf.nonEmpty && gotIvf === referenceSearch(Similarity.encodeIvfPq(emb, ivf),
+        emb, emb.limit(0), queries, ivf, 10, 3, 0))
+      // pqTopK's codebooks are an IVF-PQ model's at one cell
+      val pq = Similarity.trainIvfPqModel(emb, dim = 64, nCells = 1, m = 8,
+        kCodes = 16, iters = 0, rerankTo = 0)
+      val gotPq = resultOf(Similarity.pqTopK(emb, queries, k = 10, dim = 64,
+        m = 8, kCodes = 16))
+      assert(gotPq.nonEmpty && gotPq === referenceSearch(Similarity.encodeIvfPq(emb, pq),
+        emb, emb.limit(0), queries, pq, 10, 1, 0))
+      // the zero query ties every row at 0 and keeps the smallest ids
+      assert(gotPq.filter(_._1 == 999998L).map(_._2) ===
+        emb0.select("vec_id").as[Long].collect().sorted.take(10).toSet)
+      assert(!(gotIvf ++ gotPq).exists(_._1 == 999999L))
+    } finally emb.unpersist()
+  }
+
   test("vector_search TVF reads a table-backed query relation once: its query sides are local") {
     import org.apache.spark.sql.execution.LocalTableScanExec
     val cat = new TableCatalog(spark, new Path(freshDir("vecidx_tvf_local_wh")))
